@@ -1670,30 +1670,35 @@ def _q_dos_reflectance(spark, sf_dir):
     )
 
 
-def _q_geocode_docs(spark, sf_dir):
-    """X7 geocoder (incl. the ccTLD country-centroid tier) through the
-    driver contract: synthetic urls/texts derived from `documents` via
-    shared SQL expressions, then geocoded by the ENGINE's JVM kernel
-    (functions/udfs.py :: geocode_exprs — codegen'd regexp_extract +
-    map-literal gazetteer + priority CASE).  The oracle re-implements
-    the ordered rule table in straight-line DuckDB SQL over the same
-    frozen pattern/table constants, so the two regex engines + tier
-    logics are compared end-to-end (SURVEY §5.4 oracle-first protocol).
-    """
+def _geocoded_docs(spark, sf_dir):
+    """Synthetic urls/texts derived from `documents` via shared SQL
+    expressions, run through the engine's one geocode + cell kernel
+    (functions/udfs.py :: geocode_and_cells, the batch assign and
+    streaming kernel) → (doc_id, lat, lon, geocode_src, h3_7, s2_13)."""
     from gips_spark.functions import udfs
 
     docs = _read(spark, sf_dir, "documents")
-    d = docs.select(
+    return docs.select(
         "doc_id",
-        F.expr(_DOC_URL_EXPR).alias("url"),
-        F.expr(_DOC_TEXT_EXPR).alias("txt"),
-    )
-    lat, lon, src = udfs.geocode_exprs(F.col("url"), F.col("txt"))
-    return d.select(
+        udfs.geocode_and_cells(
+            F.expr(_DOC_URL_EXPR), F.expr(_DOC_TEXT_EXPR)
+        ).alias("g"),
+    ).select("doc_id", "g.*")
+
+
+def _q_geocode_docs(spark, sf_dir):
+    """X7 geocoder (incl. the ccTLD country-centroid tier) through the
+    driver contract (`_geocoded_docs`).  The oracle re-implements the
+    ordered rule table in straight-line DuckDB SQL over the same frozen
+    pattern/table constants, so the two regex engines (Python re, RE2)
+    + tier logics are compared end-to-end (SURVEY §5.4 oracle-first
+    protocol).
+    """
+    return _geocoded_docs(spark, sf_dir).select(
         "doc_id",
-        src.alias("geocode_src"),
-        F.round(lat, 4).alias("lat"),
-        F.round(lon, 4).alias("lon"),
+        "geocode_src",
+        F.round("lat", 4).alias("lat"),
+        F.round("lon", 4).alias("lon"),
     )
 
 
@@ -2076,27 +2081,18 @@ SELECT doc_id, n_tokens, bucket, pack_seq, offset_in_pack, oversize FROM walk
 
 def _q_geo_cells(spark, sf_dir):
     """The graft's two axes composed end-to-end: webtext geocoding (all
-    six tiers, JVM kernel) → S2 level-13 spatial index → per-cell
-    rollup (doc count + distinct geocode tiers).  Oracle stitches the
-    straight-line geocoder SQL into the full Hilbert-curve S2 SQL
-    (functions/s2_sql.py) — every stage independently recomputed."""
-    from gips_spark.functions import udfs
-
-    docs = _read(spark, sf_dir, "documents")
-    d = docs.select(
-        "doc_id",
-        F.expr(_DOC_URL_EXPR).alias("url"),
-        F.expr(_DOC_TEXT_EXPR).alias("txt"),
-    )
-    lat, lon, src = udfs.geocode_exprs(F.col("url"), F.col("txt"))
-    g = d.select(
-        "doc_id",
-        src.alias("geocode_src"),
-        F.round(lat, 4).alias("lat"),
-        F.round(lon, 4).alias("lon"),
-    ).where("geocode_src <> 'none'")
+    six tiers) → S2 level-13 spatial index → per-cell rollup (doc count
+    + distinct geocode tiers), the first two in one kernel
+    (`_geocoded_docs`).  The oracle indexes the 4-decimal-rounded
+    coordinates; every coordinate here already has at most 4 decimals
+    (gazetteer/ccTLD tables, the `\d{4}` text pattern, the synthetic
+    urls), so the kernel's unrounded s2_13 is the same cell.  Oracle
+    stitches the straight-line geocoder SQL into the full Hilbert-curve
+    S2 SQL (functions/s2_sql.py) — every stage independently
+    recomputed."""
     return (
-        g.select(udfs.s2_cell(F.col("lat"), F.col("lon")).alias("s2_13"), "geocode_src")
+        _geocoded_docs(spark, sf_dir)
+        .where("geocode_src <> 'none'")
         .groupBy("s2_13")
         .agg(
             F.count(F.lit(1)).alias("n_docs"),

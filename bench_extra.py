@@ -19,12 +19,9 @@ import os
 import sys
 import time
 
-from pyspark.sql import functions as F
-
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from gips_spark import get_spark  # noqa: E402
-from gips_spark.functions import udfs  # noqa: E402
 from gips_spark.operators import cell_directory, knn, pip_join, tile_assign, zonal  # noqa: E402
 from gips_spark.sources import fixtures  # noqa: E402
 
@@ -52,26 +49,14 @@ def main():
         fixtures.gen_pages(spark, n_rows).write.mode("overwrite").parquet(cache_dir)
     pages = spark.read.parquet(cache_dir)
 
-    glat, glon, gsrc = udfs.geocode_exprs(F.col("url"), F.col("text"))
-
     def scan_all():
         _noop(pages)
 
     def scan_no_html():
         _noop(pages.select("url", "warc_ts", "text", "lang"))
 
-    def strip_jvm():
-        _noop(pages.select(udfs.strip_html_expr(F.col("html")).alias("s")))
-
-    def geocode_jvm():
-        _noop(
-            pages.select(
-                glat.alias("lat"), glon.alias("lon"), gsrc.alias("geocode_src")
-            )
-        )
-
     def cells_chain():
-        # assignment-only chain: geocode (JVM) + cells_only UDF; no html strip
+        # assignment-only chain: geocode_and_cells UDF; no html strip
         _noop(
             tile_assign.enrich_pages(
                 pages, persist=False, do_repartition=False, salt_sample=0.02,
@@ -124,8 +109,6 @@ def main():
     stages = {
         "scan_all": scan_all,
         "scan_no_html": scan_no_html,
-        "strip_jvm": strip_jvm,
-        "geocode_jvm": geocode_jvm,
         "cells_chain": cells_chain,
         "exact_mode_unpersisted": exact_mode_unpersisted,
         "full_chain_norepart": full_chain_norepart,

@@ -122,17 +122,18 @@ _CC_LON = {cc: lon for cc, lat, lon in CCTLD_CENTROIDS}
 
 # slug alternation, longest-first so 'ho-chi-minh-city' beats 'chi'
 _SLUGS_BY_LEN = sorted((c[0] for c in GAZETTEER), key=len, reverse=True)
-#: shared pattern SOURCES (Python re and Java regex agree on these) so the
-#: JVM geocoder (functions/udfs.py :: geocode_exprs) is provably the same
-#: rule table — equality is pinned by the frozen `geocoded` golden hash.
+#: shared pattern SOURCES: the DuckDB oracle SQL (__spark_entry__.py ::
+#: _geocode_docs_oracle) runs these same strings under RE2, so Python re
+#: and RE2 must agree on them (tests/test_textx.py pins the separators of
+#: TEXT_COORD_PATTERN; \s also matches \v and U+00A0 in re, not in RE2).
 URL_CITY_PATTERN = r"/(" + "|".join(_SLUGS_BY_LEN) + r")(?:/|$|\?)"
 TEXT_CITY_PATTERN = (
     r"\b(" + "|".join(s.replace("-", " ") for s in _SLUGS_BY_LEN) + r")\b"
 )
 QS_LATLON_PATTERN = r"[?&]lat=(-?\d+\.\d+)&lon=(-?\d+\.\d+)"
 TEXT_COORD_PATTERN = r"(-?\d{1,2}\.\d{4}),\s(-?\d{1,3}\.\d{4})"
-#: last hostname label when it is a 2-letter tld (Java regex and Python
-#: re agree on this source — same contract as the patterns above)
+#: last hostname label when it is a 2-letter tld (RE2 and Python re
+#: agree on this source — same contract as the patterns above)
 CCTLD_PATTERN = r"^https?://[^/?#]+\.([a-z]{2})(?:[/?#]|$)"
 _URL_CITY_RE = re.compile(URL_CITY_PATTERN)
 _TEXT_CITY_RE = re.compile(TEXT_CITY_PATTERN, re.IGNORECASE)
@@ -164,43 +165,25 @@ _ENTITIES = {
 _NUM_ENTITY_RE = re.compile(r"&#(\d+);")
 
 
-def strip_markup(s: pd.Series) -> pd.Series:
-    """Stage 1 of the frozen extractor: comments → script/style → tags.
-
-    This stage also runs JVM-side as a codegen'd regexp_replace chain
-    (functions/udfs.py :: strip_html_expr) so the Arrow channel ships
-    stripped text, not raw html — the two implementations are tested
-    byte-equal (tests/test_pipeline.py).
-    """
-    s = s.str.replace(_COMMENT_RE, " ", regex=True)
-    s = s.str.replace(_SCRIPT_STYLE_RE, " ", regex=True)
-    s = s.str.replace(_TAG_RE, " ", regex=True)
-    return s
-
-
-def finish_extract(stripped: pd.Series) -> pd.Series:
-    """Stage 2 of the frozen extractor: entities → whitespace → strip."""
-    s = stripped.astype("string").fillna("")
-    for ent, ch in _ENTITIES.items():
-        s = s.str.replace(ent, ch, regex=False)
-    s = s.str.replace(_NUM_ENTITY_RE, lambda m: chr(int(m.group(1))), regex=True)
-    s = s.str.replace(_WS_RE, " ", regex=True).str.strip()
-    return s.astype(object).fillna("")
-
-
 def extract_text(html: pd.Series) -> pd.Series:
     """FROZEN deterministic html→text (byte-identical per url invariant).
 
     Accepts a Series of bytes or str; returns str.  Pipeline order is
     part of the contract: comments → script/style → tags → entities →
-    whitespace-normalize → strip.  Composition of strip_markup (stage 1,
-    also available JVM-side) and finish_extract (stage 2).
+    whitespace-normalize → strip.
     """
     s = html
     if len(s) and isinstance(s.iloc[0], (bytes, bytearray)):
         s = s.map(lambda b: b.decode("utf-8", errors="replace"))
     s = s.astype("string").fillna("")
-    return finish_extract(strip_markup(s))
+    s = s.str.replace(_COMMENT_RE, " ", regex=True)
+    s = s.str.replace(_SCRIPT_STYLE_RE, " ", regex=True)
+    s = s.str.replace(_TAG_RE, " ", regex=True)
+    for ent, ch in _ENTITIES.items():
+        s = s.str.replace(ent, ch, regex=False)
+    s = s.str.replace(_NUM_ENTITY_RE, lambda m: chr(int(m.group(1))), regex=True)
+    s = s.str.replace(_WS_RE, " ", regex=True).str.strip()
+    return s.astype(object).fillna("")
 
 
 # --------------------------------------------------------------- geocoder
@@ -219,7 +202,7 @@ def geocode(url: pd.Series, text: pd.Series) -> pd.DataFrame:
     A row that matches a higher rule never pays the lower rules'
     regexes (the 48-slug city alternation was 62% of the kernel), and
     the two coordinate rules get a C-substring prefilter on a literal
-    their regex requires ("lat=" / ", ").  A match with out-of-range
+    their regex requires ("lat=" / ",").  A match with out-of-range
     coordinates stays UNRESOLVED and falls through to lower rules —
     exactly the old overwrite semantics.
     """
@@ -252,8 +235,9 @@ def geocode(url: pd.Series, text: pd.Series) -> pd.DataFrame:
     # rule 1 (highest): lat/lon query-string params — the regex needs
     # the literal "lat=".
     _coords_rule(url, "lat=", _QS_LATLON_RE, "latlon_qs")
-    # rule 2: coordinate phrase in text — the regex needs ", ".
-    _coords_rule(text, ", ", _TEXT_COORD_RE, "coord_text")
+    # rule 2: coordinate phrase in text — the regex needs "," (then any
+    # \s, not only a space: a tab-separated phrase must still match).
+    _coords_rule(text, ",", _TEXT_COORD_RE, "coord_text")
 
     # rule 3: url path city slug
     idx = np.flatnonzero(todo)

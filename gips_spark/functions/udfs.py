@@ -3,8 +3,11 @@
 Design rule (SURVEY.md §3): the JVM↔Python Arrow channel is a per-batch
 cost, so the hot path uses ONE fused UDF (`enrich_struct`) computing
 extract_text + geocode + h3_7 + s2_13 per batch, instead of four UDFs
-= four Arrow round-trips.  Everything is Series→Series/Struct; no
-per-row Python anywhere (input_hint requirement).
+= four Arrow round-trips.  `geocode_and_cells` is the same kernel
+without the text.  There is one geocoder (textx.geocode) and one cell
+step (`_cell`); the DuckDB SQL in __spark_entry__.py is their oracle.
+Everything is Series→Series/Struct; no per-row Python anywhere
+(input_hint requirement).
 """
 
 from __future__ import annotations
@@ -15,7 +18,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.functions import pandas_udf
 
-from gips_spark.functions import cellindex, geom, h3lite, s2, textx
+from gips_spark.functions import cellindex, geom, s2, textx
 
 H3_RES = 7
 S2_LEVEL = 13
@@ -29,6 +32,35 @@ def _masked_int64(values: np.ndarray, ok: np.ndarray) -> pd.Series:
     out[~np.asarray(ok)] = pd.NA
     return pd.Series(out)
 
+
+def _cell(lat, lon, to_cell, level: int) -> pd.Series:
+    """The one cell step: (lat, lon) → nullable Int64 cell ids at `level`,
+    null where either coordinate is NaN (an ungeocoded row)."""
+    la = np.asarray(lat, dtype=np.float64)
+    lo = np.asarray(lon, dtype=np.float64)
+    ok = ~(np.isnan(la) | np.isnan(lo))
+    out = np.zeros(len(la), dtype=np.int64)
+    if ok.any():
+        out[ok] = to_cell(la[ok], lo[ok], level)
+    return _masked_int64(out, ok)
+
+
+def _geocode_cells(url: pd.Series, text: pd.Series) -> pd.DataFrame:
+    """textx.geocode → (lat, lon, geocode_src, h3_7, s2_13)."""
+    geo = textx.geocode(url, text)
+    lat = geo["lat"].to_numpy()
+    lon = geo["lon"].to_numpy()
+    return pd.DataFrame(
+        {
+            "lat": lat,
+            "lon": lon,
+            "geocode_src": geo["geocode_src"].to_numpy(dtype=object),
+            "h3_7": _cell(lat, lon, cellindex.latlng_to_cell, H3_RES),
+            "s2_13": _cell(lat, lon, s2.latlng_to_cell, S2_LEVEL),
+        }
+    )
+
+
 ENRICH_SCHEMA = T.StructType(
     [
         T.StructField("extracted_text", T.StringType()),
@@ -40,278 +72,49 @@ ENRICH_SCHEMA = T.StructType(
     ]
 )
 
+GEOCODE_CELLS_SCHEMA = T.StructType(ENRICH_SCHEMA.fields[1:])
 
-def strip_html_expr(html_col):
-    """JVM-side stage 1 of the frozen extractor (comments → script/style →
-    tags) as a codegen'd regexp_replace chain over the decoded html.
-
-    Channel economics (measured on this sandbox kernel): the JVM↔Python
-    Arrow socket costs ~15s/GB-ish of transfer; stripping markup JVM-side
-    cuts the shipped bytes ~3-4× before the fused Python kernel runs.
-    Byte-equal to textx.strip_markup (tested).
-    """
-    s = F.decode(html_col, "utf-8")
-    s = F.regexp_replace(s, r"(?s)<!--.*?-->", " ")
-    s = F.regexp_replace(s, r"(?is)<(script|style)\b[^>]*>.*?</\1\s*>", " ")
-    s = F.regexp_replace(s, r"<[^>]+>", " ")
-    return s
-
-
-def geocode_exprs(url_col, text_col):
-    """JVM-side geocoder — the exact rule table of textx.geocode as
-    codegen'd Column expressions (regexp_extract + map-literal gazetteer
-    + priority CASE).  Equality with the Python kernel is pinned by the
-    frozen `geocoded` golden hash (tests/golden/hashes.json).
-
-    Returns (lat, lon, geocode_src) Columns.
-    """
-    city_lat = F.create_map(
-        *[F.lit(x) for c in textx.GAZETTEER for x in (c[0], float(c[1]))]
-    )
-    city_lon = F.create_map(
-        *[F.lit(x) for c in textx.GAZETTEER for x in (c[0], float(c[2]))]
-    )
-    qs_lat = F.regexp_extract(url_col, textx.QS_LATLON_PATTERN, 1)
-    qs_lon = F.regexp_extract(url_col, textx.QS_LATLON_PATTERN, 2)
-    qs_ok = (
-        (qs_lat != "")
-        & (F.abs(qs_lat.cast("double")) <= 90.0)
-        & (F.abs(qs_lon.cast("double")) <= 180.0)
-    )
-    ct_lat = F.regexp_extract(text_col, textx.TEXT_COORD_PATTERN, 1)
-    ct_lon = F.regexp_extract(text_col, textx.TEXT_COORD_PATTERN, 2)
-    ct_ok = (
-        (ct_lat != "")
-        & (F.abs(ct_lat.cast("double")) <= 90.0)
-        & (F.abs(ct_lon.cast("double")) <= 180.0)
-    )
-    cu = F.regexp_extract(url_col, textx.URL_CITY_PATTERN, 1)
-    tc = F.regexp_replace(
-        F.lower(
-            F.regexp_extract(text_col, "(?i)" + textx.TEXT_CITY_PATTERN, 1)
-        ),
-        " ",
-        "-",
-    )
-    # lowest-priority tier (round 4): ccTLD → country centroid.  The
-    # extracted label can be any 2 letters, so the hit condition is a
-    # successful MAP lookup (unlike the city tiers, whose patterns are
-    # built from the gazetteer and can never miss).
-    cc_lat = F.create_map(
-        *[F.lit(x) for c in textx.CCTLD_CENTROIDS for x in (c[0], float(c[1]))]
-    )
-    cc_lon = F.create_map(
-        *[F.lit(x) for c in textx.CCTLD_CENTROIDS for x in (c[0], float(c[2]))]
-    )
-    cc = F.regexp_extract(url_col, textx.CCTLD_PATTERN, 1)
-    cc_ok = (cc != "") & cc_lat[cc].isNotNull()
-    lat = (
-        F.when(qs_ok, qs_lat.cast("double"))
-        .when(ct_ok, ct_lat.cast("double"))
-        .when(cu != "", city_lat[cu])
-        .when(tc != "", city_lat[tc])
-        .when(cc_ok, cc_lat[cc])
-    )
-    lon = (
-        F.when(qs_ok, qs_lon.cast("double"))
-        .when(ct_ok, ct_lon.cast("double"))
-        .when(cu != "", city_lon[cu])
-        .when(tc != "", city_lon[tc])
-        .when(cc_ok, cc_lon[cc])
-    )
-    src = (
-        F.when(qs_ok, F.lit("latlon_qs"))
-        .when(ct_ok, F.lit("coord_text"))
-        .when(cu != "", F.lit("city_url"))
-        .when(tc != "", F.lit("city_text"))
-        .when(cc_ok, F.lit("cctld"))
-        .otherwise(F.lit("none"))
-    )
-    return lat, lon, src
-
-
-CELLS_SCHEMA = T.StructType(
-    [
-        T.StructField("extracted_text", T.StringType()),
-        T.StructField("h3_7", T.LongType()),
-        T.StructField("s2_13", T.LongType()),
-    ]
-)
-
-
-@pandas_udf(CELLS_SCHEMA)
-def extract_and_cells(
-    stripped: pd.Series, lat: pd.Series, lon: pd.Series
-) -> pd.DataFrame:
-    """Minimal-channel fused kernel: finish extraction (entities + ws) and
-    index (lat, lon) → H3/S2 — geocoding already happened JVM-side."""
-    extracted = textx.finish_extract(stripped)
-    la = lat.to_numpy(dtype=np.float64)
-    lo = lon.to_numpy(dtype=np.float64)
-    ok = ~(np.isnan(la) | np.isnan(lo))
-    h3 = np.zeros(len(la), dtype=np.int64)
-    s2c = np.zeros(len(la), dtype=np.int64)
-    if ok.any():
-        h3[ok] = cellindex.latlng_to_cell(la[ok], lo[ok], H3_RES)
-        s2c[ok] = s2.latlng_to_cell(la[ok], lo[ok], S2_LEVEL)
-    return pd.DataFrame(
-        {
-            "extracted_text": extracted.to_numpy(dtype=object),
-            "h3_7": _masked_int64(h3, ok),
-            "s2_13": _masked_int64(s2c, ok),
-        }
-    )
-
-
-CELLS_ONLY_SCHEMA = T.StructType(
-    [
-        T.StructField("h3_7", T.LongType()),
-        T.StructField("s2_13", T.LongType()),
-    ]
-)
-
-GEOCODE_CELLS_SCHEMA = T.StructType(
-    [
-        T.StructField("lat", T.DoubleType()),
-        T.StructField("lon", T.DoubleType()),
-        T.StructField("geocode_src", T.StringType()),
-        T.StructField("h3_7", T.LongType()),
-        T.StructField("s2_13", T.LongType()),
-    ]
-)
-
-
-@pandas_udf(GEOCODE_CELLS_SCHEMA)
-def geocode_and_cells(url: pd.Series, text: pd.Series) -> pd.DataFrame:
-    """Assignment-only fused kernel WITH the geocoder inside: (url, text)
-    → (lat, lon, geocode_src, h3_7, s2_13) in one Arrow pass.
-
-    r6 measurement (guide §1/§4): the JVM geocoder expressions evaluate
-    the regex cascade once PER OUTPUT COLUMN (lat, lon, src are three
-    independent CaseWhen trees — no cross-column subexpression
-    elimination), costing ~117 µs/row; the vectorized pandas geocoder
-    runs the same rule table once per row at ~25 µs/row single-core.
-    Same rule table, same outputs (pinned by the frozen `geocoded`
-    golden hash and the cross-path equality tests)."""
-    geo = textx.geocode(url, text)
-    lat = geo["lat"].to_numpy()
-    lon = geo["lon"].to_numpy()
-    ok = ~np.isnan(lat)
-    h3 = np.zeros(len(lat), dtype=np.int64)
-    s2c = np.zeros(len(lat), dtype=np.int64)
-    if ok.any():
-        h3[ok] = cellindex.latlng_to_cell(lat[ok], lon[ok], H3_RES)
-        s2c[ok] = s2.latlng_to_cell(lat[ok], lon[ok], S2_LEVEL)
-    return pd.DataFrame(
-        {
-            "lat": lat,
-            "lon": lon,
-            "geocode_src": geo["geocode_src"].to_numpy(dtype=object),
-            "h3_7": _masked_int64(h3, ok),
-            "s2_13": _masked_int64(s2c, ok),
-        }
-    )
-
-
-@pandas_udf(CELLS_ONLY_SCHEMA)
-def cells_only(lat: pd.Series, lon: pd.Series) -> pd.DataFrame:
-    """Assignment-only fused kernel: (lat, lon) → (h3_7, s2_13).
-
-    16 bytes/row each way across the Arrow channel vs ~1 KB/row for the
-    text-materializing kernel — the channel is syscall-bound on this
-    host, so the assignments stage (whose output never includes text)
-    uses this variant (enrich_pages(with_text=False))."""
-    la = lat.to_numpy(dtype=np.float64)
-    lo = lon.to_numpy(dtype=np.float64)
-    ok = ~(np.isnan(la) | np.isnan(lo))
-    h3 = np.zeros(len(la), dtype=np.int64)
-    s2c = np.zeros(len(la), dtype=np.int64)
-    if ok.any():
-        h3[ok] = cellindex.latlng_to_cell(la[ok], lo[ok], H3_RES)
-        s2c[ok] = s2.latlng_to_cell(la[ok], lo[ok], S2_LEVEL)
-    return pd.DataFrame(
-        {"h3_7": _masked_int64(h3, ok), "s2_13": _masked_int64(s2c, ok)}
-    )
-
-
-@pandas_udf(ENRICH_SCHEMA)
-def enrich_from_stripped(
-    stripped: pd.Series, url: pd.Series, text: pd.Series
-) -> pd.DataFrame:
-    """Fused hot-path kernel over PRE-STRIPPED html (stage 2 of the
-    extractor + geocode + H3 res-7 + S2 level-13, one Arrow pass)."""
-    extracted = textx.finish_extract(stripped)
-    geo = textx.geocode(url, text)
-    lat = geo["lat"].to_numpy()
-    lon = geo["lon"].to_numpy()
-    ok = ~np.isnan(lat)
-    h3 = np.zeros(len(lat), dtype=np.int64)
-    s2c = np.zeros(len(lat), dtype=np.int64)
-    if ok.any():
-        h3[ok] = cellindex.latlng_to_cell(lat[ok], lon[ok], H3_RES)
-        s2c[ok] = s2.latlng_to_cell(lat[ok], lon[ok], S2_LEVEL)
-    return pd.DataFrame(
-        {
-            "extracted_text": extracted.to_numpy(dtype=object),
-            "lat": lat,
-            "lon": lon,
-            "geocode_src": geo["geocode_src"].to_numpy(dtype=object),
-            # nullable Int64 (NOT .where(..., NA): that upcasts the whole
-            # batch to float64 and corrupts int64 cell ids near 2^59)
-            "h3_7": _masked_int64(h3, ok),
-            "s2_13": _masked_int64(s2c, ok),
-        }
-    )
+CELLS_ONLY_SCHEMA = T.StructType(ENRICH_SCHEMA.fields[4:])
 
 
 @pandas_udf(ENRICH_SCHEMA)
 def enrich_struct(html: pd.Series, url: pd.Series, text: pd.Series) -> pd.DataFrame:
-    """All-Python fused kernel (reference path; the pipeline uses
-    strip_html_expr + enrich_from_stripped — same bytes, tested equal)."""
-    extracted = textx.extract_text(html)
-    geo = textx.geocode(url, text)
-    lat = geo["lat"].to_numpy()
-    lon = geo["lon"].to_numpy()
-    ok = ~np.isnan(lat)
-    h3 = np.zeros(len(lat), dtype=np.int64)
-    s2c = np.zeros(len(lat), dtype=np.int64)
-    if ok.any():
-        h3[ok] = cellindex.latlng_to_cell(lat[ok], lon[ok], H3_RES)
-        s2c[ok] = s2.latlng_to_cell(lat[ok], lon[ok], S2_LEVEL)
+    """The fused assign kernel: extract_text + geocode + H3 res-7 + S2
+    level-13 in one Arrow pass (tile_assign.enrich_pages)."""
+    out = _geocode_cells(url, text)
+    out.insert(0, "extracted_text", textx.extract_text(html).to_numpy(dtype=object))
+    return out
+
+
+@pandas_udf(GEOCODE_CELLS_SCHEMA)
+def geocode_and_cells(url: pd.Series, text: pd.Series) -> pd.DataFrame:
+    """enrich_struct without the text: (url, text) → (lat, lon,
+    geocode_src, h3_7, s2_13) in one Arrow pass.  The engine's only
+    geocoder: batch assign, streaming ingest and the entry queries all
+    run it, so a page gets the same cell on every path."""
+    return _geocode_cells(url, text)
+
+
+@pandas_udf(CELLS_ONLY_SCHEMA)
+def cells_only(lat: pd.Series, lon: pd.Series) -> pd.DataFrame:
+    """(lat, lon) → (h3_7, s2_13): 16 bytes/row each way across the
+    Arrow channel, for callers that already hold coordinates."""
     return pd.DataFrame(
         {
-            "extracted_text": extracted.to_numpy(dtype=object),
-            "lat": lat,
-            "lon": lon,
-            "geocode_src": geo["geocode_src"].to_numpy(dtype=object),
-            # nullable Int64 (NOT .where(..., NA): that upcasts the whole
-            # batch to float64 and corrupts int64 cell ids near 2^59)
-            "h3_7": _masked_int64(h3, ok),
-            "s2_13": _masked_int64(s2c, ok),
+            "h3_7": _cell(lat, lon, cellindex.latlng_to_cell, H3_RES),
+            "s2_13": _cell(lat, lon, s2.latlng_to_cell, S2_LEVEL),
         }
     )
 
 
 @pandas_udf(T.LongType())
 def h3_cell(lat: pd.Series, lon: pd.Series) -> pd.Series:
-    la = lat.to_numpy(dtype=np.float64)
-    lo = lon.to_numpy(dtype=np.float64)
-    ok = ~(np.isnan(la) | np.isnan(lo))
-    out = np.zeros(len(la), dtype=np.int64)
-    if ok.any():
-        out[ok] = cellindex.latlng_to_cell(la[ok], lo[ok], H3_RES)
-    return _masked_int64(out, ok)
+    return _cell(lat, lon, cellindex.latlng_to_cell, H3_RES)
 
 
 @pandas_udf(T.LongType())
 def s2_cell(lat: pd.Series, lon: pd.Series) -> pd.Series:
-    la = lat.to_numpy(dtype=np.float64)
-    lo = lon.to_numpy(dtype=np.float64)
-    ok = ~(np.isnan(la) | np.isnan(lo))
-    out = np.zeros(len(la), dtype=np.int64)
-    if ok.any():
-        out[ok] = s2.latlng_to_cell(la[ok], lo[ok], S2_LEVEL)
-    return _masked_int64(out, ok)
+    return _cell(lat, lon, s2.latlng_to_cell, S2_LEVEL)
 
 
 @pandas_udf(T.DoubleType())
@@ -326,11 +129,6 @@ def haversine_m(
             lon2.to_numpy(dtype=np.float64),
         )
     )
-
-
-@pandas_udf(T.StringType())
-def extract_text_udf(html: pd.Series) -> pd.Series:
-    return textx.extract_text(html)
 
 
 @pandas_udf(T.StringType())

@@ -10,7 +10,7 @@ Plan shape (scale notes):
   read pages (column pruning matters — `html` is only selected here)
   → ONE fused Arrow UDF (extract+geocode+h3+s2; one Python hop)
   → broadcast-join the salt plan (tiny) → salt column
-  → repartitionByRange(cell_prefix, salt)  ← the single explicit
+  → repartition(cell_prefix, salt)  ← the single explicit
     shuffle, whose layout downstream stages reuse (SURVEY.md §3)
 """
 
@@ -33,7 +33,6 @@ def enrich_pages(
     do_repartition: bool = True,
     persist: bool | None = None,
     salt_sample: float | None = None,
-    range_partition: bool = False,
     with_text: bool = True,
 ) -> DataFrame:
     """pages(url, warc_ts, html, text, lang) → pages_enriched.
@@ -42,15 +41,15 @@ def enrich_pages(
 
     * exact (``salt_sample=None``, default): full salt histogram; the
       UDF output is persisted (MEMORY_AND_DISK) so the Python stage
-      doesn't run 3× (histogram, partition sampler, final).
-    * single-pass (``salt_sample=0.02``): the salt plan comes from a
-      2% sample (plans/salt.py :: salt_plan_sampled) and partitioning is
-      hash on (cell_prefix, salt) — no block-manager persist, no range
-      sampler, exactly ONE full UDF pass.  This is the 10^12-row shape:
+      doesn't run twice (histogram, final).
+    * single-pass (``salt_sample=0.02``): the salt plan comes from the
+      assignment-only kernel over a 2% sample of the raw pages
+      (plans/salt.py :: salt_plan_presampled) — no block-manager
+      persist, exactly ONE full UDF pass.  This is the 10^12-row shape:
       between stages the lineage protocol checkpoints to parquet anyway,
       and file-level range layout happens at the bucketed write.
-      ``range_partition=True`` restores repartitionByRange for sinks
-      that want global cell order (costs a sampling pass).
+
+    Both modes hash-partition on (cell_prefix, salt).
     """
     def chain(df: DataFrame, text: bool = with_text) -> DataFrame:
         # r6 (guide §1/§4, measured in bench_extra + OPTIMIZATION_r06.md):
@@ -62,9 +61,8 @@ def enrich_pages(
         # and the JVM strip chain cost 29 core-s/1M rows vs ~5 for the
         # Python re equivalent — java.util.regex loses to CPython's sre
         # on every pattern here.  Shipping raw html (+185 B/row on the
-        # Arrow channel) costs less than either.  Outputs identical —
-        # enrich_struct is the reference kernel the JVM split was
-        # originally pinned byte-equal against (goldens + oracle gate).
+        # Arrow channel) costs less than either.  Outputs pinned by the
+        # goldens + oracle gate.
         if text:
             out = (
                 df.withColumn(
@@ -120,10 +118,7 @@ def enrich_pages(
         plan = None
     e = saltplan.with_salt(e, "h3_7", "url", plan=plan, target_rows=salt_target_rows)
     if do_repartition:
-        if range_partition:
-            e = e.repartitionByRange("cell_prefix", "salt")
-        else:
-            e = e.repartition("cell_prefix", "salt")
+        e = e.repartition("cell_prefix", "salt")
     return e
 
 

@@ -45,37 +45,12 @@ def salt_plan_presampled(
     (verified in-plan), so sampling the UDF *output* costs a full UDF
     pass — the caller must sample the RAW input and run the enrichment
     chain on the 2% subset (tile_assign.enrich_pages does this).  Counts
-    are scaled by 1/fraction exactly like salt_plan_sampled."""
+    are scaled by 1/fraction.  Salting degree needs only the right ORDER
+    of magnitude (underestimates merely leave a group ~2× larger), so a
+    2% sample is plenty for mega-cells; cells below ~50/fraction rows
+    can't be estimated and can't be hot either."""
     est = (
         sampled_df.groupBy(cell_col)
-        .count()
-        .select(
-            F.col(cell_col),
-            (F.col("count") / F.lit(fraction)).alias("est_rows"),
-        )
-        .where(F.col("est_rows") > target_rows)
-    )
-    return est.select(
-        cell_col,
-        F.ceil(F.col("est_rows") / F.lit(target_rows)).cast("int").alias("n_salt"),
-    )
-
-
-def salt_plan_sampled(
-    df: DataFrame,
-    cell_col: str,
-    target_rows: int = DEFAULT_TARGET_ROWS,
-    fraction: float = 0.02,
-    seed: int = 42,
-) -> DataFrame:
-    """Sample-estimated salt plan: one cheap pass over `fraction` of rows
-    instead of a full histogram.  Salting degree needs only the right
-    ORDER of magnitude (underestimates merely leave a group ~2× larger),
-    so a 2% sample is plenty for mega-cells; cells below ~50/fraction
-    rows can't be estimated and can't be hot either."""
-    est = (
-        df.sample(fraction=fraction, seed=seed)
-        .groupBy(cell_col)
         .count()
         .select(
             F.col(cell_col),

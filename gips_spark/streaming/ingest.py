@@ -35,23 +35,15 @@ def streaming_cell_counts(
     watermark: str = "7 days",
     window: str = "1 day",
 ) -> DataFrame:
-    """watermark → dropDuplicates(url) → enrich → tumbling per-cell counts."""
+    """watermark → dropDuplicates(url) → geocode + cells → tumbling
+    per-cell counts.  The kernel is batch assign's (udfs.geocode_and_cells),
+    so a page gets the same cell streamed or batched."""
     deduped = pages_stream.withWatermark("warc_ts", watermark).dropDuplicates(
         ["url"]
     )
-    glat, glon, gsrc = udfs.geocode_exprs(F.col("url"), F.col("text"))
-    enriched = (
-        deduped.withColumn("lat", glat)
-        .withColumn("lon", glon)
-        .withColumn("geocode_src", gsrc)
-        .withColumn(
-            "e",
-            udfs.extract_and_cells(
-                udfs.strip_html_expr(F.col("html")), F.col("lat"), F.col("lon")
-            ),
-        )
-        .select("url", "warc_ts", F.col("e.h3_7").alias("h3_7"), "geocode_src")
-    )
+    enriched = deduped.withColumn(
+        "e", udfs.geocode_and_cells(F.col("url"), F.col("text"))
+    ).select("warc_ts", "e.h3_7", "e.geocode_src")
     return (
         enriched.where(F.col("geocode_src") != "none")
         .groupBy(F.window("warc_ts", window).alias("w"), F.col("h3_7"))

@@ -63,7 +63,7 @@ def run_audit(spark, pages, salt_target_rows: int = 5000):
 
     enr = tile_assign.enrich_pages(pages, salt_target_rows=salt_target_rows)
     p = formatted(enr)
-    sections["assign (enrich → salt → repartitionByRange)"] = p
+    sections["assign (enrich → salt → repartition)"] = p
     # the fused kernel is ONE Arrow UDF; cached-plan reprints duplicate the
     # node textually, so assert the udf name + absence of row-wise Python
     # r6: the fused kernel is enrich_struct (strip + geocode + extract
@@ -168,26 +168,23 @@ def run_audit(spark, pages, salt_target_rows: int = 5000):
          "MapInPandas" in fpp and "HashAggregate" in fpp)
     )
 
-    # r5: geocode_docs shape — the six-tier geocoder (incl. ccTLD) must
-    # be pure JVM codegen: regexp_extract + map-literal gazetteer + CASE,
-    # no Python stage of any kind, over a scan pruned to the url column
+    # geocode shape — the one geocoder is the fused Arrow kernel
+    # (udfs.geocode_and_cells, shared by assign, streaming and the entry
+    # queries): exactly one Arrow eval node over a scan that never reads
+    # html
     from gips_spark.functions import udfs as _udfs
 
-    glat, glon, gsrc = _udfs.geocode_exprs(F.col("url"), F.substring("url", 1, 40))
     gp = formatted(
-        pages.select("url").select(
-            gsrc.alias("geocode_src"), glat.alias("lat"), glon.alias("lon")
-        )
+        pages.select(
+            "url", _udfs.geocode_and_cells(F.col("url"), F.col("text")).alias("g")
+        ).select("url", "g.*")
     )
-    sections["geocode (JVM six-tier kernel incl. ccTLD)"] = gp
+    sections["geocode (fused Arrow geocode + cells kernel)"] = gp
     checks.append(
-        ("geocode: zero Python in plan",
-         "EvalPython" not in gp and "MapInPandas" not in gp)
+        ("geocode: one Arrow eval node, no row-wise Python",
+         gp.count("ArrowEvalPython (") == 1 and "BatchEvalPython" not in gp)
     )
-    checks.append(("geocode: whole-stage codegen", "codegen id" in gp))
-    checks.append(
-        ("geocode: scan pruned to url", "html" not in gp and "warc_ts" not in gp)
-    )
+    checks.append(("geocode: scan without html", "html" not in gp))
 
     # r5: corpus_clean composition — Catalyst must prune the UNUSED
     # Arrow kernels in analyze_documents (lang_id, fingerprint, BPE

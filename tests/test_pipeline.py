@@ -42,40 +42,12 @@ def test_enrich_partition_invariant(spark, pages):
     assert b.select(cols).exceptAll(a.select(cols)).count() == 0
 
 
-def test_jvm_strip_matches_python_strip(spark, pages):
-    """Stage-1 extractor: JVM regexp chain byte-equal to the Python kernel,
-    hence the split pipeline preserves the byte-identical invariant."""
-    import pandas as pd
-
-    from gips_spark.functions import textx, udfs
-
-    # html and its JVM-stripped form in ONE row (urls are not unique —
-    # the fixture plants duplicate-url re-crawls with different html)
-    both = pages.limit(500).select(
-        "html", udfs.strip_html_expr(F.col("html")).alias("stripped")
-    ).toPandas()
-    py = textx.strip_markup(
-        both["html"]
-        .map(lambda b: bytes(b).decode("utf-8", errors="replace"))
-        .astype("string")
-    )
-    assert (py.to_numpy(dtype=object) == both["stripped"].to_numpy(dtype=object)).all()
-    # and the full paths agree end-to-end
-    full_py = textx.extract_text(both["html"])
-    full_split = textx.finish_extract(
-        pd.Series(both["stripped"].to_numpy(dtype=object))
-    )
-    assert (full_py.to_numpy() == full_split.to_numpy()).all()
-
-
 def test_extracted_text_contains_source_text(spark, pages):
     """html wraps text; frozen extractor must recover it verbatim inside."""
-    from gips_spark.functions import textx, udfs
+    from gips_spark.functions import textx
 
-    pdf = pages.limit(500).select(
-        "text", udfs.strip_html_expr(F.col("html")).alias("stripped")
-    ).toPandas()
-    extracted = textx.finish_extract(pdf["stripped"].astype("string"))
+    pdf = pages.limit(500).select("text", "html").toPandas()
+    extracted = textx.extract_text(pdf["html"])
     assert all(t in e for t, e in zip(pdf["text"], extracted))
 
 

@@ -151,16 +151,31 @@ def test_stateful_crawl_sessions(spark, pages, tmp_path):
 
 
 def test_streaming_cell_counts(spark, pages, tmp_path):
+    from gips_spark.functions import cellindex, udfs
     from gips_spark.streaming import ingest
 
     # unique urls in the input: which crawl survives dropDuplicates is
     # arbitrary on both sides, so feed one version per url
     in_path = str(tmp_path / "in")
-    pages.limit(500).dropDuplicates(["url"]).write.parquet(in_path)
+    base = pages.limit(500).dropDuplicates(["url"])
+    # plus one page whose only geocode is a TAB-separated coordinate
+    # phrase, at the earliest timestamp so its window is emitted
+    tab = base.orderBy("warc_ts").limit(1).select(
+        F.lit("https://tab.example.com/p/planted").alias("url"),
+        "warc_ts",
+        "html",
+        F.lit("observed at -12.3456,\t45.6789 downtown").alias("text"),
+        "lang",
+    )
+    base.unionByName(tab).write.parquet(in_path)
     out_path = str(tmp_path / "out")
     ingest.run_available_now(spark, in_path, out_path, str(tmp_path / "ck"))
     res = spark.read.parquet(out_path)
     assert res.count() > 0
+    tab_cell = int(cellindex.latlng_to_cell(
+        np.array([-12.3456]), np.array([45.6789]), udfs.H3_RES
+    )[0])
+    assert res.where(F.col("h3_7") == tab_cell).count() == 1
     assert res.where(F.col("n_pages") <= 0).count() == 0
     # Append-mode contract: windows newer than the final watermark stay in
     # state (by design), but every EMITTED (window, cell) row must carry

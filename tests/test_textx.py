@@ -75,7 +75,7 @@ def test_geocode_masked_evaluation_fall_through():
     """r6 (masked highest-priority-first rewrite): an out-of-range match
     in a HIGHER tier must leave the row unresolved for LOWER tiers —
     the exact overwrite semantics of the r5 lowest-first implementation
-    — and the literal prefilters ("lat=", ", ") must never drop a row
+    — and the literal prefilters ("lat=", ",") must never drop a row
     the regex would match."""
     url = pd.Series(
         [
@@ -86,7 +86,7 @@ def test_geocode_masked_evaluation_fall_through():
             "https://x.example.de/p?plat=1.5",
             # valid qs must still win over everything
             "https://x.example.de/tokyo/p?lat=1.5000&lon=2.5000",
-            # out-of-range text coord (has ", ") → falls through to city_text
+            # out-of-range text coord (has ",") → falls through to city_text
             "https://a.example.com/x/p",
         ]
     )
@@ -105,6 +105,32 @@ def test_geocode_masked_evaluation_fall_through():
     # non-RangeIndex input (sliced batch) must not misalign rows
     got2 = textx.geocode(url.iloc[[2, 3]], text.iloc[[2, 3]])
     assert got2["geocode_src"].tolist() == ["latlon_qs", "city_text"]
+
+
+def test_geocode_coord_separators_match_duckdb():
+    """The coord_text rule agrees with DuckDB's RE2 `regexp_extract` on
+    the same pattern (the oracle SQL's) for every ASCII whitespace
+    separator after the comma, not only a space.  A `", "` prefilter
+    once dropped the tab/newline phrases."""
+    import duckdb
+
+    seps = [" ", "\t", "\n", "\r", "\f", "", "  "]
+    text = pd.Series([f"observed at 41.8719,{sep}-12.5674 downtown" for sep in seps])
+    url = pd.Series(["https://x.example.com/p"] * len(seps))
+    got = textx.geocode(url, text)
+    df = pd.DataFrame({"i": range(len(seps)), "txt": text})  # noqa: F841
+    want = duckdb.sql(
+        "SELECT regexp_extract(txt, '" + textx.TEXT_COORD_PATTERN + "', 1) AS la, "
+        "regexp_extract(txt, '" + textx.TEXT_COORD_PATTERN + "', 2) AS lo "
+        "FROM df ORDER BY i"
+    ).df()
+    hit = (want["la"] != "").to_numpy()
+    assert hit.tolist() == [True] * 5 + [False, False]
+    assert got["geocode_src"].tolist() == [
+        "coord_text" if h else "none" for h in hit
+    ]
+    assert got["lat"][hit].tolist() == want["la"][hit].astype(float).tolist()
+    assert got["lon"][hit].tolist() == want["lo"][hit].astype(float).tolist()
 
 
 def test_lang_id():
@@ -165,28 +191,3 @@ def test_geocode_cctld_tier():
     assert got["lat"].iloc[0] == 51.1657 and got["lon"].iloc[0] == 10.4515
     assert got["lat"].iloc[1] == 35.6762  # tokyo, not germany
     assert got["lat"].iloc[4] == 52.5200  # berlin, not japan
-
-
-def test_geocode_jvm_matches_python(spark, pages):
-    """geocode_exprs (JVM CASE/map tiers, the production assign path) ==
-    textx.geocode (Python kernel) on the fixture distribution, all six
-    src classes included (ADVICE-style cross-path pin, extended to the
-    cctld tier)."""
-    import numpy as np
-    import pyspark.sql.functions as F
-
-    from gips_spark.functions import udfs
-
-    glat, glon, gsrc = udfs.geocode_exprs(F.col("url"), F.col("text"))
-    pdf = (
-        pages.limit(800)
-        .select("url", "text", glat.alias("jlat"), glon.alias("jlon"),
-                gsrc.alias("jsrc"))
-        .toPandas()
-    )
-    py = textx.geocode(pdf["url"], pdf["text"])
-    assert pdf["jsrc"].tolist() == py["geocode_src"].tolist()
-    for jc, pc in (("jlat", "lat"), ("jlon", "lon")):
-        a = pdf[jc].to_numpy(dtype=float)
-        b = py[pc].to_numpy(dtype=float)
-        assert ((a == b) | (np.isnan(a) & np.isnan(b))).all()
