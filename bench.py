@@ -90,10 +90,12 @@ def main():
     # (cell_prefix, salt), checkpointed to parquet — the shape that
     # survives 10^12 rows (exact mode persists the whole enriched table
     # incl. extracted_text, impossible at 100 TB; it remains for golden
-    # tests).  extracted_text is dropped from the CHECKPOINT only — the
-    # extraction itself runs inside the fused UDF and is fully measured;
-    # the byte-identity contract is pinned by goldens, the stage output
-    # keeps derived columns (same contract as jobs/run_stage.py).
+    # tests).  The checkpoint keeps no extracted_text, so the default
+    # enrich_pages (with_text=False) neither reads html nor runs the
+    # extraction, and this stage does not price it (bench_extra.py's
+    # text_chain does); the .drop below is a no-op.  The byte-identity
+    # contract is pinned by goldens, the stage output keeps derived
+    # columns (same contract as jobs/run_stage.py).
     enr_out = os.path.join(
         os.path.dirname(os.path.abspath(__file__)), ".bench_cache", "enr_out"
     )

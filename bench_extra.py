@@ -55,15 +55,6 @@ def main():
     def scan_no_html():
         _noop(pages.select("url", "warc_ts", "text", "lang"))
 
-    def cells_chain():
-        # assignment-only chain: geocode_and_cells UDF; no html strip
-        _noop(
-            tile_assign.enrich_pages(
-                pages, persist=False, do_repartition=False, salt_sample=0.02,
-                with_text=False,
-            )
-        )
-
     def full_chain_noop():
         # the bench's exact enrichment chain, noop sink instead of parquet
         _noop(
@@ -71,17 +62,32 @@ def main():
                 pages,
                 salt_target_rows=max(1000, n_rows // 200),
                 salt_sample=0.02,
-            ).drop("extracted_text")
+            )
         )
 
     def full_chain_norepart():
+        # assignment-only chain: geocode_and_cells UDF, html never read
         _noop(
             tile_assign.enrich_pages(
                 pages,
                 salt_target_rows=max(1000, n_rows // 200),
                 do_repartition=False,
                 salt_sample=0.02,
-            ).drop("extracted_text")
+            )
+        )
+
+    def text_chain():
+        # full_chain_norepart + html scan, Arrow shipping and strip
+        # (enrich_struct): the difference prices text extraction, which
+        # the bench's assign stage no longer runs
+        _noop(
+            tile_assign.enrich_pages(
+                pages,
+                salt_target_rows=max(1000, n_rows // 200),
+                do_repartition=False,
+                salt_sample=0.02,
+                with_text=True,
+            )
         )
 
     def exact_mode_unpersisted():
@@ -89,11 +95,11 @@ def main():
         # plan + the main pass each run the UDF chain, so this measures
         # ~2× the single-pass chain — kept as the documented cost of
         # exact mode without its block-manager persist, NOT a UDF-only
-        # isolation (use cells_chain / full_chain_norepart for that)
+        # isolation (use full_chain_norepart / text_chain for that)
         _noop(
             tile_assign.enrich_pages(
                 pages, persist=False, do_repartition=False, salt_sample=None,
-            ).drop("extracted_text")
+            )
         )
 
     enr_out = os.path.join(
@@ -104,14 +110,14 @@ def main():
         spark.catalog.clearCache()
         tile_assign.enrich_pages(
             pages, salt_target_rows=max(1000, n_rows // 200), salt_sample=0.02
-        ).drop("extracted_text").write.mode("overwrite").parquet(enr_out)
+        ).write.mode("overwrite").parquet(enr_out)
 
     stages = {
         "scan_all": scan_all,
         "scan_no_html": scan_no_html,
-        "cells_chain": cells_chain,
         "exact_mode_unpersisted": exact_mode_unpersisted,
         "full_chain_norepart": full_chain_norepart,
+        "text_chain": text_chain,
         "full_chain_noop": full_chain_noop,
         "assign_parquet": assign_parquet,
     }
@@ -125,7 +131,7 @@ def main():
         if not os.path.isdir(enr_post):
             tile_assign.enrich_pages(
                 pages, salt_target_rows=max(1000, n_rows // 200), salt_sample=0.02
-            ).drop("extracted_text").write.mode("overwrite").parquet(enr_post)
+            ).write.mode("overwrite").parquet(enr_post)
         enr = spark.read.parquet(enr_post).persist()
         enr.count()
         extents = fixtures.gen_extents(spark)

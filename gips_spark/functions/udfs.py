@@ -1,11 +1,14 @@
 """Arrow-vectorized pandas UDF bindings for the numpy kernels.
 
 Design rule (SURVEY.md §3): the JVM↔Python Arrow channel is a per-batch
-cost, so the hot path uses ONE fused UDF (`enrich_struct`) computing
-extract_text + geocode + h3_7 + s2_13 per batch, instead of four UDFs
-= four Arrow round-trips.  `geocode_and_cells` is the same kernel
-without the text.  There is one geocoder (textx.geocode) and one cell
-step (`_cell`); the DuckDB SQL in __spark_entry__.py is their oracle.
+cost, so each path uses ONE fused UDF per batch instead of one UDF per
+output (= one Arrow round-trip each).  The assign hot path is
+`geocode_and_cells` (geocode + h3_7 + s2_13 from url + text; `html`
+never enters Python).  `enrich_struct` is the same kernel plus
+extract_text, run only by `enrich_pages(with_text=True)` for callers
+that keep `extracted_text`.  There is one geocoder (textx.geocode) and
+one cell step (`_cell`); the DuckDB SQL in __spark_entry__.py is their
+oracle.
 Everything is Series→Series/Struct; no per-row Python anywhere
 (input_hint requirement).
 """
@@ -79,8 +82,9 @@ CELLS_ONLY_SCHEMA = T.StructType(ENRICH_SCHEMA.fields[4:])
 
 @pandas_udf(ENRICH_SCHEMA)
 def enrich_struct(html: pd.Series, url: pd.Series, text: pd.Series) -> pd.DataFrame:
-    """The fused assign kernel: extract_text + geocode + H3 res-7 + S2
-    level-13 in one Arrow pass (tile_assign.enrich_pages)."""
+    """The with-text assign kernel: extract_text + geocode + H3 res-7 +
+    S2 level-13 in one Arrow pass (tile_assign.enrich_pages with
+    ``with_text=True``)."""
     out = _geocode_cells(url, text)
     out.insert(0, "extracted_text", textx.extract_text(html).to_numpy(dtype=object))
     return out

@@ -7,8 +7,10 @@ tile (H3 res-7 + S2 level-13 cell) the way every GIPS asset gets a grid
 tile.
 
 Plan shape (scale notes):
-  read pages (column pruning matters — `html` is only selected here)
-  → ONE fused Arrow UDF (extract+geocode+h3+s2; one Python hop)
+  read pages without `html` (it is read only when the caller keeps
+  `extracted_text`, ``with_text=True``)
+  → ONE Arrow UDF (geocode+h3+s2, or extract+geocode+h3+s2 with text;
+    one Python hop)
   → broadcast-join the salt plan (tiny) → salt column
   → repartition(cell_prefix, salt)  ← the single explicit
     shuffle, whose layout downstream stages reuse (SURVEY.md §3)
@@ -33,7 +35,7 @@ def enrich_pages(
     do_repartition: bool = True,
     persist: bool | None = None,
     salt_sample: float | None = None,
-    with_text: bool = True,
+    with_text: bool = False,
 ) -> DataFrame:
     """pages(url, warc_ts, html, text, lang) → pages_enriched.
 
@@ -50,6 +52,14 @@ def enrich_pages(
       and file-level range layout happens at the bucketed write.
 
     Both modes hash-partition on (cell_prefix, salt).
+
+    By default the chain runs the assignment-only kernel
+    (`udfs.geocode_and_cells`): only url + text enter Python, and the
+    scan does not read `html` — Catalyst cannot prune inside a Python
+    UDF, so a kernel that takes `html` reads, ships and strips it even
+    when the caller drops its output.  ``with_text=True`` runs the
+    fused `udfs.enrich_struct` instead and adds `extracted_text`; every
+    other column is identical in both forms.
     """
     def chain(df: DataFrame, text: bool = with_text) -> DataFrame:
         # r6 (guide §1/§4, measured in bench_extra + OPTIMIZATION_r06.md):

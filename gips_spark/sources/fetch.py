@@ -150,7 +150,15 @@ def fetch_assets(
                     out.append(row)
                     continue
                 for attempt in range(max_attempts):
-                    row["attempts"] = attempt + 1
+                    # the row reports the LAST attempt only: nothing of an
+                    # earlier attempt (a mismatch's bytes/sha256) survives
+                    row.update(
+                        attempts=attempt + 1,
+                        status="error",
+                        bytes=0,
+                        sha256=None,
+                        error=None,
+                    )
                     try:
                         n = fetch_one(url, dest)
                         got = _sha256_file(dest)

@@ -43,7 +43,7 @@ def _enrich(df):
     # (ADVICE r1).  `cell_prefix` is per-row deterministic and stays.
     return tile_assign.enrich_pages(
         df, do_repartition=False, salt_sample=0.02
-    ).drop("extracted_text", "salt")
+    ).drop("salt")
 
 
 def _assignments(df):

@@ -4,8 +4,8 @@ canary-flanked standalone number; this puts one on the record with the
 same machinery as scripts/knn_flanked.py.
 
 Stage definition identical to bench.py's assign stage (single-pass
-sampled-salt enrich of the sf0.1 = 1M-row pages cache, full fused
-extract+geocode+H3/S2 UDF, hash repartition on (cell_prefix, salt),
+sampled-salt enrich of the sf0.1 = 1M-row pages cache, assignment-only
+geocode+H3/S2 UDF, hash repartition on (cell_prefix, salt),
 parquet checkpoint; local[32]).  Each trial is flanked by canaries; all
 trials + canaries are published; the REPORTED number is the min over
 trials whose two flanking canaries are ≤ 1.25× the session floor
@@ -46,7 +46,7 @@ def main():
         spark.catalog.clearCache()
         tile_assign.enrich_pages(
             pages, salt_target_rows=max(1000, n_rows // 200), salt_sample=0.02
-        ).drop("extracted_text").write.mode("overwrite").parquet(out)
+        ).write.mode("overwrite").parquet(out)
 
     # warm (worker pool, plan JIT) on a slice — excluded, as in bench.py
     warm = pages.limit(60_000).repartition(64)

@@ -2,10 +2,10 @@
 automated checks for the plan properties the engine promises:
 
 * parquet scans carry PushedFilters / pruned ReadSchema (no html column
-  outside the extract stage);
+  outside the ``with_text=True`` extract stage);
 * small sides are BroadcastExchange (extents, cover lists, salt plan,
   knn candidates) — no SortMergeJoin against a dimension;
-* the enrich path contains exactly one ArrowEvalPython stage;
+* the enrich path runs exactly one Arrow kernel per scan;
 * WholeStageCodegen spans cover the relational tail.
 
 Run: python scripts/explain_audit.py [sf_dir]  (writes PLANS.md)
@@ -60,16 +60,35 @@ def run_audit(spark, pages, salt_target_rows: int = 5000):
         ("assign-sp: no InMemoryRelation (no persist)", "InMemoryRelation" not in sp1)
     )
     checks.append(("assign-sp: salt plan broadcast", "BroadcastExchange" in sp1))
+    # the default chain is assignment-only: the main pass and the 2%
+    # salt sample each run one geocode_and_cells node, and since no
+    # kernel takes html, no scan reads it
+    read_schemas = [ln for ln in sp1.splitlines() if ln.startswith("ReadSchema:")]
+    checks.append(
+        ("assign-sp: one geocode_and_cells Arrow node per scan, html in no ReadSchema",
+         sp1.count("ArrowEvalPython (") == len(read_schemas) == sp1.count("geocode_and_cells(")
+         and "enrich_struct" not in sp1
+         and not any("html" in ln for ln in read_schemas))
+    )
+
+    # with_text=True: the main pass is the fused with-text kernel
+    # (strip + extract + geocode + cells in one Arrow UDF; the JVM
+    # regex paths lose to CPython sre on every pattern here, see
+    # OPTIMIZATION_r06.md)
+    spt = formatted(
+        tile_assign.enrich_pages(
+            pages, salt_target_rows=salt_target_rows, salt_sample=0.02, with_text=True
+        )
+    )
+    sections["assign single-pass with_text=True (fused extract kernel)"] = spt
+    checks.append(
+        ("assign-text: one enrich_struct Arrow kernel, no row-wise Python",
+         spt.count("enrich_struct(") == 1 and "BatchEvalPython" not in spt)
+    )
 
     enr = tile_assign.enrich_pages(pages, salt_target_rows=salt_target_rows)
     p = formatted(enr)
     sections["assign (enrich → salt → repartition)"] = p
-    # the fused kernel is ONE Arrow UDF; cached-plan reprints duplicate the
-    # node textually, so assert the udf name + absence of row-wise Python
-    # r6: the fused kernel is enrich_struct (strip + geocode + extract
-    # + cells all inside the Arrow kernel — the JVM regex paths lose to
-    # CPython sre on every pattern here; see OPTIMIZATION_r06.md)
-    checks.append(("assign: fused Arrow kernel only", "enrich_struct" in p and "BatchEvalPython" not in p))
     checks.append(
         ("assign: geocode inside the fused kernel (no JVM regex cascade)",
          "regexp_extract" not in p)

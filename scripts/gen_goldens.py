@@ -49,7 +49,9 @@ def compute_hashes(spark) -> dict[str, str]:
     from gips_spark.sources import fixtures
 
     pages = fixtures.gen_pages(spark, N_PAGES).cache()
-    enr = tile_assign.enrich_pages(pages, salt_target_rows=20).cache()
+    enr = tile_assign.enrich_pages(
+        pages, salt_target_rows=20, with_text=True
+    ).cache()
     extents = fixtures.gen_extents(spark)
     directory = cell_directory.build_cell_directory(enr).cache()
 

@@ -42,7 +42,7 @@ def main():
         pages = spark.read.parquet(cache_dir)
         tile_assign.enrich_pages(
             pages, salt_target_rows=max(1000, n_rows // 200), salt_sample=0.02
-        ).drop("extracted_text").write.mode("overwrite").parquet(enr_out)
+        ).write.mode("overwrite").parquet(enr_out)
 
     enr = spark.read.parquet(enr_out).persist()
     enr.count()

@@ -28,7 +28,9 @@ def pages(spark):
 def enriched(spark, pages):
     from gips_spark.operators import tile_assign
 
-    return tile_assign.enrich_pages(pages, salt_target_rows=20).cache()
+    return tile_assign.enrich_pages(
+        pages, salt_target_rows=20, with_text=True
+    ).cache()
 
 
 @pytest.fixture(scope="session")

@@ -86,3 +86,47 @@ def test_fetch_without_checksums_and_host_partitioning(spark, tmp_path):
     # repartition_by_host stays a JVM hash exchange (no Python stage)
     plan = fetch.repartition_by_host(manifest, 4)._jdf.queryExecution().executedPlan().toString()
     assert "ParseUrl" in plan and "EvalPython" not in plan
+
+
+def test_fetch_row_reports_last_attempt_only(spark, tmp_path):
+    """A checksum mismatch followed by an exception must leave an
+    `error` row with none of the mismatched attempt's bytes/sha256."""
+    import http.server
+    import threading
+
+    hits = []
+
+    class Handler(http.server.BaseHTTPRequestHandler):
+        def do_GET(self):
+            hits.append(self.path)
+            if len(hits) == 1:
+                body = b"wrong payload"
+                self.send_response(200)
+                self.send_header("Content-Length", str(len(body)))
+                self.end_headers()
+                self.wfile.write(body)
+            else:
+                self.send_error(500)
+
+        def log_message(self, *args):
+            pass
+
+    server = http.server.ThreadingHTTPServer(("127.0.0.1", 0), Handler)
+    threading.Thread(target=server.serve_forever, daemon=True).start()
+    try:
+        url = f"http://127.0.0.1:{server.server_address[1]}/asset.bin"
+        manifest = spark.createDataFrame(
+            [("A1", url, "asset.bin", "0" * 64)],
+            "asset_id string, url string, dest_name string, expected_sha256 string",
+        )
+        (r,) = fetch.fetch_assets(
+            manifest, str(tmp_path / "archive"), max_attempts=2, backoff_base_s=0.01
+        ).collect()
+    finally:
+        server.shutdown()
+        server.server_close()
+    assert len(hits) == 2
+    assert r["status"] == "error" and r["attempts"] == 2
+    assert r["bytes"] == 0 and r["sha256"] is None
+    assert "500" in r["error"]
+    assert not os.path.exists(r["dest_path"])

@@ -31,6 +31,41 @@ def test_enrich_schema_and_rows(enriched, pages):
         assert c in enriched.columns
     srcs = {r["geocode_src"] for r in enriched.select("geocode_src").distinct().collect()}
     assert srcs == {"latlon_qs", "coord_text", "city_url", "city_text", "cctld", "none"}
+    # `enriched` is the with_text=True form; the default adds no text
+    default_cols = tile_assign.enrich_pages(pages, salt_target_rows=20).columns
+    assert "extracted_text" not in default_cols
+    assert default_cols == [c for c in enriched.columns if c != "extracted_text"]
+
+
+def test_default_enrich_plan_reads_no_html(spark, pages, tmp_path):
+    """The default chain is assignment-only: no scan reads html and the
+    with-text kernel is not in the plan (Catalyst cannot prune inside a
+    Python UDF, so only leaving it out of the plan saves the read)."""
+    import re
+
+    path = str(tmp_path / "pages")
+    pages.write.parquet(path)
+    df = tile_assign.enrich_pages(
+        spark.read.parquet(path), salt_target_rows=20, salt_sample=0.02
+    )
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    read_schemas = re.findall(r"ReadSchema: (struct<[^>]*>)", plan)
+    assert read_schemas, plan
+    assert not any("html" in r for r in read_schemas), read_schemas
+    assert "enrich_struct" not in plan and "geocode_and_cells" in plan
+
+
+@pytest.mark.parametrize("salt_sample", [None, 0.02])
+def test_with_text_minus_text_equals_default(pages, salt_sample):
+    """Dropping extracted_text from the with-text form gives the default
+    form on every column, salt and cell_prefix included."""
+    kw = dict(salt_target_rows=20, do_repartition=False, salt_sample=salt_sample)
+    a = tile_assign.enrich_pages(pages, with_text=True, **kw).drop("extracted_text")
+    b = tile_assign.enrich_pages(pages, **kw)
+    assert a.columns == b.columns
+    assert a.where(F.col("salt") > 0).count() > 0  # salting is exercised
+    assert a.exceptAll(b).count() == 0
+    assert b.exceptAll(a).count() == 0
 
 
 def test_enrich_partition_invariant(spark, pages):
