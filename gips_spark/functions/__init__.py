@@ -7,5 +7,5 @@ Submodules:
   geom   — haversine, ray-casting point-in-polygon, prepared geometry
   textx  — deterministic html→text extraction, rule-based geocoder,
            language-id / quality / token-count / fingerprint kernels
-  udfs   — pandas_udf / applyInPandas bindings used by the operators
+  udfs   — arrow_udf / pandas_udf bindings used by the operators
 """

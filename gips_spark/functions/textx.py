@@ -1,25 +1,32 @@
 """Deterministic text kernels: html→text extraction, rule-based geocoding,
 language id, quality scoring, token counting, fingerprinting.
 
-All kernels operate on pandas Series (Arrow batches inside pandas UDFs);
-regex work happens in pandas' C string machinery, never per-row Python
-loops in the hot path.
+The kernels work on whole batches, never per-row Python loops in the
+hot path.  The geocoder is Arrow-native (``geocode_arrow``: pyarrow
+compute, RE2 regexes); the others operate on pandas Series (Arrow
+batches inside pandas UDFs), with regex work in pandas' C string
+machinery.
 
 * ``extract_text`` is the byte-identical-per-url invariant of
   BASELINE.json's ``input_hint``: a frozen, deterministic pipeline
   (strip comments/script/style → drop tags → decode entities →
   normalize whitespace).  Any change to it invalidates goldens —
   bump ``EXTRACT_VERSION`` and regenerate.
-* ``geocode`` mirrors the reference's "filename parsing is the schema
-  inference" idea (`gips/data/core.py :: Asset.__init__`, SURVEY.md
-  §2.8 X1): coordinates are recovered from the url/text with an ordered
-  rule table.  Rules are frozen code constants (no external data):
+* ``geocode_arrow`` mirrors the reference's "filename parsing is the
+  schema inference" idea (`gips/data/core.py :: Asset.__init__`,
+  SURVEY.md §2.8 X1): coordinates are recovered from the url/text with
+  an ordered rule table.  Rules are frozen code constants (no external
+  data):
     1. url query string ``lat=<f>&lon=<f>``        → src 'latlon_qs'
     2. text coordinate phrase ``"<f>, <f>"``        → src 'coord_text'
     3. url path city slug from embedded gazetteer   → src 'city_url'
     4. city name in text from embedded gazetteer    → src 'city_text'
-    5. nothing                                      → src 'none' (excluded
+    5. url ccTLD from the embedded centroid table   → src 'cctld'
+    6. nothing                                      → src 'none' (excluded
        from spatial ops downstream, per FIXTURES.md)
+  Its regexes run under RE2, as the DuckDB oracle's do, on the same
+  pattern strings, so the geocoder agrees with the oracle by
+  construction.  ``geocode`` is its pandas adapter.
 """
 
 from __future__ import annotations
@@ -28,6 +35,8 @@ import re
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
 
 EXTRACT_VERSION = 1
 
@@ -85,8 +94,6 @@ GAZETTEER: list[tuple[str, float, float]] = [
     ("rome", 41.9028, 12.4964),
 ]
 HOTSPOT_CITIES = GAZETTEER[:12]
-_CITY_LAT = {name: lat for name, lat, lon in GAZETTEER}
-_CITY_LON = {name: lon for name, lat, lon in GAZETTEER}
 
 # ccTLD → country centroid (public coordinates, frozen constants) — the
 # LOWEST-priority geocoder tier (SURVEY §7.2 item 7: "ccTLD table"): a
@@ -117,34 +124,46 @@ CCTLD_CENTROIDS: list[tuple[str, float, float]] = [
     ("ar", -38.4161, -63.6167),
     ("tr", 38.9637, 35.2433),
 ]
-_CC_LAT = {cc: lat for cc, lat, lon in CCTLD_CENTROIDS}
-_CC_LON = {cc: lon for cc, lat, lon in CCTLD_CENTROIDS}
 
 # slug alternation, longest-first so 'ho-chi-minh-city' beats 'chi'
 _SLUGS_BY_LEN = sorted((c[0] for c in GAZETTEER), key=len, reverse=True)
 #: shared pattern SOURCES: the DuckDB oracle SQL (__spark_entry__.py ::
-#: _geocode_docs_oracle) runs these same strings under RE2, so Python re
-#: and RE2 must agree on them (tests/test_textx.py pins the separators of
-#: TEXT_COORD_PATTERN; \s also matches \v and U+00A0 in re, not in RE2).
+#: _geocode_docs_oracle) runs these same strings under RE2, and so does
+#: `geocode_arrow` (pyarrow's extract_regex is RE2), so the two agree by
+#: construction: \s is [\t\n\f\r ], \d is [0-9] and \b is an ASCII word
+#: boundary in both.  Changing a string here changes the oracle too.
 URL_CITY_PATTERN = r"/(" + "|".join(_SLUGS_BY_LEN) + r")(?:/|$|\?)"
 TEXT_CITY_PATTERN = (
     r"\b(" + "|".join(s.replace("-", " ") for s in _SLUGS_BY_LEN) + r")\b"
 )
 QS_LATLON_PATTERN = r"[?&]lat=(-?\d+\.\d+)&lon=(-?\d+\.\d+)"
 TEXT_COORD_PATTERN = r"(-?\d{1,2}\.\d{4}),\s(-?\d{1,3}\.\d{4})"
-#: last hostname label when it is a 2-letter tld (RE2 and Python re
-#: agree on this source — same contract as the patterns above)
+#: last hostname label when it is a 2-letter tld
 CCTLD_PATTERN = r"^https?://[^/?#]+\.([a-z]{2})(?:[/?#]|$)"
-_URL_CITY_RE = re.compile(URL_CITY_PATTERN)
-_TEXT_CITY_RE = re.compile(TEXT_CITY_PATTERN, re.IGNORECASE)
-#: r6: the geocoder lowers the text before matching, so the IGNORECASE
-#: flag was redundant there — and it disables re's literal-prefix scan
-#: (measured 3.6× slower).  Kept separate so _TEXT_CITY_RE still serves
-#: any raw-text call sites.
-_TEXT_CITY_CS_RE = re.compile(TEXT_CITY_PATTERN)
-_QS_LATLON_RE = re.compile(QS_LATLON_PATTERN)
-_TEXT_COORD_RE = re.compile(TEXT_COORD_PATTERN)
-_CCTLD_RE = re.compile(CCTLD_PATTERN)
+
+
+def _named(pattern: str, *names: str) -> str:
+    """`pattern` with its capturing groups named in order (extract_regex
+    returns named groups only); the matching is the pattern's own."""
+    parts = re.split(r"(?<!\\)\((?!\?)", pattern)
+    if len(parts) != len(names) + 1:
+        raise ValueError(f"{pattern!r} has {len(parts) - 1} groups, not {len(names)}")
+    return "".join(p + f"(?P<{n}>" for p, n in zip(parts, names)) + parts[-1]
+
+
+_URL_CITY_RX = _named(URL_CITY_PATTERN, "key")
+_TEXT_CITY_RX = _named(TEXT_CITY_PATTERN, "key")
+_QS_LATLON_RX = _named(QS_LATLON_PATTERN, "lat", "lon")
+_TEXT_COORD_RX = _named(TEXT_COORD_PATTERN, "lat", "lon")
+_CCTLD_RX = _named(CCTLD_PATTERN, "key")
+
+#: lookup tables as constant arrays: index_in over the keys, then take
+_CITY_KEYS = pa.array([c[0] for c in GAZETTEER])
+_CITY_LATLON = np.array([c[1:] for c in GAZETTEER], dtype=np.float64)
+_CC_KEYS = pa.array([c[0] for c in CCTLD_CENTROIDS])
+_CC_LATLON = np.array([c[1:] for c in CCTLD_CENTROIDS], dtype=np.float64)
+#: geocode_src labels, indexed by rule (0 = unresolved)
+_SRC_LABELS = pa.array(["none", "latlon_qs", "coord_text", "city_url", "city_text", "cctld"])
 
 # ------------------------------------------------------------- extraction
 
@@ -189,96 +208,89 @@ def extract_text(html: pd.Series) -> pd.Series:
 # --------------------------------------------------------------- geocoder
 
 
-def geocode(url: pd.Series, text: pd.Series) -> pd.DataFrame:
-    """Ordered-rule geocoder → DataFrame(lat, lon, geocode_src).
+def _groups(sub: pa.Array, rows: np.ndarray, rx: str):
+    """First RE2 match of `rx` in `sub`, the rows `rows` of a column →
+    (the rows that matched, their named groups).  Non-matches are
+    filtered out before a group is read: StructArray.field ignores the
+    struct's own validity, so a non-match would read as ''."""
+    m = pc.extract_regex(sub, rx)
+    hit = m.is_valid()
+    return rows[hit.to_numpy(zero_copy_only=False)], m.filter(hit)
 
-    Deterministic, vectorized (pandas .str.extract — C regex), rules
-    applied in fixed priority; unresolved rows get (nan, nan, 'none').
 
-    r6 shape (same rule table, same outputs — pinned by the frozen
-    `geocoded` golden hash and the cross-path equality tests): rules
-    run HIGHEST priority first, each on the still-unresolved slice
-    only, instead of lowest-first full-series passes with overwrite.
-    A row that matches a higher rule never pays the lower rules'
-    regexes (the 48-slug city alternation was 62% of the kernel), and
-    the two coordinate rules get a C-substring prefilter on a literal
-    their regex requires ("lat=" / ",").  A match with out-of-range
-    coordinates stays UNRESOLVED and falls through to lower rules —
-    exactly the old overwrite semantics.
+def geocode_arrow(url: pa.Array, text: pa.Array) -> pa.StructArray:
+    """Ordered-rule geocoder on Arrow string arrays → StructArray(lat,
+    lon, geocode_src); unresolved rows get null lat/lon and 'none'.
+
+    Rules run highest priority first, each on the rows still unresolved
+    only, so a row that matches a higher rule never pays the lower
+    rules' regexes.  The two coordinate rules first keep the rows that
+    hold a literal their regex requires ("lat=" / ",").  A match with
+    out-of-range coordinates stays unresolved and falls through to the
+    lower rules.  Null url/text never match.
     """
-    url = url.astype("string").fillna("").reset_index(drop=True)
-    text = text.astype("string").fillna("").reset_index(drop=True)
     n = len(url)
-    lat = np.full(n, np.nan)
-    lon = np.full(n, np.nan)
-    src = np.full(n, "none", dtype=object)
+    latlon = np.full((n, 2), np.nan)
+    src = np.zeros(n, dtype=np.int8)
     todo = np.ones(n, dtype=bool)
 
-    def _coords_rule(series, pre_lit, rx, label):
-        pre = todo & series.str.contains(pre_lit, regex=False).to_numpy(dtype=bool)
-        idx = np.flatnonzero(pre)
-        if idx.size == 0:
-            return
-        mm = series.iloc[idx].str.extract(rx)
-        hit = mm[0].notna().to_numpy()
-        if not hit.any():
-            return
-        la = mm[0][hit].astype(float).to_numpy()
-        lo = mm[1][hit].astype(float).to_numpy()
-        ok = (np.abs(la) <= 90.0) & (np.abs(lo) <= 180.0)
-        tgt = idx[hit][ok]
-        lat[tgt] = la[ok]
-        lon[tgt] = lo[ok]
-        src[tgt] = label
-        todo[tgt] = False
+    def settle(rows, ll, rule):
+        latlon[rows] = ll
+        src[rows] = rule
+        todo[rows] = False
 
-    # rule 1 (highest): lat/lon query-string params — the regex needs
-    # the literal "lat=".
-    _coords_rule(url, "lat=", _QS_LATLON_RE, "latlon_qs")
-    # rule 2: coordinate phrase in text — the regex needs "," (then any
-    # \s, not only a space: a tab-separated phrase must still match).
-    _coords_rule(text, ",", _TEXT_COORD_RE, "coord_text")
+    def coords(col, literal, rx, rule):
+        has = pc.fill_null(pc.match_substring(col, literal), False)
+        rows = np.flatnonzero(todo & has.to_numpy(zero_copy_only=False))
+        rows, g = _groups(col.take(rows), rows, rx)
+        ll = np.column_stack([pc.cast(g.field(k), pa.float64()).to_numpy() for k in ("lat", "lon")])
+        ok = (np.abs(ll[:, 0]) <= 90.0) & (np.abs(ll[:, 1]) <= 180.0)
+        settle(rows[ok], ll[ok], rule)
 
-    # rule 3: url path city slug
-    idx = np.flatnonzero(todo)
-    if idx.size:
-        m = url.iloc[idx].str.extract(_URL_CITY_RE, expand=False)
-        hit = m.notna().to_numpy()
-        if hit.any():
-            tgt = idx[hit]
-            lat[tgt] = m[hit].map(_CITY_LAT).to_numpy(dtype=float)
-            lon[tgt] = m[hit].map(_CITY_LON).to_numpy(dtype=float)
-            src[tgt] = "city_url"
-            todo[tgt] = False
+    def lookup(rows, keys, table, rule):
+        i = pc.index_in(keys, value_set=table[0])
+        ok = i.is_valid().to_numpy(zero_copy_only=False)
+        settle(rows[ok], table[1][pc.fill_null(i, 0).to_numpy()[ok]], rule)
 
-    # rule 4: city slug in the text body.  The pattern is compiled
-    # CASE-SENSITIVE and run on the lowered slice: identical matches
-    # (the old IGNORECASE flag on already-lowered text was redundant
-    # but disabled re's literal-prefix optimizations — measured 3.6×).
-    idx = np.flatnonzero(todo)
-    if idx.size:
-        m = text.iloc[idx].str.lower().str.extract(_TEXT_CITY_CS_RE, expand=False)
-        hit = m.notna().to_numpy()
-        if hit.any():
-            slugs = m[hit].str.replace(" ", "-", regex=False)
-            tgt = idx[hit]
-            lat[tgt] = slugs.map(_CITY_LAT).to_numpy(dtype=float)
-            lon[tgt] = slugs.map(_CITY_LON).to_numpy(dtype=float)
-            src[tgt] = "city_text"
-            todo[tgt] = False
+    cities = (_CITY_KEYS, _CITY_LATLON)
+    # rules 1-2: lat/lon query-string params in the url; a coordinate
+    # phrase in the text (the "," may be followed by any \s)
+    coords(url, "lat=", _QS_LATLON_RX, 1)
+    coords(text, ",", _TEXT_COORD_RX, 2)
+    # rule 3: city slug in the url path
+    rows = np.flatnonzero(todo)
+    rows, g = _groups(url.take(rows), rows, _URL_CITY_RX)
+    lookup(rows, g.field("key"), cities, 3)
+    # rule 4: city name in the lowered text ("sao paulo" → "sao-paulo")
+    rows = np.flatnonzero(todo)
+    rows, g = _groups(pc.utf8_lower(text.take(rows)), rows, _TEXT_CITY_RX)
+    lookup(rows, pc.replace_substring(g.field("key"), " ", "-"), cities, 4)
+    # rule 5 (lowest): ccTLD → country centroid, known codes only
+    rows = np.flatnonzero(todo)
+    rows, g = _groups(url.take(rows), rows, _CCTLD_RX)
+    lookup(rows, g.field("key"), (_CC_KEYS, _CC_LATLON), 5)
 
-    # rule 5 (lowest): ccTLD → country centroid
-    idx = np.flatnonzero(todo)
-    if idx.size:
-        m = url.iloc[idx].str.extract(_CCTLD_RE, expand=False)
-        hit = (m.notna() & m.isin(_CC_LAT.keys())).to_numpy()
-        if hit.any():
-            tgt = idx[hit]
-            lat[tgt] = m[hit].map(_CC_LAT).to_numpy(dtype=float)
-            lon[tgt] = m[hit].map(_CC_LON).to_numpy(dtype=float)
-            src[tgt] = "cctld"
+    return pa.StructArray.from_arrays(
+        [
+            pa.array(latlon[:, 0], mask=todo),
+            pa.array(latlon[:, 1], mask=todo),
+            _SRC_LABELS.take(pa.array(src)),
+        ],
+        names=["lat", "lon", "geocode_src"],
+    )
 
-    return pd.DataFrame({"lat": lat, "lon": lon, "geocode_src": src})
+
+def geocode(url: pd.Series, text: pd.Series) -> pd.DataFrame:
+    """pandas adapter over `geocode_arrow` → DataFrame(lat, lon,
+    geocode_src), NaN lat/lon where unresolved; the index is reset."""
+    geo = geocode_arrow(_utf8(url), _utf8(text))
+    return pd.DataFrame(
+        {k: geo.field(k).to_numpy(zero_copy_only=False) for k in ("lat", "lon", "geocode_src")}
+    )
+
+
+def _utf8(s: pd.Series) -> pa.Array:
+    return pa.array(s, type=pa.string(), from_pandas=True)
 
 
 # ----------------------------------------------- text-analysis kernels

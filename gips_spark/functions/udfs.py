@@ -1,25 +1,27 @@
-"""Arrow-vectorized pandas UDF bindings for the numpy kernels.
+"""Arrow-vectorized UDF bindings for the numpy and pyarrow kernels.
 
 Design rule (SURVEY.md §3): the JVM↔Python Arrow channel is a per-batch
 cost, so each path uses ONE fused UDF per batch instead of one UDF per
 output (= one Arrow round-trip each).  The assign hot path is
 `geocode_and_cells` (geocode + h3_7 + s2_13 from url + text; `html`
-never enters Python).  `enrich_struct` is the same kernel plus
-extract_text, run only by `enrich_pages(with_text=True)` for callers
-that keep `extracted_text`.  There is one geocoder (textx.geocode) and
-one cell step (`_cell`); the DuckDB SQL in __spark_entry__.py is their
-oracle.
-Everything is Series→Series/Struct; no per-row Python anywhere
-(input_hint requirement).
+never enters Python), an Arrow UDF that never builds pandas.
+`enrich_struct` is the same kernel plus extract_text, run only by
+`enrich_pages(with_text=True)` for callers that keep `extracted_text`.
+There is one geocoder (textx.geocode_arrow, RE2) and one cell step
+(`_cell`, nulls through Arrow validity); the DuckDB SQL in
+__spark_entry__.py is their oracle.
+Every kernel works on whole Arrow/pandas batches; no per-row Python
+anywhere (input_hint requirement).
 """
 
 from __future__ import annotations
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
-from pyspark.sql.functions import pandas_udf
+from pyspark.sql.functions import arrow_udf, pandas_udf
 
 from gips_spark.functions import cellindex, geom, s2, textx
 
@@ -27,40 +29,33 @@ H3_RES = 7
 S2_LEVEL = 13
 
 
-def _masked_int64(values: np.ndarray, ok: np.ndarray) -> pd.Series:
-    """int64 values with nulls where ~ok, WITHOUT float64 upcast (plain
-    .where(..., pd.NA) converts the batch to float64, which rounds int64
-    cell ids — a real corruption bug caught by cross-path tests)."""
-    out = pd.array(values, dtype="Int64")
-    out[~np.asarray(ok)] = pd.NA
-    return pd.Series(out)
-
-
-def _cell(lat, lon, to_cell, level: int) -> pd.Series:
-    """The one cell step: (lat, lon) → nullable Int64 cell ids at `level`,
-    null where either coordinate is NaN (an ungeocoded row)."""
-    la = np.asarray(lat, dtype=np.float64)
-    lo = np.asarray(lon, dtype=np.float64)
+def _cell(lat: pa.Array, lon: pa.Array, to_cell, level: int) -> pa.Array:
+    """The one cell step: (lat, lon) → int64 cell ids at `level`, null
+    where either coordinate is null or NaN (an ungeocoded row)."""
+    la = np.asarray(lat.to_numpy(zero_copy_only=False), dtype=np.float64)
+    lo = np.asarray(lon.to_numpy(zero_copy_only=False), dtype=np.float64)
     ok = ~(np.isnan(la) | np.isnan(lo))
     out = np.zeros(len(la), dtype=np.int64)
     if ok.any():
         out[ok] = to_cell(la[ok], lo[ok], level)
-    return _masked_int64(out, ok)
+    return pa.array(out, mask=~ok)
 
 
-def _geocode_cells(url: pd.Series, text: pd.Series) -> pd.DataFrame:
-    """textx.geocode → (lat, lon, geocode_src, h3_7, s2_13)."""
-    geo = textx.geocode(url, text)
-    lat = geo["lat"].to_numpy()
-    lon = geo["lon"].to_numpy()
-    return pd.DataFrame(
-        {
-            "lat": lat,
-            "lon": lon,
-            "geocode_src": geo["geocode_src"].to_numpy(dtype=object),
-            "h3_7": _cell(lat, lon, cellindex.latlng_to_cell, H3_RES),
-            "s2_13": _cell(lat, lon, s2.latlng_to_cell, S2_LEVEL),
-        }
+def _cells(lat: pa.Array, lon: pa.Array) -> list[pa.Array]:
+    """(h3_7, s2_13)."""
+    return [
+        _cell(lat, lon, cellindex.latlng_to_cell, H3_RES),
+        _cell(lat, lon, s2.latlng_to_cell, S2_LEVEL),
+    ]
+
+
+def _geocode_cells(url: pa.Array, text: pa.Array) -> pa.StructArray:
+    """textx.geocode_arrow → (lat, lon, geocode_src, h3_7, s2_13)."""
+    geo = textx.geocode_arrow(url, text)
+    lat, lon = geo.field("lat"), geo.field("lon")
+    return pa.StructArray.from_arrays(
+        [lat, lon, geo.field("geocode_src"), *_cells(lat, lon)],
+        names=GEOCODE_CELLS_SCHEMA.fieldNames(),
     )
 
 
@@ -85,39 +80,38 @@ def enrich_struct(html: pd.Series, url: pd.Series, text: pd.Series) -> pd.DataFr
     """The with-text assign kernel: extract_text + geocode + H3 res-7 +
     S2 level-13 in one Arrow pass (tile_assign.enrich_pages with
     ``with_text=True``)."""
-    out = _geocode_cells(url, text)
+    geo = _geocode_cells(*(pa.array(s, type=pa.string(), from_pandas=True) for s in (url, text)))
+    # nullable Int64 keeps the cell ids exact (float64 would round them)
+    out = pa.RecordBatch.from_struct_array(geo).to_pandas(
+        types_mapper={pa.int64(): pd.Int64Dtype()}.get
+    )
     out.insert(0, "extracted_text", textx.extract_text(html).to_numpy(dtype=object))
     return out
 
 
-@pandas_udf(GEOCODE_CELLS_SCHEMA)
-def geocode_and_cells(url: pd.Series, text: pd.Series) -> pd.DataFrame:
+@arrow_udf(GEOCODE_CELLS_SCHEMA)
+def geocode_and_cells(url: pa.Array, text: pa.Array) -> pa.Array:
     """enrich_struct without the text: (url, text) → (lat, lon,
-    geocode_src, h3_7, s2_13) in one Arrow pass.  The engine's only
-    geocoder: batch assign, streaming ingest and the entry queries all
-    run it, so a page gets the same cell on every path."""
+    geocode_src, h3_7, s2_13) in one Arrow pass, no pandas.  The
+    engine's only geocoder: batch assign, streaming ingest and the entry
+    queries all run it, so a page gets the same cell on every path."""
     return _geocode_cells(url, text)
 
 
-@pandas_udf(CELLS_ONLY_SCHEMA)
-def cells_only(lat: pd.Series, lon: pd.Series) -> pd.DataFrame:
+@arrow_udf(CELLS_ONLY_SCHEMA)
+def cells_only(lat: pa.Array, lon: pa.Array) -> pa.Array:
     """(lat, lon) → (h3_7, s2_13): 16 bytes/row each way across the
     Arrow channel, for callers that already hold coordinates."""
-    return pd.DataFrame(
-        {
-            "h3_7": _cell(lat, lon, cellindex.latlng_to_cell, H3_RES),
-            "s2_13": _cell(lat, lon, s2.latlng_to_cell, S2_LEVEL),
-        }
-    )
+    return pa.StructArray.from_arrays(_cells(lat, lon), names=CELLS_ONLY_SCHEMA.fieldNames())
 
 
-@pandas_udf(T.LongType())
-def h3_cell(lat: pd.Series, lon: pd.Series) -> pd.Series:
+@arrow_udf(T.LongType())
+def h3_cell(lat: pa.Array, lon: pa.Array) -> pa.Array:
     return _cell(lat, lon, cellindex.latlng_to_cell, H3_RES)
 
 
-@pandas_udf(T.LongType())
-def s2_cell(lat: pd.Series, lon: pd.Series) -> pd.Series:
+@arrow_udf(T.LongType())
+def s2_cell(lat: pa.Array, lon: pa.Array) -> pa.Array:
     return _cell(lat, lon, s2.latlng_to_cell, S2_LEVEL)
 
 

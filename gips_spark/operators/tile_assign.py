@@ -10,13 +10,16 @@ Plan shape (scale notes):
   read pages without `html` (it is read only when the caller keeps
   `extracted_text`, ``with_text=True``)
   → ONE Arrow UDF (geocode+h3+s2, or extract+geocode+h3+s2 with text;
-    one Python hop)
+    one Python hop); the salt sample's pass runs over ceil(P × sample)
+    partitions of a P-partition scan
   → broadcast-join the salt plan (tiny) → salt column
   → repartition(cell_prefix, salt)  ← the single explicit
     shuffle, whose layout downstream stages reuse (SURVEY.md §3)
 """
 
 from __future__ import annotations
+
+import math
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -62,17 +65,14 @@ def enrich_pages(
     other column is identical in both forms.
     """
     def chain(df: DataFrame, text: bool = with_text) -> DataFrame:
-        # r6 (guide §1/§4, measured in bench_extra + OPTIMIZATION_r06.md):
-        # geocode AND markup strip moved from JVM expressions INTO the
-        # fused Arrow kernel.  The JVM geocode cascade evaluated every
-        # regex once per output column (lat/lon/src are three CaseWhen
-        # trees, no cross-column subexpression elimination → ~117
-        # µs/row vs ~6 µs/row for the vectorized pandas rule table),
-        # and the JVM strip chain cost 29 core-s/1M rows vs ~5 for the
-        # Python re equivalent — java.util.regex loses to CPython's sre
-        # on every pattern here.  Shipping raw html (+185 B/row on the
-        # Arrow channel) costs less than either.  Outputs pinned by the
-        # goldens + oracle gate.
+        # geocode (and, with text, the markup strip) run inside the one
+        # fused Arrow kernel, not as JVM expressions: the JVM geocode
+        # cascade evaluated every regex once per output column (lat/lon/
+        # src are three CaseWhen trees, no cross-column subexpression
+        # elimination → ~117 µs/row), and the JVM strip chain cost 29
+        # core-s/1M rows vs ~5 for the Python re equivalent.  The
+        # geocoder runs RE2 (pyarrow compute) on the oracle's own
+        # pattern strings.  Outputs pinned by the goldens + oracle gate.
         if text:
             out = (
                 df.withColumn(
@@ -114,12 +114,18 @@ def enrich_pages(
         # sample the RAW pages, then enrich the 2% subset: Catalyst does
         # not push `sample` below ArrowEvalPython, so sampling e itself
         # would cost a FULL second UDF pass (measured: exactly halves
-        # single-pass throughput at local[8]).  r6: the sample pass uses
-        # the assignment-only chain — the salt histogram needs h3_7
-        # only, so the 2% subset skips html strip + text extraction
-        # (identical h3_7 values, hence an identical salt plan).
+        # single-pass throughput at local[8]).  The sample pass uses the
+        # assignment-only chain — the salt histogram needs h3_7 only.
+        # Every Python task pays a fixed start-up cost whatever its row
+        # count, so the sample is moved into k = ceil(P × salt_sample)
+        # partitions first (P: the scan's), about one main-pass task's
+        # rows each.  The rows are drawn before the exchange, so the
+        # plan is the same; `coalesce` would instead pull the whole
+        # scan into k tasks.
+        k = max(1, math.ceil(pages.rdd.getNumPartitions() * salt_sample))
+        sample = pages.sample(fraction=salt_sample, seed=42).repartition(k)
         plan = saltplan.salt_plan_presampled(
-            chain(pages.sample(fraction=salt_sample, seed=42), text=False),
+            chain(sample, text=False),
             "h3_7",
             target_rows=salt_target_rows,
             fraction=salt_sample,

@@ -22,6 +22,7 @@ from __future__ import annotations
 
 import contextlib
 import io
+import math
 import os
 import sys
 
@@ -41,6 +42,27 @@ def formatted(df) -> str:
     return buf.getvalue()
 
 
+def _kernel_input_partitions(df) -> list:
+    """For each ArrowEvalPython node of `df`'s physical plan: the
+    partition count of the first Exchange below it, or "scan" when no
+    exchange lies between it and its leaf."""
+    found = []
+
+    def walk(node):
+        if node.nodeName() == "ArrowEvalPython":
+            c = node.child()
+            while c.nodeName() != "Exchange" and c.children().size() == 1:
+                c = c.children().apply(0)
+            found.append(
+                c.outputPartitioning().numPartitions() if c.nodeName() == "Exchange" else "scan"
+            )
+        for i in range(node.children().size()):
+            walk(node.children().apply(i))
+
+    walk(df._jdf.queryExecution().sparkPlan())
+    return found
+
+
 def run_audit(spark, pages, salt_target_rows: int = 5000):
     """All plan checks against a PARQUET-backed `pages` DataFrame.
     Returns (sections, checks); persists nothing permanently (the one
@@ -50,11 +72,10 @@ def run_audit(spark, pages, salt_target_rows: int = 5000):
 
     # --- single-pass assign FIRST: nothing may be cached yet, so the
     # "no InMemoryRelation" check is meaningful without clearCache
-    sp1 = formatted(
-        tile_assign.enrich_pages(
-            pages, salt_target_rows=salt_target_rows, salt_sample=0.02
-        )
+    sp1_df = tile_assign.enrich_pages(
+        pages, salt_target_rows=salt_target_rows, salt_sample=0.02
     )
+    sp1 = formatted(sp1_df)
     sections["assign single-pass (sampled salt, hash partition)"] = sp1
     checks.append(
         ("assign-sp: no InMemoryRelation (no persist)", "InMemoryRelation" not in sp1)
@@ -70,11 +91,18 @@ def run_audit(spark, pages, salt_target_rows: int = 5000):
          and "enrich_struct" not in sp1
          and not any("html" in ln for ln in read_schemas))
     )
+    # the main pass's kernel reads the scan's own partitions; the 2%
+    # sample's kernel runs behind an exchange into ceil(P × 0.02) of
+    # them, so it pays the fixed per-Python-task cost k times, not P
+    k = math.ceil(pages.rdd.getNumPartitions() * 0.02)
+    checks.append(
+        (f"assign-sp: main kernel on the scan's partitions, sample kernel on {k}",
+         sorted(_kernel_input_partitions(sp1_df), key=str) == [k, "scan"])
+    )
 
     # with_text=True: the main pass is the fused with-text kernel
     # (strip + extract + geocode + cells in one Arrow UDF; the JVM
-    # regex paths lose to CPython sre on every pattern here, see
-    # OPTIMIZATION_r06.md)
+    # regex paths cost more than the kernel, see OPTIMIZATION_r06.md)
     spt = formatted(
         tile_assign.enrich_pages(
             pages, salt_target_rows=salt_target_rows, salt_sample=0.02, with_text=True

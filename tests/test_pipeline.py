@@ -68,6 +68,44 @@ def test_with_text_minus_text_equals_default(pages, salt_sample):
     assert b.exceptAll(a).count() == 0
 
 
+def test_geocode_and_cells_nulls_not_nan(pages):
+    """The Arrow kernel carries unresolved rows as null through Arrow
+    validity: lat/lon/h3_7/s2_13 are null exactly where geocode_src is
+    'none', and no row holds a NaN."""
+    from gips_spark.functions import udfs
+
+    g = pages.select(
+        udfs.geocode_and_cells(F.col("url"), F.col("text")).alias("g")
+    ).select("g.*")
+    none = F.col("geocode_src") == "none"
+    mismatch = F.lit(False)
+    for c in ("lat", "lon", "h3_7", "s2_13"):
+        mismatch = mismatch | (F.col(c).isNull() != none)
+    assert g.where(none).count() > 0
+    assert g.where(mismatch).count() == 0
+    assert g.where(F.isnan("lat") | F.isnan("lon")).count() == 0
+
+
+def test_salt_plan_same_over_repartitioned_sample(pages):
+    """enrich_pages moves the salt sample into few partitions before the
+    kernel; the rows are drawn before that exchange, so the salt plan
+    over the repartitioned sample is the plan over the sample itself,
+    the null cell's row included."""
+    from gips_spark.functions import udfs
+    from gips_spark.plans import salt as saltplan
+
+    def plan(df):
+        cells = df.select(udfs.geocode_and_cells(F.col("url"), F.col("text")).h3_7.alias("h3_7"))
+        return saltplan.salt_plan_presampled(cells, "h3_7", target_rows=20, fraction=0.02)
+
+    sample = pages.sample(fraction=0.02, seed=42)
+    a, b = plan(sample), plan(sample.repartition(1))
+    assert a.where(F.col("h3_7").isNull()).count() == 1
+    assert a.count() > 1
+    assert a.exceptAll(b).count() == 0
+    assert b.exceptAll(a).count() == 0
+
+
 def test_enrich_partition_invariant(spark, pages):
     """Same assignments regardless of input partitioning (determinism)."""
     a = tile_assign.enrich_pages(pages.repartition(3), do_repartition=False)

@@ -1,8 +1,19 @@
 """Text kernel tests: extraction byte-exactness, geocoder rules, analysis."""
 
+import os
+import sys
+
+import duckdb
+import numpy as np
 import pandas as pd
+import pytest
+from hypothesis import given, settings
+from hypothesis import strategies as st
 
 from gips_spark.functions import textx
+
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+import __spark_entry__ as entry  # noqa: E402
 
 
 def test_extract_text_golden():
@@ -111,10 +122,9 @@ def test_geocode_coord_separators_match_duckdb():
     """The coord_text rule agrees with DuckDB's RE2 `regexp_extract` on
     the same pattern (the oracle SQL's) for every ASCII whitespace
     separator after the comma, not only a space.  A `", "` prefilter
-    once dropped the tab/newline phrases."""
-    import duckdb
-
-    seps = [" ", "\t", "\n", "\r", "\f", "", "  "]
+    once dropped the tab/newline phrases.  RE2's \\s is [\\t\\n\\f\\r ],
+    so \\v and U+00A0 (which Python re's \\s takes) do not match."""
+    seps = [" ", "\t", "\n", "\r", "\f", "", "  ", "\v", "\xa0"]
     text = pd.Series([f"observed at 41.8719,{sep}-12.5674 downtown" for sep in seps])
     url = pd.Series(["https://x.example.com/p"] * len(seps))
     got = textx.geocode(url, text)
@@ -125,12 +135,95 @@ def test_geocode_coord_separators_match_duckdb():
         "FROM df ORDER BY i"
     ).df()
     hit = (want["la"] != "").to_numpy()
-    assert hit.tolist() == [True] * 5 + [False, False]
+    assert hit.tolist() == [True] * 5 + [False] * 4
     assert got["geocode_src"].tolist() == [
         "coord_text" if h else "none" for h in hit
     ]
     assert got["lat"][hit].tolist() == want["la"][hit].astype(float).tolist()
     assert got["lon"][hit].tolist() == want["lo"][hit].astype(float).tolist()
+
+
+def _oracle(url: pd.Series, text: pd.Series) -> pd.DataFrame:
+    """The geocode_docs oracle SQL (DuckDB, RE2) over the given url/text
+    instead of its synthetic documents → (geocode_src, lat, lon)."""
+    inp = pd.DataFrame({"doc_id": range(len(url)), "url": url, "txt": text})  # noqa: F841
+    rule_table = entry._geocode_docs_oracle().split("), cities(", 1)[1]
+    sql = "WITH d AS (SELECT doc_id, url, txt FROM inp), cities(" + rule_table
+    return duckdb.sql(sql + " ORDER BY doc_id").df()
+
+
+def _assert_matches_oracle(url: pd.Series, text: pd.Series) -> None:
+    got = textx.geocode(url, text)
+    want = _oracle(url, text)
+    assert got["geocode_src"].tolist() == want["geocode_src"].tolist()
+    for c in ("lat", "lon"):
+        g, w = np.round(got[c].to_numpy(), 4), want[c].to_numpy(dtype=float)
+        assert np.array_equal(g, w, equal_nan=True), (c, g, w)
+
+
+@pytest.mark.parametrize(
+    "text, src",
+    [
+        # RE2's \d is ASCII only
+        ("observed at \u0664\u0661.8719, 12.5674", "none"),
+        # RE2's \b is an ASCII word boundary: é is not a word character
+        ("x \u00e9cairo y", "city_text"),
+        # lower() maps U+0130 to a plain i, as DuckDB's does
+        ("report from \u0130stanbul", "city_text"),
+    ],
+)
+def test_geocode_re2_divergences_match_duckdb(text, src):
+    """Inputs on which Python re and RE2 read the shared patterns
+    differently: the geocoder gives the DuckDB oracle's answer."""
+    url = pd.Series(["https://x.example.com/p"])
+    assert textx.geocode(url, pd.Series([text]))["geocode_src"].tolist() == [src]
+    _assert_matches_oracle(url, pd.Series([text]))
+
+
+_SLUGS = [c[0] for c in textx.GAZETTEER]
+_SEPS = [" ", "", "  ", "\t", "\n", "\r", "\f", "\v", "\xa0", ", ", "/"]
+_NOISE = ["the", "Report", "x", "plat=1.5", "\u00e9", "\u0664\u0661", "\u0130", "-", ".", "?", "chi"]
+
+
+@st.composite
+def _number(draw):
+    whole = draw(st.integers(0, 200))
+    frac = draw(st.integers(0, 99999))
+    places = draw(st.sampled_from([4, 4, 4, 3, 5]))
+    sign = draw(st.sampled_from(["", "", "-"]))
+    return f"{sign}{whole}.{frac % 10 ** places:0{places}d}"
+
+
+@st.composite
+def _url(draw):
+    host = draw(st.sampled_from(["https://www1.example", "http://a.b.example", "https://x"]))
+    tld = draw(st.sampled_from([c[0] for c in textx.CCTLD_CENTROIDS[:6]] + ["com", "xy", "io", "DE"]))
+    path = draw(st.lists(st.sampled_from(_SLUGS + _NOISE), max_size=3))
+    url = f"{host}.{tld}/" + "/".join(path) + draw(st.sampled_from(["", "/", "?", "/p1"]))
+    if draw(st.booleans()):
+        url += f"?lat={draw(_number())}&lon={draw(_number())}"
+    return url
+
+
+@st.composite
+def _text(draw):
+    piece = st.one_of(
+        st.sampled_from(_NOISE),
+        st.sampled_from(_SLUGS).map(lambda s: s.replace("-", " ")),
+        st.sampled_from(_SLUGS).map(lambda s: s.replace("-", " ").title()),
+        st.builds(lambda a, sep, b: f"{a},{sep}{b}", _number(), st.sampled_from(_SEPS), _number()),
+    )
+    parts = draw(st.lists(st.tuples(piece, st.sampled_from(_SEPS)), max_size=4))
+    return "".join(p + sep for p, sep in parts)
+
+
+@settings(max_examples=150, deadline=None, derandomize=True)
+@given(st.lists(st.tuples(_url(), _text()), min_size=1, max_size=16))
+def test_geocode_matches_duckdb_oracle_generated(rows):
+    """Generated urls/texts built from gazetteer slugs, coordinate
+    phrases, separators and noise: the geocoder equals the oracle SQL
+    (the same pattern strings under DuckDB's RE2) row for row."""
+    _assert_matches_oracle(pd.Series([u for u, _ in rows]), pd.Series([t for _, t in rows]))
 
 
 def test_lang_id():
