@@ -1,7 +1,7 @@
 """Pluggable cell-indexer seam — the H3 migration runbook's code half.
 
-The engine's tile ids come from the 3-function interface
-(`latlng_to_cell`, `cell_to_latlng`, `k_ring`).  h3lite implements it
+The engine's tile ids come from the 2-function interface
+(`latlng_to_cell`, `cell_to_latlng`).  h3lite implements it
 with engine-canonical base cells (the documented deviation — canonical
 H3's 122+540-entry base-cell tables are unobtainable in-sandbox, see
 h3lite.py docstring).  This module makes the implementation swappable
@@ -53,14 +53,13 @@ class _EngineBackend:
     name = "engine"
     latlng_to_cell = staticmethod(h3lite.latlng_to_cell)
     cell_to_latlng = staticmethod(h3lite.cell_to_latlng)
-    k_ring = staticmethod(h3lite.k_ring)
 
 
 class _PermBackend:
     """Engine indexing through an id bijection (test-only).
 
     A pure relabeling: latlng_to_cell permutes on the way out;
-    cell_to_latlng / k_ring unpermute before touching engine internals
+    cell_to_latlng unpermutes before touching engine internals
     (permuted ids must never reach h3lite's decoders directly)."""
 
     name = "testperm"
@@ -72,10 +71,6 @@ class _PermBackend:
     @staticmethod
     def cell_to_latlng(h):
         return h3lite.cell_to_latlng(np.asarray(h, dtype=np.int64) ^ _PERM_MASK)
-
-    @staticmethod
-    def k_ring(h: int, k: int) -> np.ndarray:
-        return h3lite.k_ring(int(np.int64(h) ^ _PERM_MASK), k) ^ _PERM_MASK
 
 
 class _RealH3Backend:
@@ -108,11 +103,6 @@ class _RealH3Backend:
             np.array([p[1] for p in pts], dtype=np.float64),
         )
 
-    def k_ring(self, h: int, k: int) -> np.ndarray:
-        h3 = self._h3
-        cells = h3.grid_disk(h3.int_to_str(int(h) & 0xFFFFFFFFFFFFFFFF), k)
-        return np.array(sorted(int(h3.str_to_int(c)) for c in cells), dtype=np.int64)
-
 
 def _resolve(name: str):
     if name == "engine":
@@ -128,8 +118,7 @@ def _resolve(name: str):
 
 BACKEND = _resolve(os.environ.get("GIPS_SPARK_H3_BACKEND", "engine"))
 
-#: the 3-function interface operators import (module-level, resolved once
+#: the 2-function interface operators import (module-level, resolved once
 #: per process from the env var)
 latlng_to_cell = BACKEND.latlng_to_cell
 cell_to_latlng = BACKEND.cell_to_latlng
-k_ring = BACKEND.k_ring

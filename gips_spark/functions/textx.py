@@ -187,13 +187,14 @@ _NUM_ENTITY_RE = re.compile(r"&#(\d+);")
 def extract_text(html: pd.Series) -> pd.Series:
     """FROZEN deterministic html→text (byte-identical per url invariant).
 
-    Accepts a Series of bytes or str; returns str.  Pipeline order is
-    part of the contract: comments → script/style → tags → entities →
-    whitespace-normalize → strip.
+    Accepts a Series of bytes or str, nulls allowed (→ ""); returns str.
+    Pipeline order is part of the contract: comments → script/style →
+    tags → entities → whitespace-normalize → strip.
     """
     s = html
-    if len(s) and isinstance(s.iloc[0], (bytes, bytearray)):
-        s = s.map(lambda b: b.decode("utf-8", errors="replace"))
+    first = s.first_valid_index()
+    if first is not None and isinstance(s[first], (bytes, bytearray)):
+        s = s.map(lambda b: b.decode("utf-8", errors="replace"), na_action="ignore")
     s = s.astype("string").fillna("")
     s = s.str.replace(_COMMENT_RE, " ", regex=True)
     s = s.str.replace(_SCRIPT_STYLE_RE, " ", regex=True)

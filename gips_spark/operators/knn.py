@@ -1,28 +1,42 @@
-"""M4 — exact kNN join via two-level cell-directory pruning + ring expansion.
+"""M4 — exact kNN join: one two-level pruning algorithm, two placements.
 
 Semantics (FIXTURES.md golden): for each query point, the k nearest
 geocoded pages by exact haversine, ties broken by url ascending.
 
-Plan (SURVEY.md J5, adapted so exactness never depends on hex-grid edge
-geometry — see functions/h3lite.py docstring):
+Algorithm (SURVEY.md J5, adapted so exactness never depends on hex-grid
+edge geometry — see functions/h3lite.py docstring).  The pruning is two
+batch kernels over pandas frames; each computes the same thing wherever
+it runs:
 
- 1. COARSE pass: roll the res-7 cell directory up to res-4 prefixes
-    (one groupBy, distributed) and collect only that — worldwide res-4
-    prefixes are O(10^4-10^5) even at 10^12 rows, vs millions of res-7
-    cells.  Per query, prune prefixes with a RIGOROUS spherical lower
-    bound to each prefix bbox (geom.sphere_min_dist_to_rect_m — exact
-    near poles and across the antimeridian, per VERDICT r1 advice) and
-    a rigorous upper bound (antipode identity); keep prefixes whose
-    lower bound ≤ D_coarse, the k-covering upper bound.
- 2. FINE pass: collect ONLY the res-7 slice of surviving prefixes
-    (filtered toPandas — the driver never sees the full directory).
-    Re-prune at res 7; final radius R = min(D_fine, D_coarse) still
-    guarantees ≥k rows inside R, and every cell outside the slice has
-    lb ≥ its prefix's lb > D_coarse ≥ R — closure is exact.
- 3. Broadcast (query_id, h3_7) candidate pairs; equi-join pages on
-    h3_7 (JVM-side); exact haversine as a Column expression (codegen,
-    no Arrow hop); Window top-k per query (Catalyst rewrites
+ 1. COARSE (`_coarse_survivors`): roll the res-7 cell directory up to
+    res-4 prefixes (one groupBy) — worldwide res-4 prefixes are
+    O(10^4-10^5) even at 10^12 rows, vs millions of res-7 cells.  Per
+    query, prune prefixes with a RIGOROUS spherical lower bound to each
+    prefix bbox (geom.sphere_min_dist_to_rect_m — exact near poles and
+    across the antimeridian) and a rigorous upper bound; keep prefixes
+    whose lower bound ≤ D_coarse, the k-covering upper bound.  One row
+    per (query, surviving prefix).
+ 2. FINE (`_fine_select`): over the res-7 cells of each query's
+    surviving prefixes, re-prune at res 7; the final radius R =
+    min(D_fine, D_coarse) still guarantees ≥k rows inside R, and every
+    cell outside those prefixes has lb ≥ its prefix's lb > D_coarse ≥ R
+    — closure is exact.
+ 3. Equi-join pages to the (query_id, h3_7) candidates on h3_7
+    (JVM-side); exact haversine as a Column expression (codegen, no
+    Arrow hop); Window top-k per query (Catalyst rewrites
     row_number()<=k into per-partition top-k).
+
+Placements (same candidates, same output contract):
+
+* `knn_join` — driver: collects the queries, the res-4 rollup and only
+  the res-7 slice of surviving prefixes (never the full directory),
+  runs both kernels on the driver and broadcasts candidates and queries
+  into the join.
+* `knn_join_distributed` — executors: the rollup is broadcast, the two
+  kernels are the bodies of two mapInPandas stages (over query
+  partitions, then over query-hash partitions of the prefix equi-join
+  with the directory), and the candidate joins run shuffle-side.  The
+  driver holds only the rollup at any query count.
 
 The sparse tail needs no full-directory fallback: the coarse pass IS a
 global distance-ordered expansion, so a query in an empty region simply
@@ -35,10 +49,10 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 from pyspark.sql import Window as W
 
 from gips_spark.functions.geom import (
-    haversine_m,
     sphere_max_dist_to_rect_m,
     sphere_min_dist_to_rect_m,
 )
@@ -52,31 +66,6 @@ PREFIX_SHIFT = 33
 #: and lb/ub of a degenerate bbox come from different code paths.  1 m
 #: only widens the candidate superset; exactness is unaffected.
 _EPS_M = 1.0
-
-
-def _rect_bounds(pdf: pd.DataFrame, qla: float, qlo: float):
-    """Rigorous (lb, ub) meters from a query to every bbox row of `pdf`."""
-    args = (
-        pdf["min_lat"].to_numpy(),
-        pdf["max_lat"].to_numpy(),
-        pdf["min_lon"].to_numpy(),
-        pdf["max_lon"].to_numpy(),
-    )
-    lb = sphere_min_dist_to_rect_m(qla, qlo, *args)
-    ub = sphere_max_dist_to_rect_m(qla, qlo, *args)
-    return lb, ub
-
-
-def _covering_radius(lb: np.ndarray, ub: np.ndarray, n: np.ndarray, k: int) -> float:
-    """Smallest D = max-ub over the lb-ordered covering set with ≥k rows.
-
-    Guarantee: at least k rows lie within distance D of the query."""
-    order = np.argsort(lb, kind="stable")
-    cum = np.cumsum(n[order])
-    take = min(int(np.searchsorted(cum, k) + 1), len(order))
-    if take == 0:
-        return 0.0
-    return float(ub[order[:take]].max()) + _EPS_M
 
 
 def build_coarse_directory(directory: DataFrame, cell_col: str = "h3_7") -> DataFrame:
@@ -192,8 +181,7 @@ def _coarse_prune_block(
     ub_blk = (dqc + crad[None, :]).astype(np.float32)  # proxy only
     # (1) per-row covering set in (proxy) disk-ub order.  Full per-row
     # argsort of P prefixes was the hot spot; the covering set is tiny,
-    # so argpartition the T smallest ubs, sort only those, and fall back
-    # to a full sort ONLY for rows whose first T prefixes hold <k rows.
+    # so argpartition the T smallest ubs and sort only those.
     T = int(min(P, max(64, 4 * q_k.max())))
     if T < P:
         part = np.argpartition(ub_blk, T - 1, axis=1)[:, :T]
@@ -229,87 +217,32 @@ def _coarse_prune_block(
     return s_rows[keep], c_ids[s_cols[keep]], dc
 
 
-def _surviving_slice(
-    directory: DataFrame, queries_pdf: pd.DataFrame
-) -> tuple[pd.DataFrame, dict, dict, int]:
-    """Coarse(res-4) pruning shared by both kNN plans: returns the
-    collected res-7 slice of SURVIVING prefixes only (the driver never
-    sees the full directory), the per-query surviving-prefix sets, the
-    per-query coarse covering radii, and the coarse rollup size."""
-    coarse_pdf = build_coarse_directory(directory).toPandas()
-    c_arrays = _coarse_arrays(coarse_pdf)
-
-    q_lat = queries_pdf["lat"].to_numpy(dtype=np.float64)
-    q_lon = queries_pdf["lon"].to_numpy(dtype=np.float64)
-    q_k = queries_pdf["k"].to_numpy(dtype=np.int64)
-    qids = queries_pdf["query_id"].to_numpy()
-
-    surviving: dict[object, np.ndarray] = {}
-    d_coarse: dict[object, float] = {}
-    union: set[int] = set()
+def _coarse_survivors(c_arrays, qpdf: pd.DataFrame) -> pd.DataFrame:
+    """COARSE kernel: res-4 pruning of a query frame (query_id, lat, lon,
+    k), BLOCK queries at a time → one row per (query, surviving prefix)
+    with query_id, lat, lon, k, prefix and d_coarse (the query's coarse
+    covering radius)."""
+    q_lat = qpdf["lat"].to_numpy(np.float64)
+    q_lon = qpdf["lon"].to_numpy(np.float64)
+    q_k = qpdf["k"].to_numpy(np.int64)
+    g, prefix, d_coarse = [np.empty(0, np.int64)], [np.empty(0, np.int64)], [np.empty(0)]
     for b0 in range(0, len(q_lat), BLOCK):
-        sl = slice(b0, min(b0 + BLOCK, len(q_lat)))
-        rows, prefs, dc = _coarse_prune_block(
-            c_arrays, q_lat[sl], q_lon[sl], q_k[sl]
-        )
-        counts = np.bincount(rows, minlength=dc.shape[0])
-        for i, keep in enumerate(np.split(prefs, np.cumsum(counts)[:-1])):
-            surviving[qids[b0 + i]] = keep
-            d_coarse[qids[b0 + i]] = float(dc[i])
-        union.update(int(p) for p in np.unique(prefs))
-
-    slice_df = directory.where(
-        F.shiftright(F.col("h3_7"), PREFIX_SHIFT).isin(sorted(union))
+        sl = slice(b0, b0 + BLOCK)
+        rows, prefs, dc = _coarse_prune_block(c_arrays, q_lat[sl], q_lon[sl], q_k[sl])
+        g.append(b0 + rows)
+        prefix.append(prefs)
+        d_coarse.append(dc[rows])
+    g = np.concatenate(g)
+    return pd.DataFrame(
+        {
+            "query_id": qpdf["query_id"].to_numpy()[g],
+            "lat": q_lat[g],
+            "lon": q_lon[g],
+            "k": q_k[g],
+            "prefix": np.concatenate(prefix),
+            "d_coarse": np.concatenate(d_coarse),
+        }
     )
-    slice_pdf = slice_df.toPandas()
-    return slice_pdf, surviving, d_coarse, len(coarse_pdf)
-
-
-def _fine_pairs(slice_pdf: pd.DataFrame, queries_pdf: pd.DataFrame, surviving: dict):
-    """(query, slice-cell) pairs restricted to each query's surviving
-    prefixes, with rigorous rect bounds computed in ONE vectorized call
-    over all pairs (VERDICT r3 next #2 — no per-query _rect_bounds).
-
-    Returns arrays sorted by (query_idx, lb): (qi, ci, lb, ub, n,
-    seg_starts, seg_counts) where qi indexes queries_pdf positionally,
-    ci indexes slice_pdf rows, and seg_starts/seg_counts delimit each
-    query's contiguous segment (counts may be 0)."""
-    f_ids = slice_pdf["h3_7"].to_numpy()
-    f_pref = f_ids >> PREFIX_SHIFT
-    Q = len(queries_pdf)
-    surv_qi = np.concatenate(
-        [np.full(len(surviving[qid]), i, dtype=np.int64)
-         for i, qid in enumerate(queries_pdf["query_id"])]
-        or [np.empty(0, np.int64)]
-    )
-    surv_pref = np.concatenate(
-        [np.asarray(surviving[qid], dtype=np.int64)
-         for qid in queries_pdf["query_id"]]
-        or [np.empty(0, np.int64)]
-    )
-    pairs = pd.DataFrame({"qi": surv_qi, "pref": surv_pref}).merge(
-        pd.DataFrame({"pref": f_pref, "ci": np.arange(len(slice_pdf))}), on="pref"
-    )
-    qi = pairs["qi"].to_numpy()
-    ci = pairs["ci"].to_numpy()
-    q_lat = queries_pdf["lat"].to_numpy(dtype=np.float64)
-    q_lon = queries_pdf["lon"].to_numpy(dtype=np.float64)
-    la1 = slice_pdf["min_lat"].to_numpy()
-    la2 = slice_pdf["max_lat"].to_numpy()
-    lo1 = slice_pdf["min_lon"].to_numpy()
-    lo2 = slice_pdf["max_lon"].to_numpy()
-    lb = sphere_min_dist_to_rect_m(
-        q_lat[qi], q_lon[qi], la1[ci], la2[ci], lo1[ci], lo2[ci]
-    )
-    ub = sphere_max_dist_to_rect_m(
-        q_lat[qi], q_lon[qi], la1[ci], la2[ci], lo1[ci], lo2[ci]
-    )
-    o = np.lexsort((lb, qi))
-    qi, ci, lb, ub = qi[o], ci[o], lb[o], ub[o]
-    n = slice_pdf["n_rows"].to_numpy()[ci]
-    seg_counts = np.bincount(qi, minlength=Q)
-    seg_starts = np.concatenate([[0], np.cumsum(seg_counts)[:-1]])
-    return qi, ci, lb, ub, n, seg_starts, seg_counts
 
 
 def _covering_radii_seg(
@@ -317,59 +250,80 @@ def _covering_radii_seg(
     qi: np.ndarray, seg_starts: np.ndarray, seg_counts: np.ndarray,
     q_k: np.ndarray,
 ) -> np.ndarray:
-    """Per-query covering radius over lb-sorted segments — the
-    vectorized form of :func:`_covering_radius` across all queries at
-    once (argsort is pre-done by _fine_pairs' lexsort; here cumsum /
-    searchsorted / max run as segment ops)."""
-    Q = len(seg_counts)
-    if len(lb) == 0:
-        return np.zeros(Q)
+    """Per-query covering radius over (query, lb)-sorted, non-empty
+    segments: the max ub over a query's cells in lb order up to the
+    first that brings the running row count to ≥k, + _EPS_M.  At least
+    k rows (or all of the segment's) lie within it.  cumsum /
+    searchsorted / max run as segment ops over all queries at once."""
     cum = np.cumsum(n)
-    seg_base = np.where(seg_starts > 0, cum[np.maximum(seg_starts - 1, 0)], 0)
-    within = cum - np.repeat(seg_base, seg_counts)
+    within = cum - np.repeat(cum[seg_starts] - n[seg_starts], seg_counts)
     low = (within < np.repeat(q_k, seg_counts)).astype(np.int64)
-    pos = np.zeros(Q, dtype=np.int64)
-    nz = seg_counts > 0
-    if nz.any():
-        pos[nz] = np.add.reduceat(low, seg_starts[nz])
-    take = np.minimum(pos + 1, seg_counts)
+    take = np.minimum(np.add.reduceat(low, seg_starts) + 1, seg_counts)
     rank = np.arange(len(lb)) - np.repeat(seg_starts, seg_counts)
     cov = rank < np.repeat(take, seg_counts)
-    radii = np.zeros(Q)
+    radii = np.zeros(len(seg_counts))
     np.maximum.at(radii, qi[cov], ub[cov])
-    return np.where(seg_counts > 0, radii + _EPS_M, 0.0)
+    return radii + _EPS_M
+
+
+def _fine_select(pairs_pdf: pd.DataFrame) -> pd.DataFrame:
+    """FINE kernel: (query, res-7 cell) pairs — coarse survivors merged
+    on prefix with the directory rows of `_prefixed` — → candidate
+    (query_id, h3_7).  Rigorous rect bounds for every pair in one
+    vectorized call, the per-query covering radius D_fine, then keep
+    lb ≤ min(D_fine, D_coarse).  All pairs of a query must be in the
+    same frame."""
+    p = pairs_pdf
+    codes, uniques = pd.factorize(p["query_id"], sort=False)
+    rect = [
+        p[c].to_numpy()
+        for c in ("lat", "lon", "min_lat", "max_lat", "min_lon", "max_lon")
+    ]
+    lb = sphere_min_dist_to_rect_m(*rect)
+    ub = sphere_max_dist_to_rect_m(*rect)
+    o = np.lexsort((lb, codes))
+    qi, lb, ub = codes[o], lb[o], ub[o]
+    seg_counts = np.bincount(qi, minlength=len(uniques))
+    seg_starts = np.cumsum(seg_counts) - seg_counts
+    first = o[seg_starts]  # every query has ≥1 pair: its segment's first row
+    d_fine = _covering_radii_seg(
+        lb, ub, p["n_rows"].to_numpy()[o], qi, seg_starts, seg_counts,
+        p["k"].to_numpy(np.int64)[first],
+    )
+    radius = np.minimum(d_fine, p["d_coarse"].to_numpy()[first])
+    sel = lb <= radius[qi]
+    return pd.DataFrame(
+        {"query_id": np.asarray(uniques)[qi[sel]], "h3_7": p["h3_7"].to_numpy()[o][sel]}
+    )
+
+
+def _prefixed(directory: DataFrame) -> DataFrame:
+    """The res-7 directory rows `_fine_select` reads, keyed by prefix."""
+    return directory.select(
+        F.shiftright(F.col("h3_7"), PREFIX_SHIFT).alias("prefix"),
+        "h3_7", "n_rows", "min_lat", "max_lat", "min_lon", "max_lon",
+    )
 
 
 def _two_level_candidates(
-    spark, directory: DataFrame, queries_pdf: pd.DataFrame
-) -> tuple[pd.DataFrame, dict]:
-    """Coarse(res-4)→fine(res-7) pruning; collects only the surviving
-    res-7 slice.  Returns (candidates(query_id, h3_7), stats)."""
-    slice_pdf, surviving, d_coarse, n_coarse = _surviving_slice(
-        directory, queries_pdf
+    directory: DataFrame, queries_pdf: pd.DataFrame
+) -> tuple[pd.DataFrame, int]:
+    """Driver placement of both kernels: collect the res-4 rollup, prune,
+    collect only the res-7 slice of surviving prefixes, prune again.
+    Returns (candidates(query_id, h3_7), res-7 rows collected)."""
+    c_arrays = _coarse_arrays(build_coarse_directory(directory).toPandas())
+    surv = _coarse_survivors(c_arrays, queries_pdf)
+    slice_pdf = (
+        _prefixed(directory)
+        .where(F.col("prefix").isin(np.unique(surv["prefix"]).tolist()))
+        .toPandas()
     )
-    qi, ci, lb, ub, n, seg_starts, seg_counts = _fine_pairs(
-        slice_pdf, queries_pdf, surviving
-    )
-    q_k = queries_pdf["k"].to_numpy(dtype=np.int64)
-    d_fine = _covering_radii_seg(lb, ub, n, qi, seg_starts, seg_counts, q_k)
-    dc = np.asarray(
-        [d_coarse[qid] for qid in queries_pdf["query_id"]], dtype=np.float64
-    )
-    radius = np.minimum(d_fine, dc)
-    sel = lb <= radius[qi]
-    out = pd.DataFrame(
-        {
-            "query_id": queries_pdf["query_id"].to_numpy()[qi[sel]],
-            "h3_7": slice_pdf["h3_7"].to_numpy()[ci[sel]],
-        }
-    )
-    stats = {
-        "n_coarse": n_coarse,
-        "n_slice": len(slice_pdf),
-        "slice_rows_collected": int(len(slice_pdf)),
-    }
-    return out, stats
+    return _fine_select(surv.merge(slice_pdf, on="prefix")), len(slice_pdf)
+
+
+def _cand_schema(queries: DataFrame) -> T.StructType:
+    """(query_id, h3_7): the candidate pairs of both placements."""
+    return T.StructType([queries.schema["query_id"], T.StructField("h3_7", T.LongType())])
 
 
 def _topk(joined: DataFrame) -> DataFrame:
@@ -382,18 +336,18 @@ def _topk(joined: DataFrame) -> DataFrame:
 
 
 def _join_candidates(enriched: DataFrame, queries: DataFrame, cand: DataFrame) -> DataFrame:
+    """Pages ⋈ candidates on h3_7 ⋈ queries on query_id, + dist_m.  The
+    caller chooses the join strategy: broadcast-hinted frames, or plain
+    ones for shuffle-side joins."""
     pts = enriched.where(F.col("geocode_src") != "none").select(
         "url", "lat", "lon", "h3_7"
     )
     qdf = queries.select(
-        F.col("query_id"),
-        F.col("lat").alias("q_lat"),
-        F.col("lon").alias("q_lon"),
-        F.col("k"),
+        "query_id", F.col("lat").alias("q_lat"), F.col("lon").alias("q_lon"), "k"
     )
     return (
-        pts.join(F.broadcast(cand), "h3_7")
-        .join(F.broadcast(qdf), "query_id")
+        pts.join(cand, "h3_7")
+        .join(qdf, "query_id")
         .withColumn(
             "dist_m",
             haversine_expr(F.col("lat"), F.col("lon"), F.col("q_lat"), F.col("q_lon")),
@@ -402,104 +356,16 @@ def _join_candidates(enriched: DataFrame, queries: DataFrame, cand: DataFrame) -
 
 
 def knn_join(
-    spark,
-    enriched: DataFrame,
-    queries: DataFrame,
-    directory: DataFrame,
+    spark, enriched: DataFrame, queries: DataFrame, directory: DataFrame
 ) -> DataFrame:
     """→ (query_id, rank, url, dist_m) — exact kNN, ties by url asc.
 
-    Two-level (res-4 → res-7) directory pruning; the driver collects
-    only the coarse rollup + the surviving res-7 slice."""
-    queries_pdf = queries.toPandas()
-    cand_pdf, _ = _two_level_candidates(spark, directory, queries_pdf)
-    cand = spark.createDataFrame(cand_pdf)
-    return _topk(_join_candidates(enriched, queries, cand))
-
-
-def _kring_candidates(
-    slice_pdf: pd.DataFrame,
-    queries_pdf: pd.DataFrame,
-    surviving: dict,
-    d_coarse: dict,
-) -> pd.DataFrame:
-    """H3 k-ring candidate generation (the literal SURVEY.md J5 plan),
-    scale-fixed (VERDICT r2 'What's wrong' #1): operates on the
-    coarse-pruned SURVIVING slice only — never the full directory —
-    and rect bounds are computed per query on that query's surviving
-    subset (O(q·slice), not O(q·all-cells)).
-
-    Per query: expand rings around the query's cell until the occupied
-    (slice) cells hold ≥k rows, then CLOSE the candidate set with the
-    rigorous directory distance bound.  The closure radius is capped
-    at D_coarse (also a valid ≥k covering radius), so every cell with
-    lb ≤ radius has prefix-lb ≤ D_coarse and therefore lies inside the
-    surviving slice — exactness never depends on hex-edge geometry."""
-    from gips_spark.functions import cellindex
-
-    f_ids = slice_pdf["h3_7"].to_numpy()
-    qi, ci, lb_all, ub_all, n_all, seg_starts, seg_counts = _fine_pairs(
-        slice_pdf, queries_pdf, surviving
-    )
-    q_lat = queries_pdf["lat"].to_numpy(dtype=np.float64)
-    q_lon = queries_pdf["lon"].to_numpy(dtype=np.float64)
-    q_k = queries_pdf["k"].to_numpy(dtype=np.int64)
-    qids = queries_pdf["query_id"].to_numpy()
-    qcells = cellindex.latlng_to_cell(q_lat, q_lon, 7)
-    # fallback radii for the sparse-tail / cross-face-gap path, all
-    # queries at once (rect bounds + covering already vectorized; the
-    # remaining per-query work is ONLY the intrinsically sequential
-    # ring expansion over that query's occupied-cell set)
-    d_cover = _covering_radii_seg(
-        lb_all, ub_all, n_all, qi, seg_starts, seg_counts, q_k
-    )
-    out_q, out_c = [], []
-    for i in range(len(queries_pdf)):
-        if seg_counts[i] == 0:
-            continue
-        seg = slice(seg_starts[i], seg_starts[i] + seg_counts[i])
-        ids = f_ids[ci[seg]]
-        lb, ub, n_rows = lb_all[seg], ub_all[seg], n_all[seg]
-        n_by_cell = dict(zip(ids.tolist(), n_rows.tolist()))
-        k = int(q_k[i])
-        r = 0
-        ring_cells: list[int] = []
-        while r <= 64:
-            ring_cells = [
-                c for c in cellindex.k_ring(int(qcells[i]), r).tolist()
-                if c in n_by_cell
-            ]
-            if sum(n_by_cell[c] for c in ring_cells) >= k:
-                break
-            r += 1
-        if not ring_cells or sum(n_by_cell[c] for c in ring_cells) < k:
-            # sparse tail / cross-face gap: distance-ordered covering on
-            # the surviving subset (which holds ≥k rows by construction
-            # of the coarse covering — VERDICT r1 'What's wrong' #4)
-            radius = float(d_cover[i])
-        else:
-            sel = np.isin(ids, np.asarray(ring_cells, dtype=np.int64))
-            radius = float(ub[sel].max()) + _EPS_M
-        radius = min(radius, d_coarse[qids[i]])
-        cand = ids[lb <= radius]
-        out_q.extend([qids[i]] * len(cand))
-        out_c.extend(cand.tolist())
-    return pd.DataFrame({"query_id": out_q, "h3_7": out_c})
-
-
-def knn_join_kring(
-    spark, enriched: DataFrame, queries: DataFrame, directory: DataFrame
-) -> DataFrame:
-    """kNN via H3 k-ring expansion + broadcast candidate pruning (same
-    output contract as knn_join; tested equal to brute force).  The
-    ring closure runs on the coarse-pruned surviving slice — no
-    full-directory collect (VERDICT r2 #3)."""
-    queries_pdf = queries.toPandas()
-    slice_pdf, surviving, d_coarse, _ = _surviving_slice(directory, queries_pdf)
-    cand = spark.createDataFrame(
-        _kring_candidates(slice_pdf, queries_pdf, surviving, d_coarse)
-    )
-    return _topk(_join_candidates(enriched, queries, cand))
+    Driver placement: both pruning kernels run on the driver, which
+    collects only the queries, the coarse rollup and the surviving res-7
+    slice; candidates and queries are broadcast into the join."""
+    cand_pdf, _ = _two_level_candidates(directory, queries.toPandas())
+    cand = spark.createDataFrame(cand_pdf, _cand_schema(queries))
+    return _topk(_join_candidates(enriched, F.broadcast(queries), F.broadcast(cand)))
 
 
 def knn_join_distributed(
@@ -510,24 +376,22 @@ def knn_join_distributed(
     query_parts: int | None = None,
     stage_out: dict | None = None,
 ) -> DataFrame:
-    """kNN for query sets beyond driver memory (VERDICT r3 missing #5 /
-    next #8): NO ``queries.toPandas()`` anywhere —
+    """kNN for query sets beyond driver memory: NO ``queries.toPandas()``.
 
-    1. coarse per-query pruning runs INSIDE executors over query
-       partitions (mapInPandas; only the res-4 rollup — O(1e4-1e5)
-       rows worldwide — is collected and broadcast), emitting one row
-       per (query, surviving prefix);
-    2. fine pruning is a DISTRIBUTED prefix equi-join against the res-7
-       directory, then mapInPandas over query-hash partitions running
-       the same vectorized segment covering as the driver path;
+    Executor placement of the same kernels as knn_join:
+
+    1. `_coarse_survivors` runs INSIDE executors over query partitions
+       (mapInPandas; only the res-4 rollup — O(1e4-1e5) rows worldwide
+       — is collected and broadcast);
+    2. the survivors are equi-joined with the res-7 directory on prefix
+       (distributed), then `_fine_select` runs in mapInPandas over
+       query-hash partitions;
     3. the candidate join runs shuffle-side on h3_7 then query_id (no
        driver broadcast of per-query candidates, which scales with
        query count).
 
     Same exactness contract as knn_join (brute-force-equal); driver
     memory stays O(coarse rollup) at ANY query cardinality."""
-    from pyspark.sql import types as T
-
     coarse_pdf = build_coarse_directory(directory).toPandas()
     bc = spark.sparkContext.broadcast(coarse_pdf)
     if query_parts is None:
@@ -539,117 +403,36 @@ def knn_join_distributed(
         F.col("lon").cast("double").alias("lon"),
         F.col("k").cast("long").alias("k"),
     )
-    qid_field = q0.schema["query_id"]
     surv_schema = T.StructType(
-        [
-            qid_field,
-            T.StructField("lat", T.DoubleType()),
-            T.StructField("lon", T.DoubleType()),
-            T.StructField("k", T.LongType()),
-            T.StructField("prefix", T.LongType()),
-            T.StructField("d_coarse", T.DoubleType()),
-        ]
+        q0.schema.fields
+        + [T.StructField("prefix", T.LongType()), T.StructField("d_coarse", T.DoubleType())]
     )
 
     def coarse_stage(it):
         c_arrays = _coarse_arrays(bc.value)
         for pdf in it:
-            if not len(pdf):
-                continue
-            q_lat = pdf["lat"].to_numpy(np.float64)
-            q_lon = pdf["lon"].to_numpy(np.float64)
-            q_k = pdf["k"].to_numpy(np.int64)
-            qids = pdf["query_id"].to_numpy()
-            for b0 in range(0, len(pdf), BLOCK):
-                sl = slice(b0, min(b0 + BLOCK, len(pdf)))
-                rows, prefs, dc = _coarse_prune_block(
-                    c_arrays, q_lat[sl], q_lon[sl], q_k[sl]
-                )
-                g = b0 + rows
-                yield pd.DataFrame(
-                    {
-                        "query_id": qids[g],
-                        "lat": q_lat[g],
-                        "lon": q_lon[g],
-                        "k": q_k[g],
-                        "prefix": prefs,
-                        "d_coarse": dc[rows],
-                    }
-                )
+            if len(pdf):
+                yield _coarse_survivors(c_arrays, pdf)
 
     surv = q0.repartition(query_parts).mapInPandas(coarse_stage, surv_schema)
-    dir2 = directory.select(
-        F.shiftright(F.col("h3_7"), PREFIX_SHIFT).alias("prefix"),
-        "h3_7", "n_rows", "min_lat", "max_lat", "min_lon", "max_lon",
-    )
-    paired = surv.join(dir2, "prefix")
-
-    cand_schema = T.StructType([qid_field, T.StructField("h3_7", T.LongType())])
+    paired = surv.join(_prefixed(directory), "prefix")
 
     def fine_stage(it):
         # a partition holds COMPLETE query groups (hash-partitioned on
         # query_id below), so concatenating the partition's batches is
         # bounded by partition sizing, not query-set size
         chunks = [pdf for pdf in it if len(pdf)]
-        if not chunks:
-            return
-        pdf = pd.concat(chunks, ignore_index=True)
-        codes, uniques = pd.factorize(pdf["query_id"], sort=False)
-        lb = sphere_min_dist_to_rect_m(
-            pdf["lat"].to_numpy(), pdf["lon"].to_numpy(),
-            pdf["min_lat"].to_numpy(), pdf["max_lat"].to_numpy(),
-            pdf["min_lon"].to_numpy(), pdf["max_lon"].to_numpy(),
-        )
-        ub = sphere_max_dist_to_rect_m(
-            pdf["lat"].to_numpy(), pdf["lon"].to_numpy(),
-            pdf["min_lat"].to_numpy(), pdf["max_lat"].to_numpy(),
-            pdf["min_lon"].to_numpy(), pdf["max_lon"].to_numpy(),
-        )
-        o = np.lexsort((lb, codes))
-        qi = codes[o]
-        lb_s, ub_s = lb[o], ub[o]
-        n_s = pdf["n_rows"].to_numpy()[o]
-        ids_s = pdf["h3_7"].to_numpy()[o]
-        Q = len(uniques)
-        seg_counts = np.bincount(qi, minlength=Q)
-        seg_starts = np.concatenate([[0], np.cumsum(seg_counts)[:-1]])
-        k_u = pdf["k"].to_numpy(np.int64)[o][seg_starts]
-        dc_u = pdf["d_coarse"].to_numpy()[o][seg_starts]
-        d_fine = _covering_radii_seg(
-            lb_s, ub_s, n_s, qi, seg_starts, seg_counts, k_u
-        )
-        radius = np.minimum(d_fine, dc_u)
-        sel = lb_s <= radius[qi]
-        yield pd.DataFrame(
-            {"query_id": np.asarray(uniques)[qi[sel]], "h3_7": ids_s[sel]}
-        )
+        if chunks:
+            yield _fine_select(pd.concat(chunks, ignore_index=True))
 
     cand = paired.repartition(query_parts, "query_id").mapInPandas(
-        fine_stage, cand_schema
+        fine_stage, _cand_schema(q0)
     )
     if stage_out is not None:
         # diagnostics hook (tests/test_pipeline.py planted-hotspot skew
         # pin): expose the internal stages without changing the plan
         stage_out.update(surv=surv, paired=paired, cand=cand)
-
-    pts = enriched.where(F.col("geocode_src") != "none").select(
-        "url", "lat", "lon", "h3_7"
-    )
-    qdf = queries.select(
-        "query_id",
-        F.col("lat").alias("q_lat"),
-        F.col("lon").alias("q_lon"),
-        "k",
-    )
-    joined = (
-        pts.join(cand, "h3_7")
-        .join(qdf, "query_id")
-        .withColumn(
-            "dist_m",
-            haversine_expr(F.col("lat"), F.col("lon"), F.col("q_lat"), F.col("q_lon")),
-        )
-    )
-    return _topk(joined)
+    return _topk(_join_candidates(enriched, queries, cand))
 
 
 def knn_bruteforce(enriched: DataFrame, queries: DataFrame) -> DataFrame:
@@ -662,9 +445,4 @@ def knn_bruteforce(enriched: DataFrame, queries: DataFrame) -> DataFrame:
         "dist_m",
         haversine_expr(F.col("lat"), F.col("lon"), F.col("q_lat"), F.col("q_lon")),
     )
-    w = W.partitionBy("query_id").orderBy(F.col("dist_m").asc(), F.col("url").asc())
-    return (
-        joined.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= F.col("k"))
-        .select("query_id", "rank", "url", "dist_m")
-    )
+    return _topk(joined)

@@ -37,6 +37,8 @@ def get_spark(
 
     ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]`` (env, default 32)
     in-sandbox; on a cluster pass ``None`` and let spark-submit decide.
+    The driver heap is ``$SPARK_GRAFT_DRIVER_MEM`` if set, else
+    min(16g, physical RAM / 3); ``extra_conf`` overrides both.
     """
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
     if master is None:
@@ -50,13 +52,22 @@ def get_spark(
     builder = builder.config("spark.default.parallelism", str(n_shuffle))
     builder = builder.config("spark.ui.enabled", "false")
     builder = builder.config(
-        "spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g")
+        "spark.driver.memory",
+        os.environ.get("SPARK_GRAFT_DRIVER_MEM") or _default_driver_mem(),
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+def _default_driver_mem() -> str:
+    """min(16g, physical RAM / 3): a heap sized for the host, not past
+    it — with 16g on a 15 GB host the JVM of a 10^5-query kNN grew past
+    physical memory and the kernel killed it."""
+    phys_mb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // 2**20
+    return f"{min(16 * 1024, phys_mb // 3)}m"
 
 
 def _parallelism_of(master: str, default: int) -> int:

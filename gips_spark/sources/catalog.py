@@ -59,13 +59,12 @@ def write_table(
             # present in `df` — createOrReplace() is a WHOLE-TABLE
             # replace, which broke the ingest job's per-(batch,bucket)
             # idempotent-resume contract on the Iceberg path (ADVICE
-            # r5 medium).  First-ever write: the table may not exist
-            # yet, so fall back to createOrReplace then.
-            try:
+            # r5 medium).  The table's existence is decided BEFORE the
+            # write, so a failed overwrite raises instead of turning
+            # into a whole-table replace.
+            if spark.catalog.tableExists(name_or_path):
                 w.overwritePartitions()
-            except Exception:
-                if spark.catalog.tableExists(name_or_path):
-                    raise
+            else:
                 w.createOrReplace()
         else:
             (w.createOrReplace() if mode == "overwrite" else w.append())

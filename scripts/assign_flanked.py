@@ -1,7 +1,7 @@
 """Canary-flanked ASSIGN stage bench (VERDICT r4 next #10): the assign
 stage has a clean-window record (7.9s driver run, r4) but never a
 canary-flanked standalone number; this puts one on the record with the
-same machinery as scripts/knn_flanked.py.
+canary machinery of scripts/scaling_protocol.py.
 
 Stage definition identical to bench.py's assign stage (single-pass
 sampled-salt enrich of the sf0.1 = 1M-row pages cache, assignment-only

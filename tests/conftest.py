@@ -19,18 +19,9 @@ _LOCAL_DIRS = pytest.StashKey[list]()
 
 
 def pytest_configure(config):
-    """Set up the test JVM's host resources before any JVM starts.
-
-    * Its own subdirectory of each SPARK_LOCAL_DIRS entry: a JVM that is
-      killed leaves its blockmgr-* dirs behind, and a shared local dir
-      then fills up.
-    * A driver heap of a third of physical memory at most (get_spark's
-      default is 16g): on a 15 GB host the 10^5-query kNN test grew the
-      JVM past the host's memory, and once the kernel killed it every
-      later Spark test failed.
-    """
-    phys_mb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // 2**20
-    os.environ.setdefault("SPARK_GRAFT_DRIVER_MEM", f"{min(16 * 1024, phys_mb // 3)}m")
+    """Give the test JVM its own subdirectory of each SPARK_LOCAL_DIRS
+    entry before any JVM starts: a JVM that is killed leaves its
+    blockmgr-* dirs behind, and a shared local dir then fills up."""
     base = os.environ.get("SPARK_LOCAL_DIRS")
     dirs = [
         tempfile.mkdtemp(prefix=f"gips-tests-{os.getpid()}-", dir=d)

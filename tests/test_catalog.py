@@ -154,3 +154,50 @@ def test_iceberg_layout_contract_manifest(spark, tmp_path):
     back = spark.read.parquet(out).select("url", "url_bucket").toPandas()
     got = dict(zip(back["url"], back["url_bucket"].astype(int)))
     assert got == golden
+
+
+def test_iceberg_overwrite_mode_decided_before_writing(spark, monkeypatch):
+    """Iceberg path: tableExists picks overwritePartitions or
+    createOrReplace BEFORE the write.  A transient overwritePartitions
+    failure on an existing table raises — and never becomes a
+    whole-table createOrReplace, even when the catalog, after the
+    failure, can no longer see the table.  A new table is created."""
+    import types
+
+    import pytest
+
+    def run(exists):
+        calls, state = [], {"outage": False}
+
+        class Writer:
+            def partitionedBy(self, *cols):
+                return self
+
+            def overwritePartitions(self):
+                calls.append("overwritePartitions")
+                state["outage"] = True
+                raise RuntimeError("transient catalog failure")
+
+            def createOrReplace(self):
+                calls.append("createOrReplace")
+
+        def table_exists(name):
+            calls.append("tableExists")
+            return exists and not state["outage"]
+
+        fake_spark = types.SimpleNamespace(
+            catalog=types.SimpleNamespace(tableExists=table_exists)
+        )
+        fake_df = types.SimpleNamespace(writeTo=lambda name: Writer())
+        try:
+            catalog.write_table(
+                fake_spark, fake_df, "db.pages", partition_cols=("cell_prefix",),
+                mode="overwrite",
+            )
+        except RuntimeError:
+            calls.append("raised")
+        return calls
+
+    monkeypatch.setattr(catalog, "iceberg_available", lambda s: True)
+    assert run(exists=True) == ["tableExists", "overwritePartitions", "raised"]
+    assert run(exists=False) == ["tableExists", "createOrReplace"]

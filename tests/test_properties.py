@@ -240,6 +240,84 @@ def test_fnv1a_chain_composition(s):
     assert h == textx.fnv1a_u64(b)
 
 
+# ------------------------------------------------------------------- kNN
+_knn_lat = st.one_of(st.floats(89.5, 90.0), st.floats(-90.0, -89.5), lat_st)
+_knn_lon = st.one_of(st.floats(179.9, 180.0), st.floats(-180.0, -179.9), lon_st)
+_knn_pt = st.tuples(_knn_lat, _knn_lon)
+
+
+@st.composite
+def _knn_case(draw):
+    """Points near the poles and across the antimeridian, exact
+    duplicates (ties at the k-th distance), queries on and off the
+    points, k up to beyond the point count."""
+    base = draw(st.lists(_knn_pt, min_size=1, max_size=30))
+    pts = base + draw(st.lists(st.sampled_from(base), max_size=20))
+    queries = draw(
+        st.lists(
+            st.tuples(
+                st.one_of(_knn_pt, st.sampled_from(base)),
+                st.integers(1, len(pts) + 3),
+            ),
+            min_size=1,
+            max_size=6,
+        )
+    )
+    return pts, queries
+
+
+@KERNEL
+@given(_knn_case())
+def test_knn_kernels_keep_every_point_within_kth_distance(case):
+    """The coarse + fine pruning kernels (no Spark: the directory is
+    built in pandas from h3lite cells) keep, for every query, the cell
+    of every point within its k-th smallest numpy haversine distance."""
+    import pandas as pd
+
+    from gips_spark.operators import knn
+
+    pts, queries = case
+    lat = np.array([p[0] for p in pts])
+    lon = np.array([p[1] for p in pts])
+    cells = h3lite.latlng_to_cell(lat, lon, 7)
+    directory = (
+        pd.DataFrame({"h3_7": cells, "lat": lat, "lon": lon})
+        .groupby("h3_7")
+        .agg(
+            n_rows=("lat", "size"),
+            min_lat=("lat", "min"), max_lat=("lat", "max"),
+            min_lon=("lon", "min"), max_lon=("lon", "max"),
+        )
+        .reset_index()
+    )
+    directory["prefix"] = directory["h3_7"].to_numpy() >> knn.PREFIX_SHIFT
+    coarse = (
+        directory.groupby("prefix")
+        .agg(
+            n_rows=("n_rows", "sum"),
+            min_lat=("min_lat", "min"), max_lat=("max_lat", "max"),
+            min_lon=("min_lon", "min"), max_lon=("max_lon", "max"),
+        )
+        .reset_index()
+    )
+    qpdf = pd.DataFrame(
+        {
+            "query_id": np.arange(len(queries)),
+            "lat": [q[0][0] for q in queries],
+            "lon": [q[0][1] for q in queries],
+            "k": [q[1] for q in queries],
+        }
+    )
+    surv = knn._coarse_survivors(knn._coarse_arrays(coarse), qpdf)
+    cand = knn._fine_select(surv.merge(directory, on="prefix"))
+    for qid, ((qla, qlo), k) in enumerate(queries):
+        d = geom.haversine_m(qla, qlo, lat, lon)
+        kth = np.sort(d)[min(k, len(pts)) - 1]
+        need = set(cells[d <= kth].tolist())
+        got = set(cand.loc[cand["query_id"] == qid, "h3_7"].tolist())
+        assert need <= got, (qid, k, need - got)
+
+
 # ------------------------------------------------------- Spark-backed
 _ws_text = st.text(
     alphabet=st.characters(

@@ -41,6 +41,28 @@ def test_extract_deterministic_and_idempotent_per_input():
     assert out.nunique() == 1 and out.iloc[0] == "x & y"
 
 
+@pytest.mark.parametrize(
+    "html, want",
+    [
+        ([b"<p>a</p>", None], ["a", ""]),
+        ([None, b"<p>a</p>"], ["", "a"]),
+        ([None, b"\xff<p>a</p>"], ["", "\ufffd a"]),
+    ],
+)
+def test_enrich_struct_null_html(html, want):
+    """A null html anywhere in a bytes batch extracts to "" and the
+    other rows still decode (utf-8, errors replaced)."""
+    from gips_spark.functions import udfs
+
+    n = len(html)
+    out = udfs.enrich_struct.func(
+        pd.Series(html, dtype=object),
+        pd.Series(["https://x.example.com/p"] * n),
+        pd.Series([""] * n),
+    )
+    assert out["extracted_text"].tolist() == want
+
+
 def test_geocode_rule_priority():
     url = pd.Series(
         [
