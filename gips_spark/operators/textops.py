@@ -122,10 +122,33 @@ def ws_tokens(text_col):
     behind (Spark `trim` strips only ASCII space, so '\\t a' kept its
     tab and split yielded a phantom '' token — code-review r5, verified
     live).  NULL text → empty array.  DuckDB mirror:
-    ``list_filter(regexp_split_to_array(text, '\\s+'), x -> x <> '')``."""
+    ``list_filter(regexp_split_to_array(text, '\\s+'), x -> x <> '')``.
+
+    The lambda keeps Catalyst's subexpression elimination away from
+    this expression: every reference re-splits the text.  Operators
+    that use the tokens more than once project them ONCE as a column
+    (``_tk``), which CollapseProject keeps because the consumers
+    reference it several times."""
     return F.filter(
         F.split(F.coalesce(text_col, F.lit("")), r"\s+"), lambda x: x != ""
     )
+
+
+def _grams(toks, n: int):
+    """array<string> of word `n`-grams of a token-array Column, single-
+    space joined; fewer than n tokens → empty array.  ``toks`` is
+    referenced 2n+2 times, so pass a projected column, not an
+    expression."""
+    sz = F.size(toks)
+    m = sz - F.lit(n - 1)  # gram count when sz >= n
+    out = F.slice(toks, 1, m)
+    for k in range(2, n + 1):
+        out = F.zip_with(
+            out, F.slice(toks, k, m), lambda a, b: F.concat(a, F.lit(" "), b)
+        )
+    # guard < n tokens: m <= 0 would make slice error under ANSI mode —
+    # the CaseWhen keeps the otherwise branch unevaluated for short docs
+    return F.when(sz < n, F.array().cast("array<string>")).otherwise(out)
 
 
 def word_ngrams(text_col, n: int):
@@ -141,18 +164,32 @@ def word_ngrams(text_col, n: int):
     slice(toks, i, n)))`, which allocated a fresh sub-array per GRAM
     inside an interpreted higher-order function (HOFs never enter
     whole-stage codegen, so per-element work is the multiplier that
-    matters)."""
-    toks = ws_tokens(text_col)
-    sz = F.size(toks)
-    m = sz - F.lit(n - 1)  # gram count when sz >= n
-    out = F.slice(toks, 1, m)
-    for k in range(2, n + 1):
-        out = F.zip_with(
-            out, F.slice(toks, k, m), lambda a, b: F.concat(a, F.lit(" "), b)
-        )
-    # guard < n tokens: m <= 0 would make slice error under ANSI mode —
-    # the CaseWhen keeps the otherwise branch unevaluated for short docs
-    return F.when(sz < n, F.array().cast("array<string>")).otherwise(out)
+    matters).  This standalone form inlines the tokens into each of
+    the 2n+2 token references, so the text is split 2n+2 times; the
+    T-ops below project ``ws_tokens`` once and call ``_grams`` on it."""
+    return _grams(ws_tokens(text_col), n)
+
+
+def _unit_arrays(docs: DataFrame, id_col: str, text_col: str, top_ns, dup_ns):
+    """→ (DataFrame(doc_id, n_chars, _a_{kind}...), kinds): per document
+    the non-blank lines (kind 'line') and the word n-grams (kind 'g{n}'
+    for n in top_ns ∪ dup_ns), with the text split once into lines and
+    once into tokens.  NULL text ≡ empty text."""
+    ns = sorted(set(top_ns) | set(dup_ns))
+    t = F.coalesce(F.col(text_col), F.lit(""))
+    tk = docs.select(
+        F.col(id_col).alias("doc_id"),
+        F.length(t).alias("n_chars"),
+        F.filter(F.split(t, "\n"), lambda x: F.trim(x) != "").alias("_a_line"),
+        ws_tokens(t).alias("_tk"),
+    )
+    arrays = tk.select(
+        "doc_id",
+        "n_chars",
+        "_a_line",
+        *[_grams(F.col("_tk"), n).alias(f"_a_g{n}") for n in ns],
+    )
+    return arrays, ["line"] + [f"g{n}" for n in ns]
 
 
 def repetition_stats(
@@ -182,8 +219,10 @@ def repetition_stats(
 
     * ``strategy='explode'`` (default) — ONE tagged explode →
       partial-count shuffle on (doc, kind, gram); the gram in the key
-      spreads giant documents across partitions.  O(units) work; the
-      safe asymptotic choice for long documents (10^5+ tokens).
+      spreads giant documents across partitions → ONE (doc, n_chars)
+      aggregation whose per-kind aggregates are conditional on the
+      kind: two hash exchanges in all.  O(units) work; the safe
+      asymptotic choice for long documents (10^5+ tokens).
     * ``strategy='local'`` — ZERO-shuffle narrow projection: per-doc
       counts via higher-order array functions (filter-count against the
       doc's own gram array, the entropy_stats pattern).  O(distinct ×
@@ -193,111 +232,64 @@ def repetition_stats(
       doc outgrows the cost of shuffling the units.
 
     Everything JVM-side, zero Python, in both.  Lines = split(text,
-    '\\n').
+    '\\n').  Both split each text once into lines and once into
+    tokens; every gram size reads the projected tokens.
     """
     if strategy == "local":
         return _repetition_stats_local(docs, id_col, text_col, top_ns, dup_ns)
     if strategy != "explode":
         raise ValueError("strategy must be 'explode' or 'local'")
-    # NULL text ≡ empty text in both strategies (code-review r5: the
-    # local path's least(NULL, 1.0) used to score null docs 1.0)
-    t = F.coalesce(F.col(text_col), F.lit(""))
-    units = [
-        F.transform(
-            F.filter(F.split(t, "\n"), lambda x: F.trim(x) != ""),
-            lambda x: F.struct(F.lit("line").alias("kind"), x.alias("gram")),
-        )
-    ]
+    arrays, kinds = _unit_arrays(docs, id_col, text_col, top_ns, dup_ns)
+
     def _tagger(kind: str):
         # single-arg closure — a two-arg lambda would make pyspark's
         # transform() pass the ELEMENT INDEX as the second argument
         return lambda x: F.struct(F.lit(kind).alias("kind"), x.alias("gram"))
 
-    for n in sorted(set(top_ns) | set(dup_ns)):
-        units.append(F.transform(word_ngrams(t, n), _tagger(f"g{n}")))
-    exploded = docs.select(
-        F.col(id_col).alias("doc_id"),
-        F.length(t).alias("n_chars"),
-        F.explode(F.concat(*units)).alias("u"),
+    units = [F.transform(f"_a_{k}", _tagger(k)) for k in kinds]
+    exploded = arrays.select(
+        "doc_id", "n_chars", F.explode(F.concat(*units)).alias("u")
     ).select("doc_id", "n_chars", "u.kind", "u.gram")
     counted = exploded.groupBy("doc_id", "n_chars", "kind", "gram").agg(
         F.count(F.lit(1)).alias("cnt")
     )
-    per_kind = counted.groupBy("doc_id", "n_chars", "kind").agg(
-        F.sum("cnt").alias("n_units"),
-        F.count(F.lit(1)).alias("n_distinct"),
-        F.sum(
-            F.when(F.col("cnt") >= 2, F.col("cnt") * F.length("gram")).otherwise(0)
-        ).alias("dup_chars"),
-        # most frequent gram, ties broken gram-ASC: min_by over the
-        # orderable struct (-cnt, gram); value = its char coverage
-        F.expr("min_by(cnt * length(gram), struct(-cnt, gram))").alias("top_cov"),
-    )
+    # ONE (doc_id, n_chars) level: every per-kind aggregate is
+    # conditional on its kind.  A kind the doc lacks sums to 0 here, and
+    # its min_by is NULL; map NULL to 0 BEFORE clipping, because least()
+    # skips NULLs (least(NULL, 1.0) = 1.0)
+    cnt, cov = F.col("cnt"), F.col("cnt") * F.length("gram")
     safe_chars = F.greatest(F.col("n_chars"), F.lit(1)).cast("double")
+
+    def is_kind(k: str):
+        return F.col("kind") == k
+
+    def clipped(chars):
+        return F.round(F.least(chars / safe_chars, F.lit(1.0)), 9)
+
+    def dup_chars(k: str):
+        return F.sum(F.when(is_kind(k) & (cnt >= 2), cov).otherwise(0))
+
+    n_lines = F.sum(F.when(is_kind("line"), cnt))
+    n_distinct = F.count(F.when(is_kind("line"), cnt))
     agg_exprs = [
-        F.coalesce(
-            F.max(F.when(F.col("kind") == "line", F.col("n_units"))), F.lit(0)
-        ).alias("n_lines"),
+        F.coalesce(n_lines, F.lit(0)).alias("n_lines"),
         F.round(
-            F.coalesce(
-                F.max(
-                    F.when(
-                        F.col("kind") == "line",
-                        (F.col("n_units") - F.col("n_distinct"))
-                        / F.col("n_units").cast("double"),
-                    )
-                ),
-                F.lit(0.0),
-            ),
-            9,
+            F.coalesce((n_lines - n_distinct) / n_lines.cast("double"), F.lit(0.0)), 9
         ).alias("dup_line_frac"),
-        F.round(
-            F.coalesce(
-                F.max(
-                    F.when(
-                        F.col("kind") == "line",
-                        F.least(F.col("dup_chars") / safe_chars, F.lit(1.0)),
-                    )
-                ),
-                F.lit(0.0),
-            ),
-            9,
-        ).alias("dup_line_char_frac"),
+        clipped(dup_chars("line")).alias("dup_line_char_frac"),
     ]
     for n in sorted(set(top_ns)):
-        agg_exprs.append(
-            F.round(
-                F.coalesce(
-                    F.max(
-                        F.when(
-                            F.col("kind") == f"g{n}",
-                            F.least(F.col("top_cov") / safe_chars, F.lit(1.0)),
-                        )
-                    ),
-                    F.lit(0.0),
-                ),
-                9,
-            ).alias(f"top{n}_char_frac")
-        )
+        # most frequent gram, ties broken gram-ASC: min_by over the
+        # orderable struct (-cnt, gram); min_by skips the NULL ordering
+        # of the other kinds' rows
+        top_cov = F.min_by(cov, F.when(is_kind(f"g{n}"), F.struct(-cnt, F.col("gram"))))
+        agg_exprs.append(clipped(F.coalesce(top_cov, F.lit(0))).alias(f"top{n}_char_frac"))
     for n in sorted(set(dup_ns)):
-        agg_exprs.append(
-            F.round(
-                F.coalesce(
-                    F.max(
-                        F.when(
-                            F.col("kind") == f"g{n}",
-                            F.least(F.col("dup_chars") / safe_chars, F.lit(1.0)),
-                        )
-                    ),
-                    F.lit(0.0),
-                ),
-                9,
-            ).alias(f"dup{n}_char_frac")
-        )
-    stats = per_kind.groupBy("doc_id", "n_chars").agg(*agg_exprs)
+        agg_exprs.append(clipped(dup_chars(f"g{n}")).alias(f"dup{n}_char_frac"))
+    stats = counted.groupBy("doc_id", "n_chars").agg(*agg_exprs)
     # docs with no units at all (empty/whitespace text) vanish in the
     # explode — restore them with all-zero stats off the doc spine
-    spine = docs.select(F.col(id_col).alias("doc_id"), F.length(t).alias("n_chars"))
+    spine = arrays.select("doc_id", "n_chars")
     stat_cols = [c for c in stats.columns if c not in ("doc_id", "n_chars")]
     return spine.join(stats, ["doc_id", "n_chars"], "left").select(
         "doc_id",
@@ -325,30 +317,22 @@ def _repetition_stats_local(
     the grams achieving the max count (same (cnt DESC, gram ASC)
     tie-break as the explode strategy's min_by).  All integer
     arithmetic → fold order is immaterial."""
-    t = F.coalesce(F.col(text_col), F.lit(""))  # NULL ≡ empty, both paths
-    arrays = {"line": F.filter(F.split(t, "\n"), lambda x: F.trim(x) != "")}
-    for n in sorted(set(top_ns) | set(dup_ns)):
-        arrays[f"g{n}"] = word_ngrams(t, n)
-    d = docs.select(
-        F.col(id_col).alias("doc_id"),
-        F.length(t).alias("n_chars"),
-        *[a.alias(f"_a_{k}") for k, a in arrays.items()],
-    )
+    d, kinds = _unit_arrays(docs, id_col, text_col, top_ns, dup_ns)
     # the single expensive pass: (gram, cnt) pairs per kind
     d1 = d.select(
         "doc_id",
         "n_chars",
-        *[F.col(f"_a_{k}").alias(f"_a_{k}") for k in arrays],
+        *[f"_a_{k}" for k in kinds],
         *[
             F.expr(
                 f"transform(array_distinct(_a_{k}), g -> named_struct("
                 f"'g', g, 'c', size(filter(_a_{k}, x -> x = g))))"
             ).alias(f"_c_{k}")
-            for k in arrays
+            for k in kinds
         ],
     )
     stat_cols = []
-    for k in arrays:
+    for k in kinds:
         C = f"_c_{k}"
         stat_cols.append(F.size(f"_a_{k}").cast("long").alias(f"_nu_{k}"))
         stat_cols.append(F.size(C).cast("long").alias(f"_nd_{k}"))
@@ -365,14 +349,14 @@ def _repetition_stats_local(
                     f"_mc_{k}"
                 )
             )
-    d2 = d1.select("doc_id", "n_chars", *[f"_c_{k}" for k in arrays], *stat_cols)
+    d2 = d1.select("doc_id", "n_chars", *[f"_c_{k}" for k in kinds], *stat_cols)
     # top coverage: O(distinct) scan of the pair array against max count
     top_cols = [
         F.expr(
             f"cast(_mc_{k} as bigint) * length(array_min("
             f"transform(filter(_c_{k}, s -> s.c = _mc_{k}), s -> s.g)))"
         ).alias(f"_top_{k}")
-        for k in arrays
+        for k in kinds
         if k != "line"
     ]
     d3 = d2.select("*", *top_cols)
@@ -437,49 +421,36 @@ def decontaminate(
     """
     if join_on not in ("hash", "gram"):
         raise ValueError("join_on must be 'hash' or 'gram'")
+
+    def key(g):
+        return F.xxhash64(g) if join_on == "hash" else g
+
+    # built from the tokens projected once per side as ``_tk``
+    grams = F.array_distinct(_grams(F.col("_tk"), n)).alias("grams")
+
+    # r6 (guide §2.3 "shuffle keys, not payloads", applied to the
+    # Generate): hash INSIDE the array and explode int64s — the explode
+    # then materializes (long, int, long) rows instead of ~60-char gram
+    # strings that were hashed-and-dropped one operator later.  Measured
+    # 15.0s → 8.1s on the 1M-doc side, identical (doc_id, n_grams, k)
+    # multiset.  The 'gram' path explodes transform(grams, g -> g), not
+    # the bare column: InferFiltersFromGenerate adds size(grams) > 0 for
+    # a bare attribute, and pushdown would inline the whole token and
+    # gram expression into that filter below the token projection.
     dg = docs.select(
-        F.col(id_col).alias("doc_id"),
-        F.array_distinct(word_ngrams(F.col(text_col), n)).alias("grams"),
+        F.col(id_col).alias("doc_id"), ws_tokens(F.col(text_col)).alias("_tk")
+    ).select("doc_id", grams)
+    doc_side = dg.select(
+        "doc_id",
+        F.size("grams").alias("n_grams"),
+        F.explode(F.transform("grams", key)).alias("k"),
     )
-    if join_on == "hash":
-        # r6 (guide §2.3 "shuffle keys, not payloads", applied to the
-        # Generate): hash INSIDE the array and explode int64s — the
-        # explode then materializes (long, int, long) rows instead of
-        # ~60-char gram strings that were hashed-and-dropped one
-        # operator later.  Measured 15.0s → 8.1s on the 1M-doc side,
-        # identical (doc_id, n_grams, k) multiset.
-        doc_side = dg.select(
-            "doc_id",
-            F.size("grams").alias("n_grams"),
-            F.explode(
-                F.transform(F.col("grams"), lambda g: F.xxhash64(g))
-            ).alias("k"),
-        )
-        bench_side = (
-            benchmark.select(
-                F.explode(
-                    F.transform(
-                        F.array_distinct(word_ngrams(F.col(bench_text_col), n)),
-                        lambda g: F.xxhash64(g),
-                    )
-                ).alias("k")
-            )
-            .distinct()
-        )
-    else:
-        doc_side = dg.select(
-            "doc_id",
-            F.size("grams").alias("n_grams"),
-            F.explode("grams").alias("k"),
-        )
-        bench_side = (
-            benchmark.select(
-                F.explode(
-                    F.array_distinct(word_ngrams(F.col(bench_text_col), n))
-                ).alias("k")
-            )
-            .distinct()
-        )
+    bench_side = (
+        benchmark.select(ws_tokens(F.col(bench_text_col)).alias("_tk"))
+        .select(grams)
+        .select(F.explode(F.transform("grams", key)).alias("k"))
+        .distinct()
+    )
     hits = doc_side.join(F.broadcast(bench_side), "k").groupBy(
         "doc_id", "n_grams"
     ).agg(F.count(F.lit(1)).alias("n_hit_grams"))
@@ -508,7 +479,9 @@ def entropy_stats(
     real text (alphabet-sized char set, Zipfian token set is the worst
     case — for adversarial million-distinct-token docs, prefer an
     explode + (doc, token) count variant, same algebra as
-    repetition_stats).  Empty docs yield zero entropies, not NaN."""
+    repetition_stats).  Each distinct symbol is counted once (one
+    filter pass over the array), and the text is split once into chars
+    and once into tokens.  Empty docs yield zero entropies, not NaN."""
     t = F.coalesce(F.col(text_col), F.lit(""))
     # split('', '') yields [''] — guard empties so counts come out 0;
     # tokens via ws_tokens (drops the phantom '' a leading tab/newline
@@ -522,11 +495,13 @@ def entropy_stats(
     )
 
     def h(arr: str) -> str:
-        p = f"(size(filter({arr}, x -> x = c)) / cast(size({arr}) as double))"
-        return (
-            f"aggregate(array_distinct({arr}), cast(0.0 as double), "
-            f"(acc, c) -> acc - {p} * ln({p}))"
+        # each distinct symbol's count is computed once, then -p·ln(p) is
+        # folded in array_distinct order
+        probs = (
+            f"transform(array_distinct({arr}), c -> "
+            f"size(filter({arr}, x -> x = c)) / cast(size({arr}) as double))"
         )
+        return f"aggregate({probs}, cast(0.0 as double), (acc, p) -> acc - p * ln(p))"
 
     return prep.select(
         "doc_id",

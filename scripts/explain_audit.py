@@ -24,6 +24,7 @@ import contextlib
 import io
 import math
 import os
+import re
 import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
@@ -61,6 +62,37 @@ def _kernel_input_partitions(df) -> list:
 
     walk(df._jdf.queryExecution().sparkPlan())
     return found
+
+
+def _split_patterns(plan: str) -> list:
+    """The pattern of every split() of text by whitespace, newline or
+    '' in a plan string, sorted: each entry is one place the plan
+    splits text."""
+    return sorted(re.findall(r"split\(.*?, (\\s\+|\n|), -1\)", plan, flags=re.S))
+
+
+def _exchanges_below_join(df) -> list:
+    """Hash Exchange nodes in each input subtree of the first join in
+    `df`'s physical plan (the AQE initial plan, where exchanges are
+    already placed)."""
+    def count(node):
+        own = node.nodeName() == "Exchange" and "hashpartitioning" in node.simpleString(100)
+        return own + sum(count(node.children().apply(i)) for i in range(node.children().size()))
+
+    def find_join(node):
+        if node.nodeName().endswith("Join"):
+            return node
+        for i in range(node.children().size()):
+            j = find_join(node.children().apply(i))
+            if j is not None:
+                return j
+        return None
+
+    plan = df._jdf.queryExecution().executedPlan()
+    if plan.nodeName() == "AdaptiveSparkPlan":
+        plan = plan.executedPlan()
+    join = find_join(plan)
+    return [count(join.children().apply(i)) for i in range(join.children().size())]
 
 
 def run_audit(spark, pages, salt_target_rows: int = 5000):
@@ -319,20 +351,44 @@ def run_audit(spark, pages, salt_target_rows: int = 5000):
             " ", F.lit("alpha beta"), F.col("doc_id").cast("string"), F.lit("alpha beta")
         ).alias("text"),
     )
-    rp = formatted(tx_ops.repetition_stats(tdocs))
+    # round-robin input: like a file scan, its partitioning groups no
+    # doc_id, so the plan shows every aggregation exchange
+    rep_df = tx_ops.repetition_stats(tdocs.repartition(4))
+    rp = formatted(rep_df)
     sections["repetition_stats (tagged explode → (doc,kind,gram) counts)"] = rp
     checks.append(("repetition: pure JVM (no Python stage)", "EvalPython" not in rp))
     checks.append(("repetition: partial-count aggregate", "HashAggregate" in rp))
+    # tokens are projected once and every gram size reads that column;
+    # the per-kind statistics fold into the (doc_id, n_chars) level
+    checks.append(
+        ("repetition: lines and tokens split once each (both strategies)",
+         _split_patterns(rp) == ["\n", r"\s+"]
+         and _split_patterns(formatted(tx_ops.repetition_stats(tdocs, strategy="local")))
+         == ["\n", r"\s+"])
+    )
+    checks.append(
+        ("repetition: two hash exchanges before the spine join",
+         max(_exchanges_below_join(rep_df)) == 2)
+    )
     dc = formatted(tx_ops.decontaminate(tdocs, tdocs.limit(20), n=2))
     sections["decontaminate (distinct grams → broadcast bench semi-join)"] = dc
     checks.append(("decontam: benchmark side broadcast", "BroadcastExchange" in dc))
     checks.append(
         ("decontam: corpus never sort-merge-joins", "SortMergeJoin" not in dc)
     )
+    dcg = formatted(tx_ops.decontaminate(tdocs, tdocs.limit(20), n=8, join_on="gram"))
+    sections["decontaminate join_on='gram' (string-key oracle path)"] = dcg
+    checks.append(
+        ("decontam: one tokenization per input side (hash and gram paths)",
+         _split_patterns(dc) == _split_patterns(dcg) == [r"\s+", r"\s+"])
+    )
     ep = formatted(tx_ops.entropy_stats(tdocs))
     sections["entropy_stats (zero-shuffle narrow projection)"] = ep
     checks.append(("entropy: zero shuffle", "Exchange" not in ep))
     checks.append(("entropy: pure JVM", "EvalPython" not in ep))
+    checks.append(
+        ("entropy: one char split and one token split", _split_patterns(ep) == ["", r"\s+"])
+    )
 
     # r5: packing + quota — one hash shuffle each, pure JVM
     from gips_spark.operators import packing as pk_ops

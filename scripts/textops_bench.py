@@ -8,12 +8,14 @@ canary before and after every trial, best-of-N published WITH all
 trials and flanks so degraded-host readings are auditable.
 
 Usage: python scripts/textops_bench.py [trials]   (default 3)
-Writes BENCH/textops_bench.json.
+Runs at local[$SPARK_GRAFT_CPUS] (get_spark's default) and writes
+BENCH/textops_bench.json, which records the master it ran on.
 """
 
 from __future__ import annotations
 
 import json
+import multiprocessing as mp
 import os
 import sys
 import time
@@ -22,9 +24,47 @@ REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
 from gips_spark import get_spark  # noqa: E402
-from scripts.scaling_protocol import canary_seconds  # noqa: E402
 
 N_DOCS = 1_000_000
+
+
+def _canary_worker(conn):
+    import numpy as np
+
+    rng = np.random.default_rng(7)
+    arr = rng.integers(0, 255, 2_000_000, dtype=np.uint8)
+    h = np.full(arr.size - 7, np.uint64(0xCBF29CE484222325), dtype=np.uint64)
+    prime = np.uint64(0x100000001B3)
+    for k in range(8):  # fixed FNV-over-windows op count
+        h ^= arr[k : k + h.size].astype(np.uint64)
+        h *= prime
+    # pipe traffic (the degraded state is syscall-bound)
+    blob = arr[:262_144].tobytes()
+    for _ in range(40):
+        conn.send_bytes(blob)
+        conn.recv_bytes()
+    conn.send(int(h[0]))
+
+
+def canary_seconds(n_procs: int = 8) -> float:
+    """Wall time of a fixed CPU + pipe workload in `n_procs` processes:
+    a host-health flank, higher when the host is degraded."""
+    t0 = time.monotonic()
+    procs, conns = [], []
+    for _ in range(n_procs):
+        a, b = mp.Pipe()
+        p = mp.Process(target=_canary_worker, args=(b,))
+        p.start()
+        procs.append(p)
+        conns.append(a)
+    for a in conns:
+        for _ in range(40):
+            a.recv_bytes()
+            a.send_bytes(b"x" * 262_144)
+        a.recv()
+    for p in procs:
+        p.join()
+    return time.monotonic() - t0
 
 
 def synth_docs(spark):
@@ -45,7 +85,7 @@ def synth_docs(spark):
 
 def main():
     trials = int(sys.argv[1]) if len(sys.argv) > 1 else 3
-    spark = get_spark("textops-bench", master="local[32]", shuffle_partitions=32)
+    spark = get_spark("textops-bench")
     cache = os.path.join(REPO, ".bench_cache", f"textdocs_{N_DOCS}")
     if not os.path.exists(cache):
         synth_docs(spark).write.mode("overwrite").parquet(cache)
@@ -88,7 +128,7 @@ def main():
     noop(textops.decontaminate(small, small_bench, n=8))
     noop(dedup.exact_dedup(small, "doc_id", "text"))
 
-    out = {"n_docs": N_DOCS, "trials": {}, "flanks": {}, "best": {}, "rows_per_sec": {}}
+    out = {"n_docs": N_DOCS, "master": spark.sparkContext.master, "trials": {}, "flanks": {}, "best": {}, "rows_per_sec": {}}
     for name, fn in stages.items():
         ts, fl = [], []
         for _ in range(trials):

@@ -447,3 +447,99 @@ def test_decontaminate_self_benchmark_full_hit(spark, texts):
         assert r["hit_frac"] == 1.0 and r["n_hit_grams"] == r["n_grams"]
     clean = spark.createDataFrame([(0, "z y x w v u t s")], "doc_id long, text string")
     assert textops.decontaminate(df, clean, n=5).count() == 0
+
+
+# ------------------------------- textops / sampling differential tests
+@st.composite
+def _sparse_doc(draw):
+    """A doc that often lacks a unit kind: NULL, empty, whitespace or
+    blank lines only, or 1–4 tokens (no 5-grams), led by a tab or a
+    newline; sometimes up to 12 tokens, so repeated grams occur too."""
+    toks = draw(st.lists(st.sampled_from(["a", "bb", "c"]),
+                         max_size=draw(st.sampled_from([0, 1, 4, 12]))))
+    if not toks and draw(st.booleans()):
+        return draw(st.sampled_from([None, ""]))
+    lead = draw(st.sampled_from(["", " ", "\t", "\n", "\n \n", "\t\n"]))
+    seps = draw(st.lists(st.sampled_from([" ", "  ", "\t", "\n", " \n\n ", "\r\n"]),
+                         min_size=len(toks), max_size=len(toks)))
+    return lead + "".join(t + s for t, s in zip(toks, seps))
+
+
+_sparse_docs = st.lists(_sparse_doc(), min_size=8, max_size=40)
+
+
+@SPARKED
+@given(_sparse_docs)
+def test_repetition_explode_equals_local_on_sparse_docs(spark, texts):
+    """The one-level explode aggregation == the local strategy bit for
+    bit on docs that lack a kind; an absent kind must score 0.0, not
+    least(NULL, 1.0) = 1.0."""
+    from gips_spark.operators import textops
+
+    df = spark.createDataFrame(list(enumerate(texts)), "doc_id long, text string")
+    a = sorted(tuple(r) for r in textops.repetition_stats(df).collect())
+    b = sorted(tuple(r) for r in textops.repetition_stats(df, strategy="local").collect())
+    assert a == b
+
+
+@SPARKED
+@given(_sparse_docs, st.lists(_sparse_doc(), min_size=1, max_size=6))
+def test_decontaminate_hash_equals_gram_path(spark, texts, bench_texts):
+    """join_on='hash' == join_on='gram' for n in {2, 5, 8}; the benchmark
+    holds some corpus docs so that hits occur."""
+    from gips_spark.operators import textops
+
+    df = spark.createDataFrame(list(enumerate(texts)), "doc_id long, text string")
+    bench = spark.createDataFrame(
+        [(t,) for t in bench_texts + texts[::3]], "text string"
+    )
+    for n in (2, 5, 8):
+        a = sorted(tuple(r) for r in textops.decontaminate(df, bench, n=n).collect())
+        b = sorted(
+            tuple(r)
+            for r in textops.decontaminate(df, bench, n=n, join_on="gram").collect()
+        )
+        assert a == b, n
+
+
+@SPARKED
+@given(_sparse_docs)
+def test_word_ngrams_match_python(spark, texts):
+    """word_ngrams == plain-Python n-grams over str.split()
+    (ASCII whitespace, so Java's \\s and Python agree); NULL ≡ ''."""
+    from pyspark.sql import functions as F
+
+    from gips_spark.operators import textops
+
+    df = spark.createDataFrame(list(enumerate(texts)), "doc_id long, text string")
+    ns = (1, 2, 3, 5)
+    got = {
+        r["doc_id"]: r
+        for r in df.select(
+            "doc_id", *[textops.word_ngrams(F.col("text"), n).alias(f"g{n}") for n in ns]
+        ).collect()
+    }
+    for i, t in enumerate(texts):
+        toks = (t or "").split()
+        for n in ns:
+            want = [" ".join(toks[j : j + n]) for j in range(len(toks) - n + 1)]
+            assert got[i][f"g{n}"] == want, (t, n)
+
+
+@SPARKED
+@given(
+    st.lists(st.integers(1, 120), min_size=1, max_size=6),
+    st.integers(1, 25),
+    st.sampled_from([2, 4, 8, 64]),
+    st.sampled_from(["xxhash64", "portable"]),
+)
+def test_group_quota_two_level_equals_one_window(spark, sizes, quota, buckets, method):
+    """Two-level group_quota (bucketed local top-quota first) == the
+    one-window form, rows and qranks, under random group skew."""
+    from gips_spark.operators import sampling
+
+    rows = [(i, f"g{g}") for g, n in enumerate(sizes) for i in range(g * 1000, g * 1000 + n)]
+    df = spark.createDataFrame(rows, "doc_id long, source string")
+    one = sampling.group_quota(df, "source", quota, method=method, prefilter_buckets=None)
+    two = sampling.group_quota(df, "source", quota, method=method, prefilter_buckets=buckets)
+    assert sorted(map(tuple, one.collect())) == sorted(map(tuple, two.collect()))

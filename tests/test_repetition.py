@@ -278,3 +278,28 @@ def test_repetition_local_strategy_bit_identical(spark):
     assert "Exchange" not in plan and "EvalPython" not in plan
     with pytest.raises(ValueError):
         textops.repetition_stats(df, strategy="bogus")
+
+
+def _split_patterns(df):
+    """The pattern of every split() call in `df`'s executed plan, sorted:
+    each entry is one place the plan splits the text."""
+    import re
+
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    return sorted(re.findall(r"split\(.*?, (\\s\+|\n|), -1\)", plan, flags=re.S))
+
+
+def test_text_split_once_per_input(spark):
+    """Each T-op tokenizes a document once: the tokens are projected
+    as a column and every gram size, count and fold reads that column.
+    Inlining ws_tokens into word_ngrams split the text 2n+2 times per
+    gram size (24 splits in repetition_stats, 34/52 in decontaminate)."""
+    docs = spark.createDataFrame(DOCS, "doc_id long, text string")
+    bench = spark.createDataFrame([(0, "p q r s t u v w")], "doc_id long, text string")
+    for strategy in ("explode", "local"):
+        got = _split_patterns(textops.repetition_stats(docs, strategy=strategy))
+        assert got == ["\n", r"\s+"], (strategy, got)
+    for join_on in ("hash", "gram"):
+        got = _split_patterns(textops.decontaminate(docs, bench, n=8, join_on=join_on))
+        assert got == [r"\s+", r"\s+"], (join_on, got)  # one per input side
+    assert _split_patterns(textops.entropy_stats(docs)) == ["", r"\s+"]
