@@ -4,7 +4,14 @@ Training-data pipeline components: language id, quality scoring, token
 counting, fingerprinting — each one Arrow pass, JVM-side where a Column
 expression suffices (token counts / ratios can also be expressed without
 Python; both paths provided, the expression path is what oracle_sql
-mirrors)."""
+mirrors).
+
+The T-ops (``entropy_stats``, ``repetition_stats``, ``decontaminate``)
+write their per-row expressions as SQL text (``selectExpr`` /
+``F.expr``): each projected column is one py4j call, where a Column
+tree costs one round trip per node and a Python-lambda higher-order
+function more.  Caller-supplied column names enter that text through
+``_q``.  Both forms resolve to the same Catalyst expressions."""
 
 from __future__ import annotations
 
@@ -123,6 +130,8 @@ def ws_tokens(text_col):
     tab and split yielded a phantom '' token — code-review r5, verified
     live).  NULL text → empty array.  DuckDB mirror:
     ``list_filter(regexp_split_to_array(text, '\\s+'), x -> x <> '')``.
+    The T-ops splice the same expression as SQL text
+    (``_ws_tokens_sql``).
 
     The lambda keeps Catalyst's subexpression elimination away from
     this expression: every reference re-splits the text.  Operators
@@ -134,11 +143,22 @@ def ws_tokens(text_col):
     )
 
 
+def _q(name: str) -> str:
+    """A caller-supplied column name as a SQL identifier: backtick-quoted,
+    any backtick inside it doubled (so `t.x` is a column, not a field)."""
+    return "`" + name.replace("`", "``") + "`"
+
+
+def _ws_tokens_sql(text: str) -> str:
+    """ws_tokens as SQL text over the SQL expression ``text``."""
+    return rf"filter(split(coalesce({text}, ''), '\\s+'), x -> x != '')"
+
+
 def _grams(toks, n: int):
     """array<string> of word `n`-grams of a token-array Column, single-
     space joined; fewer than n tokens → empty array.  ``toks`` is
-    referenced 2n+2 times, so pass a projected column, not an
-    expression."""
+    referenced 2n+2 times, so pass a column or a lambda variable, not
+    an expression.  ``_grams_sql`` is the same expression as SQL text."""
     sz = F.size(toks)
     m = sz - F.lit(n - 1)  # gram count when sz >= n
     out = F.slice(toks, 1, m)
@@ -149,6 +169,15 @@ def _grams(toks, n: int):
     # guard < n tokens: m <= 0 would make slice error under ANSI mode —
     # the CaseWhen keeps the otherwise branch unevaluated for short docs
     return F.when(sz < n, F.array().cast("array<string>")).otherwise(out)
+
+
+def _grams_sql(toks: str, n: int) -> str:
+    """``_grams`` as SQL text over the token-array column ``toks``."""
+    m = f"size({toks}) - {n - 1}"
+    out = f"slice({toks}, 1, {m})"
+    for k in range(2, n + 1):
+        out = f"zip_with({out}, slice({toks}, {k}, {m}), (a, b) -> concat(a, ' ', b))"
+    return f"CASE WHEN size({toks}) < {n} THEN cast(array() AS array<string>) ELSE {out} END"
 
 
 def word_ngrams(text_col, n: int):
@@ -164,10 +193,10 @@ def word_ngrams(text_col, n: int):
     slice(toks, i, n)))`, which allocated a fresh sub-array per GRAM
     inside an interpreted higher-order function (HOFs never enter
     whole-stage codegen, so per-element work is the multiplier that
-    matters).  This standalone form inlines the tokens into each of
-    the 2n+2 token references, so the text is split 2n+2 times; the
-    T-ops below project ``ws_tokens`` once and call ``_grams`` on it."""
-    return _grams(ws_tokens(text_col), n)
+    matters).  The tokens are bound to one lambda variable
+    (``transform(array(tokens), toks -> grams)[0]``), so the text is
+    split once, not at each of the 2n+2 token references."""
+    return F.transform(F.array(ws_tokens(text_col)), lambda toks: _grams(toks, n))[0]
 
 
 def _unit_arrays(docs: DataFrame, id_col: str, text_col: str, top_ns, dup_ns):
@@ -176,18 +205,15 @@ def _unit_arrays(docs: DataFrame, id_col: str, text_col: str, top_ns, dup_ns):
     for n in top_ns ∪ dup_ns), with the text split once into lines and
     once into tokens.  NULL text ≡ empty text."""
     ns = sorted(set(top_ns) | set(dup_ns))
-    t = F.coalesce(F.col(text_col), F.lit(""))
-    tk = docs.select(
-        F.col(id_col).alias("doc_id"),
-        F.length(t).alias("n_chars"),
-        F.filter(F.split(t, "\n"), lambda x: F.trim(x) != "").alias("_a_line"),
-        ws_tokens(t).alias("_tk"),
+    t = f"coalesce({_q(text_col)}, '')"
+    tk = docs.selectExpr(
+        f"{_q(id_col)} AS doc_id",
+        f"length({t}) AS n_chars",
+        f"filter(split({t}, '\\n'), x -> trim(x) != '') AS _a_line",
+        f"{_ws_tokens_sql(t)} AS _tk",
     )
-    arrays = tk.select(
-        "doc_id",
-        "n_chars",
-        "_a_line",
-        *[_grams(F.col("_tk"), n).alias(f"_a_g{n}") for n in ns],
+    arrays = tk.selectExpr(
+        "doc_id", "n_chars", "_a_line", *[f"{_grams_sql('_tk', n)} AS _a_g{n}" for n in ns]
     )
     return arrays, ["line"] + [f"g{n}" for n in ns]
 
@@ -240,65 +266,59 @@ def repetition_stats(
     if strategy != "explode":
         raise ValueError("strategy must be 'explode' or 'local'")
     arrays, kinds = _unit_arrays(docs, id_col, text_col, top_ns, dup_ns)
-
-    def _tagger(kind: str):
-        # single-arg closure — a two-arg lambda would make pyspark's
-        # transform() pass the ELEMENT INDEX as the second argument
-        return lambda x: F.struct(F.lit(kind).alias("kind"), x.alias("gram"))
-
-    units = [F.transform(f"_a_{k}", _tagger(k)) for k in kinds]
-    exploded = arrays.select(
-        "doc_id", "n_chars", F.explode(F.concat(*units)).alias("u")
-    ).select("doc_id", "n_chars", "u.kind", "u.gram")
-    counted = exploded.groupBy("doc_id", "n_chars", "kind", "gram").agg(
-        F.count(F.lit(1)).alias("cnt")
+    units = ", ".join(
+        f"transform(_a_{k}, x -> struct('{k}' AS kind, x AS gram))" for k in kinds
+    )
+    counted = (
+        arrays.selectExpr("doc_id", "n_chars", f"explode(concat({units})) AS u")
+        .selectExpr("doc_id", "n_chars", "u.kind", "u.gram")
+        .groupBy("doc_id", "n_chars", "kind", "gram")
+        .agg(F.expr("count(1) AS cnt"))
     )
     # ONE (doc_id, n_chars) level: every per-kind aggregate is
     # conditional on its kind.  A kind the doc lacks sums to 0 here, and
     # its min_by is NULL; map NULL to 0 BEFORE clipping, because least()
     # skips NULLs (least(NULL, 1.0) = 1.0)
-    cnt, cov = F.col("cnt"), F.col("cnt") * F.length("gram")
-    safe_chars = F.greatest(F.col("n_chars"), F.lit(1)).cast("double")
+    cov = "cnt * length(gram)"
 
-    def is_kind(k: str):
-        return F.col("kind") == k
+    def clipped(chars: str) -> str:
+        return f"round({_char_frac_sql(chars)}, 9)"
 
-    def clipped(chars):
-        return F.round(F.least(chars / safe_chars, F.lit(1.0)), 9)
+    def dup_chars(k: str) -> str:
+        return f"sum(CASE WHEN kind = '{k}' AND cnt >= 2 THEN {cov} ELSE 0 END)"
 
-    def dup_chars(k: str):
-        return F.sum(F.when(is_kind(k) & (cnt >= 2), cov).otherwise(0))
-
-    n_lines = F.sum(F.when(is_kind("line"), cnt))
-    n_distinct = F.count(F.when(is_kind("line"), cnt))
-    agg_exprs = [
-        F.coalesce(n_lines, F.lit(0)).alias("n_lines"),
-        F.round(
-            F.coalesce((n_lines - n_distinct) / n_lines.cast("double"), F.lit(0.0)), 9
-        ).alias("dup_line_frac"),
-        clipped(dup_chars("line")).alias("dup_line_char_frac"),
-    ]
+    n_lines = "sum(CASE WHEN kind = 'line' THEN cnt END)"
+    n_distinct = "count(CASE WHEN kind = 'line' THEN cnt END)"
+    aggs = {
+        "n_lines": f"coalesce({n_lines}, 0)",
+        "dup_line_frac": f"round(coalesce(({n_lines} - {n_distinct}) / "
+        f"cast({n_lines} AS double), 0.0D), 9)",
+        "dup_line_char_frac": clipped(dup_chars("line")),
+    }
     for n in sorted(set(top_ns)):
         # most frequent gram, ties broken gram-ASC: min_by over the
         # orderable struct (-cnt, gram); min_by skips the NULL ordering
         # of the other kinds' rows
-        top_cov = F.min_by(cov, F.when(is_kind(f"g{n}"), F.struct(-cnt, F.col("gram"))))
-        agg_exprs.append(clipped(F.coalesce(top_cov, F.lit(0))).alias(f"top{n}_char_frac"))
+        top_cov = f"min_by({cov}, CASE WHEN kind = 'g{n}' THEN struct(-cnt, gram) END)"
+        aggs[f"top{n}_char_frac"] = clipped(f"coalesce({top_cov}, 0)")
     for n in sorted(set(dup_ns)):
-        agg_exprs.append(clipped(dup_chars(f"g{n}")).alias(f"dup{n}_char_frac"))
-    stats = counted.groupBy("doc_id", "n_chars").agg(*agg_exprs)
+        aggs[f"dup{n}_char_frac"] = clipped(dup_chars(f"g{n}"))
+    stats = counted.groupBy("doc_id", "n_chars").agg(
+        *[F.expr(f"{e} AS {c}") for c, e in aggs.items()]
+    )
     # docs with no units at all (empty/whitespace text) vanish in the
     # explode — restore them with all-zero stats off the doc spine
     spine = arrays.select("doc_id", "n_chars")
-    stat_cols = [c for c in stats.columns if c not in ("doc_id", "n_chars")]
-    return spine.join(stats, ["doc_id", "n_chars"], "left").select(
+    return spine.join(stats, ["doc_id", "n_chars"], "left").selectExpr(
         "doc_id",
         "n_chars",
-        *[
-            F.coalesce(F.col(c), F.lit(0) if c == "n_lines" else F.lit(0.0)).alias(c)
-            for c in stat_cols
-        ],
+        *[f"coalesce({c}, {0 if c == 'n_lines' else '0.0D'}) AS {c}" for c in aggs],
     )
+
+
+def _char_frac_sql(chars: str) -> str:
+    """SQL text: ``chars`` over the document's chars, clipped to 1."""
+    return f"least({chars} / cast(greatest(n_chars, 1) AS double), 1.0D)"
 
 
 def _repetition_stats_local(
@@ -319,77 +339,52 @@ def _repetition_stats_local(
     arithmetic → fold order is immaterial."""
     d, kinds = _unit_arrays(docs, id_col, text_col, top_ns, dup_ns)
     # the single expensive pass: (gram, cnt) pairs per kind
-    d1 = d.select(
+    d1 = d.selectExpr(
         "doc_id",
         "n_chars",
         *[f"_a_{k}" for k in kinds],
         *[
-            F.expr(
-                f"transform(array_distinct(_a_{k}), g -> named_struct("
-                f"'g', g, 'c', size(filter(_a_{k}, x -> x = g))))"
-            ).alias(f"_c_{k}")
+            f"transform(array_distinct(_a_{k}), g -> named_struct("
+            f"'g', g, 'c', size(filter(_a_{k}, x -> x = g)))) AS _c_{k}"
             for k in kinds
         ],
     )
     stat_cols = []
     for k in kinds:
         C = f"_c_{k}"
-        stat_cols.append(F.size(f"_a_{k}").cast("long").alias(f"_nu_{k}"))
-        stat_cols.append(F.size(C).cast("long").alias(f"_nd_{k}"))
+        stat_cols.append(f"cast(size(_a_{k}) AS bigint) AS _nu_{k}")
+        stat_cols.append(f"cast(size({C}) AS bigint) AS _nd_{k}")
         stat_cols.append(
-            F.expr(
-                f"aggregate({C}, cast(0 as bigint), (acc, s) -> "
-                f"acc + (case when s.c >= 2 "
-                f"then cast(s.c as bigint) * length(s.g) else cast(0 as bigint) end))"
-            ).alias(f"_dup_{k}")
+            f"aggregate({C}, cast(0 as bigint), (acc, s) -> "
+            f"acc + (case when s.c >= 2 "
+            f"then cast(s.c as bigint) * length(s.g) else cast(0 as bigint) end)) AS _dup_{k}"
         )
         if k != "line":
-            stat_cols.append(
-                F.expr(f"aggregate({C}, 0, (acc, s) -> greatest(acc, s.c))").alias(
-                    f"_mc_{k}"
-                )
-            )
-    d2 = d1.select("doc_id", "n_chars", *[f"_c_{k}" for k in kinds], *stat_cols)
+            stat_cols.append(f"aggregate({C}, 0, (acc, s) -> greatest(acc, s.c)) AS _mc_{k}")
+    d2 = d1.selectExpr("doc_id", "n_chars", *[f"_c_{k}" for k in kinds], *stat_cols)
     # top coverage: O(distinct) scan of the pair array against max count
     top_cols = [
-        F.expr(
-            f"cast(_mc_{k} as bigint) * length(array_min("
-            f"transform(filter(_c_{k}, s -> s.c = _mc_{k}), s -> s.g)))"
-        ).alias(f"_top_{k}")
+        f"cast(_mc_{k} as bigint) * length(array_min("
+        f"transform(filter(_c_{k}, s -> s.c = _mc_{k}), s -> s.g))) AS _top_{k}"
         for k in kinds
         if k != "line"
     ]
-    d3 = d2.select("*", *top_cols)
-    safe = F.greatest(F.col("n_chars"), F.lit(1)).cast("double")
+    d3 = d2.selectExpr("*", *top_cols)
+
     out = [
-        F.col("_nu_line").alias("n_lines"),
-        F.round(
-            F.when(F.col("_nu_line") == 0, F.lit(0.0)).otherwise(
-                (F.col("_nu_line") - F.col("_nd_line"))
-                / F.col("_nu_line").cast("double")
-            ),
-            9,
-        ).alias("dup_line_frac"),
-        F.round(
-            F.least(F.col("_dup_line") / safe, F.lit(1.0)), 9
-        ).alias("dup_line_char_frac"),
+        "_nu_line AS n_lines",
+        "round(CASE WHEN _nu_line = 0 THEN 0.0D ELSE "
+        "(_nu_line - _nd_line) / cast(_nu_line AS double) END, 9) AS dup_line_frac",
+        f"round({_char_frac_sql('_dup_line')}, 9) AS dup_line_char_frac",
     ]
     for n in sorted(set(top_ns)):
         out.append(
-            F.round(
-                F.when(F.col(f"_nu_g{n}") == 0, F.lit(0.0)).otherwise(
-                    F.least(F.col(f"_top_g{n}") / safe, F.lit(1.0))
-                ),
-                9,
-            ).alias(f"top{n}_char_frac")
+            f"round(CASE WHEN _nu_g{n} = 0 THEN 0.0D ELSE {_char_frac_sql(f'_top_g{n}')} END, 9) "
+            f"AS top{n}_char_frac"
         )
     for n in sorted(set(dup_ns)):
-        out.append(
-            F.round(F.least(F.col(f"_dup_g{n}") / safe, F.lit(1.0)), 9).alias(
-                f"dup{n}_char_frac"
-            )
-        )
-    return d3.select("doc_id", "n_chars", *out)
+        out.append(f"round({_char_frac_sql(f'_dup_g{n}')}, 9) AS dup{n}_char_frac")
+    return d3.selectExpr("doc_id", "n_chars", *out)
 
 
 def decontaminate(
@@ -421,12 +416,8 @@ def decontaminate(
     """
     if join_on not in ("hash", "gram"):
         raise ValueError("join_on must be 'hash' or 'gram'")
-
-    def key(g):
-        return F.xxhash64(g) if join_on == "hash" else g
-
     # built from the tokens projected once per side as ``_tk``
-    grams = F.array_distinct(_grams(F.col("_tk"), n)).alias("grams")
+    grams = f"array_distinct({_grams_sql('_tk', n)}) AS grams"
 
     # r6 (guide §2.3 "shuffle keys, not payloads", applied to the
     # Generate): hash INSIDE the array and explode int64s — the explode
@@ -437,30 +428,26 @@ def decontaminate(
     # the bare column: InferFiltersFromGenerate adds size(grams) > 0 for
     # a bare attribute, and pushdown would inline the whole token and
     # gram expression into that filter below the token projection.
-    dg = docs.select(
-        F.col(id_col).alias("doc_id"), ws_tokens(F.col(text_col)).alias("_tk")
-    ).select("doc_id", grams)
-    doc_side = dg.select(
-        "doc_id",
-        F.size("grams").alias("n_grams"),
-        F.explode(F.transform("grams", key)).alias("k"),
+    keys = f"explode(transform(grams, g -> {'xxhash64(g)' if join_on == 'hash' else 'g'})) AS k"
+    doc_side = (
+        docs.selectExpr(f"{_q(id_col)} AS doc_id", f"{_ws_tokens_sql(_q(text_col))} AS _tk")
+        .selectExpr("doc_id", grams)
+        .selectExpr("doc_id", "size(grams) AS n_grams", keys)
     )
     bench_side = (
-        benchmark.select(ws_tokens(F.col(bench_text_col)).alias("_tk"))
-        .select(grams)
-        .select(F.explode(F.transform("grams", key)).alias("k"))
+        benchmark.selectExpr(f"{_ws_tokens_sql(_q(bench_text_col))} AS _tk")
+        .selectExpr(grams)
+        .selectExpr(keys)
         .distinct()
     )
     hits = doc_side.join(F.broadcast(bench_side), "k").groupBy(
         "doc_id", "n_grams"
-    ).agg(F.count(F.lit(1)).alias("n_hit_grams"))
-    return hits.select(
+    ).agg(F.expr("count(1) AS n_hit_grams"))
+    return hits.selectExpr(
         "doc_id",
         "n_hit_grams",
         "n_grams",
-        F.round(
-            F.col("n_hit_grams") / F.col("n_grams").cast("double"), 9
-        ).alias("hit_frac"),
+        "round(n_hit_grams / cast(n_grams AS double), 9) AS hit_frac",
     )
 
 
@@ -482,16 +469,15 @@ def entropy_stats(
     repetition_stats).  Each distinct symbol is counted once (one
     filter pass over the array), and the text is split once into chars
     and once into tokens.  Empty docs yield zero entropies, not NaN."""
-    t = F.coalesce(F.col(text_col), F.lit(""))
+    t = f"coalesce({_q(text_col)}, '')"
     # split('', '') yields [''] — guard empties so counts come out 0;
     # tokens via ws_tokens (drops the phantom '' a leading tab/newline
     # leaves behind — code-review r5)
-    prep = docs.select(
-        F.col(id_col).alias("doc_id"),
-        F.when(
-            F.length(t) == 0, F.array().cast("array<string>")
-        ).otherwise(F.split(t, "")).alias("_cs"),
-        ws_tokens(t).alias("_tk"),
+    prep = docs.selectExpr(
+        f"{_q(id_col)} AS doc_id",
+        f"CASE WHEN length({t}) = 0 THEN cast(array() AS array<string>) "
+        f"ELSE split({t}, '') END AS _cs",
+        f"{_ws_tokens_sql(t)} AS _tk",
     )
 
     def h(arr: str) -> str:
@@ -503,21 +489,16 @@ def entropy_stats(
         )
         return f"aggregate({probs}, cast(0.0 as double), (acc, p) -> acc - p * ln(p))"
 
-    return prep.select(
+    return prep.selectExpr(
         "doc_id",
-        F.size("_cs").cast("long").alias("n_chars"),
-        F.size("_tk").cast("long").alias("n_tokens"),
-        F.size(F.array_distinct("_cs")).cast("long").alias("char_distinct"),
-        F.size(F.array_distinct("_tk")).cast("long").alias("token_distinct"),
+        "cast(size(_cs) AS bigint) AS n_chars",
+        "cast(size(_tk) AS bigint) AS n_tokens",
+        "cast(size(array_distinct(_cs)) AS bigint) AS char_distinct",
+        "cast(size(array_distinct(_tk)) AS bigint) AS token_distinct",
         # + 0.0 normalizes IEEE -0.0 (single-symbol docs: -1·ln(1)) so
         # byte-level value hashes can't split on the zero sign
-        (F.round(F.expr(h("_cs")), 6) + F.lit(0.0)).alias("char_entropy"),
-        (F.round(F.expr(h("_tk")), 6) + F.lit(0.0)).alias("token_entropy"),
-        F.round(
-            F.when(F.size("_tk") == 0, F.lit(0.0)).otherwise(
-                F.size(F.array_distinct("_tk"))
-                / F.size("_tk").cast("double")
-            ),
-            6,
-        ).alias("token_ttr"),
+        f"round({h('_cs')}, 6) + 0.0D AS char_entropy",
+        f"round({h('_tk')}, 6) + 0.0D AS token_entropy",
+        "round(CASE WHEN size(_tk) = 0 THEN 0.0D ELSE "
+        "size(array_distinct(_tk)) / cast(size(_tk) AS double) END, 6) AS token_ttr",
     )

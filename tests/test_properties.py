@@ -505,8 +505,9 @@ def test_decontaminate_hash_equals_gram_path(spark, texts, bench_texts):
 @SPARKED
 @given(_sparse_docs)
 def test_word_ngrams_match_python(spark, texts):
-    """word_ngrams == plain-Python n-grams over str.split()
-    (ASCII whitespace, so Java's \\s and Python agree); NULL ≡ ''."""
+    """word_ngrams and the SQL-text gram builder the T-ops use both
+    == plain-Python n-grams over str.split() (ASCII whitespace, so
+    Java's \\s and Python agree); NULL ≡ ''."""
     from pyspark.sql import functions as F
 
     from gips_spark.operators import textops
@@ -515,8 +516,12 @@ def test_word_ngrams_match_python(spark, texts):
     ns = (1, 2, 3, 5)
     got = {
         r["doc_id"]: r
-        for r in df.select(
-            "doc_id", *[textops.word_ngrams(F.col("text"), n).alias(f"g{n}") for n in ns]
+        for r in df.selectExpr(
+            "doc_id", "text", f"{textops._ws_tokens_sql('text')} AS _tk"
+        ).select(
+            "doc_id",
+            *[textops.word_ngrams(F.col("text"), n).alias(f"g{n}") for n in ns],
+            *[F.expr(textops._grams_sql("_tk", n)).alias(f"s{n}") for n in ns],
         ).collect()
     }
     for i, t in enumerate(texts):
@@ -524,6 +529,7 @@ def test_word_ngrams_match_python(spark, texts):
         for n in ns:
             want = [" ".join(toks[j : j + n]) for j in range(len(toks) - n + 1)]
             assert got[i][f"g{n}"] == want, (t, n)
+            assert got[i][f"s{n}"] == want, (t, n)
 
 
 @SPARKED

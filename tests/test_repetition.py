@@ -303,3 +303,81 @@ def test_text_split_once_per_input(spark):
         got = _split_patterns(textops.decontaminate(docs, bench, n=8, join_on=join_on))
         assert got == [r"\s+", r"\s+"], (join_on, got)  # one per input side
     assert _split_patterns(textops.entropy_stats(docs)) == ["", r"\s+"]
+    # standalone word_ngrams binds its tokens to one lambda variable
+    # (it split the text 2n+2 = 18 times for n = 8)
+    grams = docs.select(textops.word_ngrams(F.col("text"), 8).alias("g"))
+    assert _split_patterns(grams) == [r"\s+"]
+
+
+def test_tops_quote_caller_column_names(spark):
+    """Caller-supplied column names are spliced into SQL text quoted:
+    a space, a dot (F.col reads `t.x` as a struct field access) or a
+    backtick in a name gives the same rows as the default names."""
+    plain = spark.createDataFrame(DOCS, "doc_id long, text string")
+    bench = spark.createDataFrame([("p q r s t p q r s",)], "text string")
+
+    def rows(df):
+        return sorted(tuple(r) for r in df.collect())
+
+    for id_col, text_col, bench_col in [("doc id", "t.x", "a`b"), ("a`b", "doc id", "t.x")]:
+        docs, names = plain.toDF(id_col, text_col), {"id_col": id_col, "text_col": text_col}
+        assert rows(textops.entropy_stats(docs, **names)) == rows(textops.entropy_stats(plain))
+        for strategy in ("explode", "local"):
+            assert rows(textops.repetition_stats(docs, strategy=strategy, **names)) == rows(
+                textops.repetition_stats(plain, strategy=strategy)
+            ), strategy
+        for join_on in ("hash", "gram"):
+            got = textops.decontaminate(
+                docs, bench.toDF(bench_col), n=5, join_on=join_on,
+                bench_text_col=bench_col, **names,
+            )
+            want = textops.decontaminate(plain, bench, n=5, join_on=join_on)
+            assert rows(got) == rows(want) != [], join_on
+
+
+# py4j commands the Column-tree builds took, one per Column node (less
+# the object-release commands, whose timing follows Python's GC)
+_COLUMN_TREE_COMMANDS = {
+    "entropy_stats": 476,
+    "repetition_stats": 2062,
+    "repetition_stats_local": 1799,
+    "decontaminate": 858,
+    "decontaminate_gram": 842,
+}
+
+
+@pytest.mark.parametrize("op", sorted(_COLUMN_TREE_COMMANDS))
+def test_tops_build_in_few_py4j_round_trips(spark, monkeypatch, op):
+    """Each T-op's per-row expressions are SQL text, one JVM call per
+    projected column: building the DataFrame takes at most a fifth of
+    the py4j round trips of a Column tree.  The count repeats exactly."""
+    from py4j import protocol
+    from py4j.clientserver import ClientServerConnection
+
+    docs = spark.createDataFrame(DOCS, "doc_id long, text string")
+    bench = spark.createDataFrame([("p q r s t u v w",)], "text string")
+    build = {
+        "entropy_stats": lambda: textops.entropy_stats(docs),
+        "repetition_stats": lambda: textops.repetition_stats(docs),
+        "repetition_stats_local": lambda: textops.repetition_stats(docs, strategy="local"),
+        "decontaminate": lambda: textops.decontaminate(docs, bench, n=8),
+        "decontaminate_gram": lambda: textops.decontaminate(docs, bench, n=8, join_on="gram"),
+    }[op]
+    build()
+    sent = []
+    send = ClientServerConnection.send_command
+
+    def counting(self, command):
+        if not command.startswith(protocol.MEMORY_COMMAND_NAME):
+            sent.append(command)
+        return send(self, command)
+
+    counts = []
+    for _ in range(2):
+        sent.clear()
+        with monkeypatch.context() as m:
+            m.setattr(ClientServerConnection, "send_command", counting)
+            build()
+        counts.append(len(sent))
+    assert counts[0] == counts[1]
+    assert counts[0] <= _COLUMN_TREE_COMMANDS[op] // 5, counts
