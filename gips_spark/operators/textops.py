@@ -26,13 +26,13 @@ def analyze_documents(docs: DataFrame, id_col: str = "doc_id", text_col: str = "
     """→ per-document analysis columns (lang_pred, quality parts, tokens,
     fingerprint). Hot counters are JVM expressions; lang/fingerprint are
     Arrow kernels."""
-    t = F.col(text_col)
+    t = F.col(_q(text_col))
     ws_tokens = F.when(
         F.length(F.trim(t)) == 0, F.lit(0)
     ).otherwise(F.size(F.split(F.trim(t), r"\s+")))
     n_punct = F.length(t) - F.length(F.regexp_replace(t, r"[^\w\s]", ""))
     return docs.select(
-        F.col(id_col),
+        F.col(_q(id_col)),
         t.alias(text_col),
         F.length(t).alias("n_chars"),
         ws_tokens.alias("n_tokens_ws"),
@@ -84,11 +84,11 @@ def quality_scores(docs: DataFrame, id_col: str = "doc_id", text_col: str = "tex
     def kernel(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         cols = [f.name for f in QUALITY_SCHEMA.fields]
         for pdf in it:
-            q = textx.quality_score(pdf[text_col])
-            q.insert(0, "doc_id", pdf[id_col].to_numpy())
+            q = textx.quality_score(pdf["text"])
+            q.insert(0, "doc_id", pdf["doc_id"].to_numpy())
             yield q[cols]
 
-    return docs.select(F.col(id_col).alias("doc_id"), F.col(text_col).alias(text_col)).mapInPandas(
+    return docs.select(F.col(_q(id_col)).alias("doc_id"), F.col(_q(text_col)).alias("text")).mapInPandas(
         kernel, schema=QUALITY_SCHEMA
     )
 
@@ -104,19 +104,20 @@ def tfidf_top_terms(
     top-k window.  All JVM; the only scalar is the corpus doc count."""
     from pyspark.sql import Window as W
 
+    doc = F.col(_q(id_col))
     tok = docs.select(
-        F.col(id_col), F.explode(F.split(F.col(text_col), " +")).alias("tok")
+        doc, F.explode(F.split(F.col(_q(text_col)), " +")).alias("tok")
     ).where(F.col("tok") != "")
-    tf = tok.groupBy(id_col, "tok").agg(F.count(F.lit(1)).alias("tf"))
+    tf = tok.groupBy(doc, "tok").agg(F.count(F.lit(1)).alias("tf"))
     dfreq = tf.groupBy("tok").agg(F.count(F.lit(1)).alias("df"))
     n_docs = docs.count()
     idf = F.log(
         (F.lit(float(n_docs) + 1.0)) / (F.col("df") + F.lit(1.0))
     ) + F.lit(1.0)
     scored = tf.join(dfreq, "tok").select(
-        id_col, "tok", "tf", (F.col("tf") * idf).alias("score")
+        doc, "tok", "tf", (F.col("tf") * idf).alias("score")
     )
-    w = W.partitionBy(id_col).orderBy(F.col("score").desc(), F.col("tok").asc())
+    w = W.partitionBy(doc).orderBy(F.col("score").desc(), F.col("tok").asc())
     return scored.withColumn("trank", F.row_number().over(w)).where(
         F.col("trank") <= k
     )

@@ -49,7 +49,7 @@ def enrich_pages(
       doesn't run twice (histogram, final).
     * single-pass (``salt_sample=0.02``): the salt plan comes from the
       assignment-only kernel over a 2% sample of the raw pages
-      (plans/salt.py :: salt_plan_presampled) — no block-manager
+      (plans/salt.py :: salt_plan(fraction=salt_sample)) — no block-manager
       persist, exactly ONE full UDF pass.  This is the 10^12-row shape:
       between stages the lineage protocol checkpoints to parquet anyway,
       and file-level range layout happens at the bucketed write.
@@ -124,7 +124,7 @@ def enrich_pages(
         # scan into k tasks.
         k = max(1, math.ceil(pages.rdd.getNumPartitions() * salt_sample))
         sample = pages.sample(fraction=salt_sample, seed=42).repartition(k)
-        plan = saltplan.salt_plan_presampled(
+        plan = saltplan.salt_plan(
             chain(sample, text=False),
             "h3_7",
             target_rows=salt_target_rows,

@@ -1,4 +1,5 @@
-"""Per-stage metrics (north_star: rows/sec, shuffle bytes, skew ratio).
+"""Shuffle bytes for the per-stage job records (jobs/run_stage.py,
+jobs/ingest_batch.py, jobs/remap_h3.py).
 
 Rows/sec and skew come from the lineage manifests (plans/lineage.py).
 Shuffle bytes are read from Spark's AppStatusStore when reachable via
@@ -7,9 +8,6 @@ version drift on a managed cluster).
 """
 
 from __future__ import annotations
-
-import json
-import time
 
 from pyspark.sql import SparkSession
 
@@ -36,32 +34,3 @@ def shuffle_bytes_total(spark: SparkSession) -> int:
     except Exception:
         return -1
 
-
-class StageTimer:
-    """Collects per-stage wall/rows/shuffle metrics; one JSON line each."""
-
-    def __init__(self, spark: SparkSession, run_id: str):
-        self.spark = spark
-        self.run_id = run_id
-        self.records: list[dict] = []
-
-    def measure(self, stage: str, fn, rows_fn=None):
-        sh0 = shuffle_bytes_total(self.spark)
-        t0 = time.monotonic()
-        result = fn()
-        wall = time.monotonic() - t0
-        sh1 = shuffle_bytes_total(self.spark)
-        rows = rows_fn(result) if rows_fn else None
-        rec = {
-            "run_id": self.run_id,
-            "stage": stage,
-            "wall_s": round(wall, 3),
-            "rows": rows,
-            "rows_per_sec": round(rows / wall, 1) if rows and wall else None,
-            "shuffle_bytes": (sh1 - sh0) if sh0 >= 0 and sh1 >= 0 else -1,
-        }
-        self.records.append(rec)
-        return result
-
-    def dump(self) -> str:
-        return "\n".join(json.dumps(r) for r in self.records)

@@ -20,37 +20,27 @@ from pyspark.sql import functions as F
 DEFAULT_TARGET_ROWS = 100_000
 
 
-def salt_plan(df: DataFrame, cell_col: str, target_rows: int = DEFAULT_TARGET_ROWS) -> DataFrame:
-    """Histogram pass → (cell, n_salt) for cells exceeding `target_rows`."""
-    return (
-        df.groupBy(cell_col)
-        .count()
-        .where(F.col("count") > target_rows)
-        .select(
-            F.col(cell_col),
-            F.ceil(F.col("count") / F.lit(target_rows)).cast("int").alias("n_salt"),
-        )
-    )
-
-
-def salt_plan_presampled(
-    sampled_df: DataFrame,
+def salt_plan(
+    df: DataFrame,
     cell_col: str,
     target_rows: int = DEFAULT_TARGET_ROWS,
-    fraction: float = 0.02,
+    fraction: float = 1.0,
 ) -> DataFrame:
-    """Salt plan from an ALREADY-SAMPLED input.
+    """Histogram pass → (cell, n_salt) for cells whose estimated row
+    count ``count / fraction`` exceeds `target_rows`.
 
-    Catalyst does NOT push `sample` below an ArrowEvalPython projection
-    (verified in-plan), so sampling the UDF *output* costs a full UDF
-    pass — the caller must sample the RAW input and run the enrichment
-    chain on the 2% subset (tile_assign.enrich_pages does this).  Counts
-    are scaled by 1/fraction.  Salting degree needs only the right ORDER
-    of magnitude (underestimates merely leave a group ~2× larger), so a
-    2% sample is plenty for mega-cells; cells below ~50/fraction rows
-    can't be estimated and can't be hot either."""
+    ``fraction=1.0`` is the exact histogram (``count / 1.0`` is exact
+    below 2^53).  A smaller fraction means `df` is ALREADY a sample of
+    that fraction: Catalyst does NOT push `sample` below an
+    ArrowEvalPython projection (verified in-plan), so sampling the UDF
+    *output* costs a full UDF pass — the caller must sample the RAW
+    input and run the enrichment chain on the subset
+    (tile_assign.enrich_pages does this).  Salting degree needs only the
+    right ORDER of magnitude (underestimates merely leave a group ~2×
+    larger), so a 2% sample is plenty for mega-cells; cells below
+    ~50/fraction rows can't be estimated and can't be hot either."""
     est = (
-        sampled_df.groupBy(cell_col)
+        df.groupBy(cell_col)
         .count()
         .select(
             F.col(cell_col),

@@ -3,9 +3,9 @@ synthesized documents (deterministic JVM-generated corpus, no external
 data): entropy_stats, repetition_stats, pack_sequences, decontaminate,
 exact_dedup.
 
-Canary-flanked protocol (same discipline as knn/assign_flanked): a CPU
-canary before and after every trial, best-of-N published WITH all
-trials and flanks so degraded-host readings are auditable.
+Canary-flanked protocol: a CPU canary before and after every trial,
+best-of-N published WITH all trials and flanks so degraded-host
+readings are auditable.
 
 Usage: python scripts/textops_bench.py [trials]   (default 3)
 Runs at local[$SPARK_GRAFT_CPUS] (get_spark's default) and writes

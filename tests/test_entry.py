@@ -1,6 +1,6 @@
 """Driver-contract smoke: entry() + a fast subset of queries vs oracles.
 
-The full gate (all 24 queries at sf0.01) is scripts/check_entry.py; this
+The full gate (all 73 queries at sf0.01) is scripts/check_entry.py; this
 keeps `pytest -x -q` fast while still catching contract regressions.
 """
 

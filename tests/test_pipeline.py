@@ -96,7 +96,7 @@ def test_salt_plan_same_over_repartitioned_sample(pages):
 
     def plan(df):
         cells = df.select(udfs.geocode_and_cells(F.col("url"), F.col("text")).h3_7.alias("h3_7"))
-        return saltplan.salt_plan_presampled(cells, "h3_7", target_rows=20, fraction=0.02)
+        return saltplan.salt_plan(cells, "h3_7", target_rows=20, fraction=0.02)
 
     sample = pages.sample(fraction=0.02, seed=42)
     a, b = plan(sample), plan(sample.repartition(1))

@@ -310,9 +310,10 @@ def test_text_split_once_per_input(spark):
 
 
 def test_tops_quote_caller_column_names(spark):
-    """Caller-supplied column names are spliced into SQL text quoted:
-    a space, a dot (F.col reads `t.x` as a struct field access) or a
-    backtick in a name gives the same rows as the default names."""
+    """Caller-supplied column names are spliced into SQL text and
+    `F.col` quoted: a space, a dot (F.col reads `t.x` as a struct field
+    access) or a backtick in a name gives the same rows as the default
+    names."""
     plain = spark.createDataFrame(DOCS, "doc_id long, text string")
     bench = spark.createDataFrame([("p q r s t p q r s",)], "text string")
 
@@ -333,6 +334,8 @@ def test_tops_quote_caller_column_names(spark):
             )
             want = textops.decontaminate(plain, bench, n=5, join_on=join_on)
             assert rows(got) == rows(want) != [], join_on
+        for op in (textops.analyze_documents, textops.quality_scores, textops.tfidf_top_terms):
+            assert rows(op(docs, **names)) == rows(op(plain)), op.__name__
 
 
 # py4j commands the Column-tree builds took, one per Column node (less

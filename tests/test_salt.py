@@ -6,14 +6,14 @@ from gips_spark.plans import salt as saltplan
 
 
 def test_hot_cells_get_salt(enriched):
-    hot = (
-        enriched.groupBy("h3_7")
-        .count()
-        .where(F.col("count") > 20)
-        .select("h3_7")
-        .collect()
-    )
-    hot_ids = [r["h3_7"] for r in hot if r["h3_7"] is not None]
+    # the exact plan (fraction=1.0) is the hot cells of a plain count,
+    # n_salt = ceil(count / target), the null cell included
+    counts = enriched.groupBy("h3_7").count().collect()
+    hot = {r["h3_7"]: -(-r["count"] // 20) for r in counts if r["count"] > 20}
+    plan = saltplan.salt_plan(enriched, "h3_7", target_rows=20, fraction=1.0)
+    assert {r["h3_7"]: r["n_salt"] for r in plan.collect()} == hot
+    assert None in hot
+    hot_ids = [c for c in hot if c is not None]
     if not hot_ids:  # fixture guarantees hotspots at this threshold
         raise AssertionError("fixture produced no hot cells — skew missing")
     fanout = (
