@@ -10,8 +10,8 @@ machinery.
 * ``extract_text`` is the byte-identical-per-url invariant of
   BASELINE.json's ``input_hint``: a frozen, deterministic pipeline
   (strip comments/script/style → drop tags → decode entities →
-  normalize whitespace).  Any change to it invalidates goldens —
-  bump ``EXTRACT_VERSION`` and regenerate.
+  normalize whitespace).  Any change to it invalidates goldens:
+  regenerate them.
 * ``geocode_arrow`` mirrors the reference's "filename parsing is the
   schema inference" idea (`gips/data/core.py :: Asset.__init__`,
   SURVEY.md §2.8 X1): coordinates are recovered from the url/text with
@@ -37,8 +37,6 @@ import numpy as np
 import pandas as pd
 import pyarrow as pa
 import pyarrow.compute as pc
-
-EXTRACT_VERSION = 1
 
 # --------------------------------------------------------------- gazetteer
 # ~48 major cities (public coordinates, 4-decimal precision). The first 12

@@ -115,20 +115,6 @@ def s2_cell(lat: pa.Array, lon: pa.Array) -> pa.Array:
     return _cell(lat, lon, s2.latlng_to_cell, S2_LEVEL)
 
 
-@pandas_udf(T.DoubleType())
-def haversine_m(
-    lat1: pd.Series, lon1: pd.Series, lat2: pd.Series, lon2: pd.Series
-) -> pd.Series:
-    return pd.Series(
-        geom.haversine_m(
-            lat1.to_numpy(dtype=np.float64),
-            lon1.to_numpy(dtype=np.float64),
-            lat2.to_numpy(dtype=np.float64),
-            lon2.to_numpy(dtype=np.float64),
-        )
-    )
-
-
 @pandas_udf(T.StringType())
 def lang_id_udf(text: pd.Series) -> pd.Series:
     return textx.lang_id(text)

@@ -25,13 +25,6 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.functions import pandas_udf
 
-# fixed odd multipliers (splitmix-derived constants, frozen)
-_MH_A = np.array(
-    [0x9E3779B97F4A7C15, 0xBF58476D1CE4E5B9, 0x94D049BB133111EB, 0xD6E8FEB86659FD93],
-    dtype=np.uint64,
-)
-
-
 def _shingle_hashes(text: str, n: int) -> np.ndarray:
     """Character n-gram FNV-1a-64 hashes (vectorized over windows)."""
     b = text.encode("utf-8")

@@ -29,17 +29,6 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-ASSET_SCHEMA = T.StructType(
-    [
-        T.StructField("asset_id", T.StringType()),
-        T.StructField("kind", T.StringType()),  # image | audio | video
-        T.StructField("payload", T.BinaryType()),
-        T.StructField("width", T.IntegerType()),
-        T.StructField("height", T.IntegerType()),
-        T.StructField("n_frames", T.IntegerType()),
-    ]
-)
-
 FEATURE_SCHEMA = T.StructType(
     [
         T.StructField("asset_id", T.StringType()),
@@ -51,9 +40,6 @@ FEATURE_SCHEMA = T.StructType(
 
 _MAGIC = b"GR01"
 _HEADER = struct.Struct("<4sHHHBB")
-
-REAL_DECODERS_AVAILABLE = False  # no PIL/ffmpeg in this container
-
 
 # ------------------------------------------------------------- raw codec
 

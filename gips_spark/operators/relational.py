@@ -120,15 +120,6 @@ def scenes_in_window(scenes: DataFrame, pages: DataFrame) -> DataFrame:
     ).select("url", "scene_id", "tile_id", "warc_ts")
 
 
-def tile_set_ops(requested: DataFrame, available: DataFrame) -> dict[str, DataFrame]:
-    """U1–U3 over single-column tile_id frames."""
-    return {
-        "intersect": requested.intersect(available),
-        "union": requested.union(available).distinct(),
-        "missing": requested.exceptAll(available.intersect(requested)),
-    }
-
-
 def parse_scene_id(df: DataFrame, col: str = "scene_id") -> DataFrame:
     """X1 — filename parsing IS the schema inference (`gips/data/core.py ::
     Asset.__init__`): `{sensor}_{tile}_{%Y%j}` → typed columns via

@@ -225,7 +225,7 @@ def repetition_stats(
     text_col: str = "text",
     top_ns: tuple = (2, 3),
     dup_ns: tuple = (5,),
-    strategy: str = "explode",
+    strategy: str = "local",
 ) -> DataFrame:
     """Within-document repetition signals (the Gopher §A1.1 repetition
     filter family, Rae et al. 2021 — public): per document,
@@ -244,19 +244,20 @@ def repetition_stats(
     is integer, so accumulation order cannot matter; pinned equal by
     pytest):
 
-    * ``strategy='explode'`` (default) — ONE tagged explode →
-      partial-count shuffle on (doc, kind, gram); the gram in the key
-      spreads giant documents across partitions → ONE (doc, n_chars)
-      aggregation whose per-kind aggregates are conditional on the
-      kind: two hash exchanges in all.  O(units) work; the safe
-      asymptotic choice for long documents (10^5+ tokens).
-    * ``strategy='local'`` — ZERO-shuffle narrow projection: per-doc
-      counts via higher-order array functions (filter-count against the
-      doc's own gram array, the entropy_stats pattern).  O(distinct ×
-      units) per doc — wins decisively on short/mid web documents
-      (measured ~3.6× on 24-token docs with clean canary flanks,
-      BENCH/textops_bench.json) and loses only when distinct×units per
-      doc outgrows the cost of shuffling the units.
+    * ``strategy='local'`` (default) — a ZERO-shuffle narrow projection:
+      per document and kind, one fold over the units sorted ascending
+      (``_repetition_stats_local``).  O(u log u) per document for u
+      units, and no Exchange.
+    * ``strategy='explode'`` — ONE tagged explode → partial-count
+      shuffle on (doc, kind, gram) → ONE (doc, n_chars) aggregation
+      whose per-kind aggregates are conditional on the kind: two hash
+      exchanges in all.  The gram in the shuffle key spreads one
+      document's units over every partition, where 'local' sorts each
+      document in one task; it is the reference the tests hold 'local'
+      equal to.  Pass it for a few giant documents only after timing
+      both: at local[4] on a 4-CPU host 'local' still won with fewer
+      documents than cores (1 doc × 600k tokens over 50k words: 5.2 s
+      against 8.5 s; 2 docs × 300k Zipf tokens: 4.1 s against 5.6 s).
 
     Everything JVM-side, zero Python, in both.  Lines = split(text,
     '\\n').  Both split each text once into lines and once into
@@ -331,61 +332,58 @@ def _repetition_stats_local(
 ) -> DataFrame:
     """Zero-shuffle strategy for repetition_stats (see its docstring).
 
-    One O(distinct × units) pass per kind builds a (gram, cnt) struct
-    array; every statistic is then an O(distinct) fold over it
-    (code-review r5: the first cut recomputed the filter-count 4×).
-    dup_chars folds cnt·len for cnt ≥ 2; the top gram is array_min over
-    the grams achieving the max count (same (cnt DESC, gram ASC)
-    tie-break as the explode strategy's min_by).  All integer
-    arithmetic → fold order is immaterial."""
+    Per kind, one ``aggregate`` fold over the document's units sorted
+    ascending by ``sort_array``, which compares with the type's own
+    ordering (``array_sort`` without a comparator evaluates a default
+    comparator lambda, interpreted, per comparison): equal units are
+    adjacent, so each run of one unit is its
+    count, and the fold closes a run when the unit changes.  The
+    accumulator is (prev, run, n_distinct, dup_chars, max_cnt,
+    top_gram); a closed run adds 1 to n_distinct, ``run * length(prev)``
+    to dup_chars when ``run >= 2``, and replaces the top gram only when
+    ``run > max_cnt`` strictly, so the first gram in ascending order
+    wins a tie: the explode strategy's (cnt DESC, gram ASC).  Spark
+    orders strings by UTF-8 bytes, which is code-point order.  O(u log
+    u) per document for u units, all bigint arithmetic."""
     d, kinds = _unit_arrays(docs, id_col, text_col, top_ns, dup_ns)
-    # the single expensive pass: (gram, cnt) pairs per kind
-    d1 = d.selectExpr(
+
+    def closed(a: str) -> dict:
+        # the statistics with the run that ends at `a` counted in
+        return {
+            "nd": f"{a}.nd + CASE WHEN {a}.r > 0 THEN 1L ELSE 0L END",
+            "dup": f"{a}.dup + CASE WHEN {a}.r >= 2 THEN {a}.r * length({a}.p) ELSE 0L END",
+            "mc": f"greatest({a}.mc, {a}.r)",
+            "tg": f"CASE WHEN {a}.r > {a}.mc THEN {a}.p ELSE {a}.tg END",
+        }
+
+    def struct(**fields) -> str:
+        return "named_struct(" + ", ".join(f"'{k}', {v}" for k, v in fields.items()) + ")"
+
+    null = "cast(NULL AS string)"
+    zero = struct(p=null, r="0L", nd="0L", dup="0L", mc="0L", tg=null)
+    same = struct(p="a.p", r="a.r + 1L", nd="a.nd", dup="a.dup", mc="a.mc", tg="a.tg")
+    # x = a.p is NULL at the first unit, which opens the first run
+    step = f"(a, x) -> CASE WHEN x = a.p THEN {same} ELSE {struct(p='x', r='1L', **closed('a'))} END"
+    end = closed("a")
+    top = f"coalesce({end['mc']} * length({end['tg']}), 0L)"  # 0 when the kind has no units
+    finish = "a -> " + struct(nd=end["nd"], dup=end["dup"], top=top)
+    folded = d.selectExpr(
         "doc_id",
         "n_chars",
-        *[f"_a_{k}" for k in kinds],
-        *[
-            f"transform(array_distinct(_a_{k}), g -> named_struct("
-            f"'g', g, 'c', size(filter(_a_{k}, x -> x = g)))) AS _c_{k}"
-            for k in kinds
-        ],
+        "cast(size(_a_line) AS bigint) AS n_lines",
+        *[f"aggregate(sort_array(_a_{k}), {zero}, {step}, {finish}) AS _s_{k}" for k in kinds],
     )
-    stat_cols = []
-    for k in kinds:
-        C = f"_c_{k}"
-        stat_cols.append(f"cast(size(_a_{k}) AS bigint) AS _nu_{k}")
-        stat_cols.append(f"cast(size({C}) AS bigint) AS _nd_{k}")
-        stat_cols.append(
-            f"aggregate({C}, cast(0 as bigint), (acc, s) -> "
-            f"acc + (case when s.c >= 2 "
-            f"then cast(s.c as bigint) * length(s.g) else cast(0 as bigint) end)) AS _dup_{k}"
-        )
-        if k != "line":
-            stat_cols.append(f"aggregate({C}, 0, (acc, s) -> greatest(acc, s.c)) AS _mc_{k}")
-    d2 = d1.selectExpr("doc_id", "n_chars", *[f"_c_{k}" for k in kinds], *stat_cols)
-    # top coverage: O(distinct) scan of the pair array against max count
-    top_cols = [
-        f"cast(_mc_{k} as bigint) * length(array_min("
-        f"transform(filter(_c_{k}, s -> s.c = _mc_{k}), s -> s.g))) AS _top_{k}"
-        for k in kinds
-        if k != "line"
-    ]
-    d3 = d2.selectExpr("*", *top_cols)
-
     out = [
-        "_nu_line AS n_lines",
-        "round(CASE WHEN _nu_line = 0 THEN 0.0D ELSE "
-        "(_nu_line - _nd_line) / cast(_nu_line AS double) END, 9) AS dup_line_frac",
-        f"round({_char_frac_sql('_dup_line')}, 9) AS dup_line_char_frac",
+        "n_lines",
+        "round(CASE WHEN n_lines = 0 THEN 0.0D ELSE "
+        "(n_lines - _s_line.nd) / cast(n_lines AS double) END, 9) AS dup_line_frac",
+        f"round({_char_frac_sql('_s_line.dup')}, 9) AS dup_line_char_frac",
     ]
     for n in sorted(set(top_ns)):
-        out.append(
-            f"round(CASE WHEN _nu_g{n} = 0 THEN 0.0D ELSE {_char_frac_sql(f'_top_g{n}')} END, 9) "
-            f"AS top{n}_char_frac"
-        )
+        out.append(f"round({_char_frac_sql(f'_s_g{n}.top')}, 9) AS top{n}_char_frac")
     for n in sorted(set(dup_ns)):
-        out.append(f"round({_char_frac_sql(f'_dup_g{n}')}, 9) AS dup{n}_char_frac")
-    return d3.selectExpr("doc_id", "n_chars", *out)
+        out.append(f"round({_char_frac_sql(f'_s_g{n}.dup')}, 9) AS dup{n}_char_frac")
+    return folded.selectExpr("doc_id", "n_chars", *out)
 
 
 def decontaminate(
@@ -408,8 +406,10 @@ def decontaminate(
 
     Shape at 100 TB: per-doc ``array_distinct`` BEFORE the explode (the
     corpus side never carries repeat grams into the shuffle), benchmark
-    grams deduped then **broadcast** — the corpus never shuffles; the
-    only wide op is the final doc_id partial-count agg.  join_on='hash'
+    grams **broadcast** as the build side of a left-semi join, which
+    emits each corpus (doc, gram) row at most once without a distinct()
+    pre-pass — the corpus never shuffles; the only wide op is the
+    final doc_id partial-count agg.  join_on='hash'
     (default) joins on xxhash64(gram) — 8-byte keys instead of strings
     on the wire; 'gram' joins raw strings (the oracle path — pinned
     equal to the hash path by pytest; a collision needs ~2^32 distinct
@@ -439,9 +439,10 @@ def decontaminate(
         benchmark.selectExpr(f"{_ws_tokens_sql(_q(bench_text_col))} AS _tk")
         .selectExpr(grams)
         .selectExpr(keys)
-        .distinct()
     )
-    hits = doc_side.join(F.broadcast(bench_side), "k").groupBy(
+    # a semi join emits each probe row at most once, so the build side
+    # needs no distinct() (which cost a job and an exchange)
+    hits = doc_side.join(F.broadcast(bench_side), "k", "left_semi").groupBy(
         "doc_id", "n_grams"
     ).agg(F.expr("count(1) AS n_hit_grams"))
     return hits.selectExpr(

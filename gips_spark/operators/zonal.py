@@ -57,9 +57,6 @@ def _index_formulas(b: dict) -> dict:
     return out
 
 
-PRODUCTS = ["ndvi", "evi", "lswi", "ndsi", "ndwi", "msavi2", "satvi", "vari"]
-
-
 def compute_products(raster_chunks: DataFrame, products: list[str] | None = None) -> DataFrame:
     """(scene, band, chunk) rows → (scene, product, chunk) rows.
 

@@ -34,8 +34,6 @@ from pyspark.sql import types as T
 
 from gips_spark.functions.textx import GAZETTEER, HOTSPOT_CITIES
 
-SIZES = {"small": 10_000, "med": 100_000, "large": 1_000_000}
-
 _EPOCH_2025 = 1735689600  # 2025-01-01T00:00:00Z
 _YEAR_SECONDS = 365 * 86400
 
@@ -538,17 +536,3 @@ def gen_knn_queries_pdf(rng_seed: int = 42) -> pd.DataFrame:
 
 def gen_knn_queries(spark: SparkSession) -> DataFrame:
     return spark.createDataFrame(gen_knn_queries_pdf())
-
-
-def write_fixture_set(spark: SparkSession, out_dir: str, size: str = "small") -> None:
-    """Materialize a full fixture set as parquet under `out_dir`."""
-    n = SIZES[size]
-    gen_pages(spark, n).write.mode("overwrite").parquet(f"{out_dir}/pages.parquet")
-    gen_extents(spark).write.mode("overwrite").parquet(f"{out_dir}/extents.parquet")
-    gen_scenes(spark).write.mode("overwrite").parquet(f"{out_dir}/scenes.parquet")
-    gen_raster_chunks(spark).write.mode("overwrite").parquet(
-        f"{out_dir}/raster_chunks.parquet"
-    )
-    gen_knn_queries(spark).write.mode("overwrite").parquet(
-        f"{out_dir}/knn_queries.parquet"
-    )

@@ -4,13 +4,15 @@ count, column names, and order-insensitive canonicalized values."""
 
 from __future__ import annotations
 
+import os
 import sys
 
 import duckdb
 import numpy as np
 import pandas as pd
 
-sys.path.insert(0, "/root/repo")
+# the checkout this script lives in, not whichever one is on sys.path
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import __spark_entry__ as entrymod  # noqa: E402
 from gips_spark import get_spark  # noqa: E402

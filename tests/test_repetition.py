@@ -266,7 +266,9 @@ def test_repetition_local_strategy_bit_identical(spark):
             text = text.replace(" dd ", "\n", 3)
         docs.append((i, text))
     df = spark.createDataFrame(docs, "doc_id long, text string")
-    a = sorted(tuple(r) for r in textops.repetition_stats(df).collect())
+    a = sorted(
+        tuple(r) for r in textops.repetition_stats(df, strategy="explode").collect()
+    )
     b = sorted(
         tuple(r) for r in textops.repetition_stats(df, strategy="local").collect()
     )
@@ -361,7 +363,7 @@ def test_tops_build_in_few_py4j_round_trips(spark, monkeypatch, op):
     bench = spark.createDataFrame([("p q r s t u v w",)], "text string")
     build = {
         "entropy_stats": lambda: textops.entropy_stats(docs),
-        "repetition_stats": lambda: textops.repetition_stats(docs),
+        "repetition_stats": lambda: textops.repetition_stats(docs, strategy="explode"),
         "repetition_stats_local": lambda: textops.repetition_stats(docs, strategy="local"),
         "decontaminate": lambda: textops.decontaminate(docs, bench, n=8),
         "decontaminate_gram": lambda: textops.decontaminate(docs, bench, n=8, join_on="gram"),
