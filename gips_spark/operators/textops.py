@@ -441,7 +441,7 @@ def decontaminate(
         .selectExpr(keys)
     )
     # a semi join emits each probe row at most once, so the build side
-    # needs no distinct() (which cost a job and an exchange)
+    # needs no distinct()
     hits = doc_side.join(F.broadcast(bench_side), "k", "left_semi").groupBy(
         "doc_id", "n_grams"
     ).agg(F.expr("count(1) AS n_hit_grams"))
