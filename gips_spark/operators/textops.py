@@ -200,23 +200,9 @@ def word_ngrams(text_col, n: int):
     return F.transform(F.array(ws_tokens(text_col)), lambda toks: _grams(toks, n))[0]
 
 
-def _unit_arrays(docs: DataFrame, id_col: str, text_col: str, top_ns, dup_ns):
-    """→ (DataFrame(doc_id, n_chars, _a_{kind}...), kinds): per document
-    the non-blank lines (kind 'line') and the word n-grams (kind 'g{n}'
-    for n in top_ns ∪ dup_ns), with the text split once into lines and
-    once into tokens.  NULL text ≡ empty text."""
-    ns = sorted(set(top_ns) | set(dup_ns))
-    t = f"coalesce({_q(text_col)}, '')"
-    tk = docs.selectExpr(
-        f"{_q(id_col)} AS doc_id",
-        f"length({t}) AS n_chars",
-        f"filter(split({t}, '\\n'), x -> trim(x) != '') AS _a_line",
-        f"{_ws_tokens_sql(t)} AS _tk",
-    )
-    arrays = tk.selectExpr(
-        "doc_id", "n_chars", "_a_line", *[f"{_grams_sql('_tk', n)} AS _a_g{n}" for n in ns]
-    )
-    return arrays, ["line"] + [f"g{n}" for n in ns]
+def _char_frac_sql(chars: str) -> str:
+    """SQL text: ``chars`` over the document's chars, clipped to 1."""
+    return f"least({chars} / cast(greatest(n_chars, 1) AS double), 1.0D)"
 
 
 def repetition_stats(
@@ -225,7 +211,6 @@ def repetition_stats(
     text_col: str = "text",
     top_ns: tuple = (2, 3),
     dup_ns: tuple = (5,),
-    strategy: str = "local",
 ) -> DataFrame:
     """Within-document repetition signals (the Gopher §A1.1 repetition
     filter family, Rae et al. 2021 — public): per document,
@@ -240,112 +225,40 @@ def repetition_stats(
     * ``dup{n}_char_frac`` (n in dup_ns) — chars across all occurrences
       of word n-grams seen ≥2× / total chars, clipped to 1.
 
-    Two strategies, BIT-IDENTICAL output (all duplicate-count arithmetic
-    is integer, so accumulation order cannot matter; pinned equal by
-    pytest):
-
-    * ``strategy='local'`` (default) — a ZERO-shuffle narrow projection:
-      per document and kind, one fold over the units sorted ascending
-      (``_repetition_stats_local``).  O(u log u) per document for u
-      units, and no Exchange.
-    * ``strategy='explode'`` — ONE tagged explode → partial-count
-      shuffle on (doc, kind, gram) → ONE (doc, n_chars) aggregation
-      whose per-kind aggregates are conditional on the kind: two hash
-      exchanges in all.  The gram in the shuffle key spreads one
-      document's units over every partition, where 'local' sorts each
-      document in one task; it is the reference the tests hold 'local'
-      equal to.  Pass it for a few giant documents only after timing
-      both: at local[4] on a 4-CPU host 'local' still won with fewer
-      documents than cores (1 doc × 600k tokens over 50k words: 5.2 s
-      against 8.5 s; 2 docs × 300k Zipf tokens: 4.1 s against 5.6 s).
-
-    Everything JVM-side, zero Python, in both.  Lines = split(text,
-    '\\n').  Both split each text once into lines and once into
-    tokens; every gram size reads the projected tokens.
-    """
-    if strategy == "local":
-        return _repetition_stats_local(docs, id_col, text_col, top_ns, dup_ns)
-    if strategy != "explode":
-        raise ValueError("strategy must be 'explode' or 'local'")
-    arrays, kinds = _unit_arrays(docs, id_col, text_col, top_ns, dup_ns)
-    units = ", ".join(
-        f"transform(_a_{k}, x -> struct('{k}' AS kind, x AS gram))" for k in kinds
-    )
-    counted = (
-        arrays.selectExpr("doc_id", "n_chars", f"explode(concat({units})) AS u")
-        .selectExpr("doc_id", "n_chars", "u.kind", "u.gram")
-        .groupBy("doc_id", "n_chars", "kind", "gram")
-        .agg(F.expr("count(1) AS cnt"))
-    )
-    # ONE (doc_id, n_chars) level: every per-kind aggregate is
-    # conditional on its kind.  A kind the doc lacks sums to 0 here, and
-    # its min_by is NULL; map NULL to 0 BEFORE clipping, because least()
-    # skips NULLs (least(NULL, 1.0) = 1.0)
-    cov = "cnt * length(gram)"
-
-    def clipped(chars: str) -> str:
-        return f"round({_char_frac_sql(chars)}, 9)"
-
-    def dup_chars(k: str) -> str:
-        return f"sum(CASE WHEN kind = '{k}' AND cnt >= 2 THEN {cov} ELSE 0 END)"
-
-    n_lines = "sum(CASE WHEN kind = 'line' THEN cnt END)"
-    n_distinct = "count(CASE WHEN kind = 'line' THEN cnt END)"
-    aggs = {
-        "n_lines": f"coalesce({n_lines}, 0)",
-        "dup_line_frac": f"round(coalesce(({n_lines} - {n_distinct}) / "
-        f"cast({n_lines} AS double), 0.0D), 9)",
-        "dup_line_char_frac": clipped(dup_chars("line")),
-    }
-    for n in sorted(set(top_ns)):
-        # most frequent gram, ties broken gram-ASC: min_by over the
-        # orderable struct (-cnt, gram); min_by skips the NULL ordering
-        # of the other kinds' rows
-        top_cov = f"min_by({cov}, CASE WHEN kind = 'g{n}' THEN struct(-cnt, gram) END)"
-        aggs[f"top{n}_char_frac"] = clipped(f"coalesce({top_cov}, 0)")
-    for n in sorted(set(dup_ns)):
-        aggs[f"dup{n}_char_frac"] = clipped(dup_chars(f"g{n}"))
-    stats = counted.groupBy("doc_id", "n_chars").agg(
-        *[F.expr(f"{e} AS {c}") for c, e in aggs.items()]
-    )
-    # docs with no units at all (empty/whitespace text) vanish in the
-    # explode — restore them with all-zero stats off the doc spine
-    spine = arrays.select("doc_id", "n_chars")
-    return spine.join(stats, ["doc_id", "n_chars"], "left").selectExpr(
-        "doc_id",
-        "n_chars",
-        *[f"coalesce({c}, {0 if c == 'n_lines' else '0.0D'}) AS {c}" for c in aggs],
-    )
-
-
-def _char_frac_sql(chars: str) -> str:
-    """SQL text: ``chars`` over the document's chars, clipped to 1."""
-    return f"least({chars} / cast(greatest(n_chars, 1) AS double), 1.0D)"
-
-
-def _repetition_stats_local(
-    docs: DataFrame,
-    id_col: str,
-    text_col: str,
-    top_ns: tuple,
-    dup_ns: tuple,
-) -> DataFrame:
-    """Zero-shuffle strategy for repetition_stats (see its docstring).
+    A ZERO-shuffle narrow projection, everything JVM-side, zero Python.
+    Per document the text is split once into its non-blank lines (kind
+    'line', lines = split(text, '\\n')) and once into tokens, and every
+    word n-gram kind ('g{n}' for n in top_ns ∪ dup_ns) reads the
+    projected tokens.  NULL text ≡ empty text.
 
     Per kind, one ``aggregate`` fold over the document's units sorted
     ascending by ``sort_array``, which compares with the type's own
     ordering (``array_sort`` without a comparator evaluates a default
     comparator lambda, interpreted, per comparison): equal units are
-    adjacent, so each run of one unit is its
-    count, and the fold closes a run when the unit changes.  The
-    accumulator is (prev, run, n_distinct, dup_chars, max_cnt,
-    top_gram); a closed run adds 1 to n_distinct, ``run * length(prev)``
-    to dup_chars when ``run >= 2``, and replaces the top gram only when
-    ``run > max_cnt`` strictly, so the first gram in ascending order
-    wins a tie: the explode strategy's (cnt DESC, gram ASC).  Spark
-    orders strings by UTF-8 bytes, which is code-point order.  O(u log
-    u) per document for u units, all bigint arithmetic."""
-    d, kinds = _unit_arrays(docs, id_col, text_col, top_ns, dup_ns)
+    adjacent, so each run of one unit is its count, and the fold closes
+    a run when the unit changes.  The accumulator is (prev, run,
+    n_distinct, dup_chars, max_cnt, top_gram); a closed run adds 1 to
+    n_distinct, ``run * length(prev)`` to dup_chars when ``run >= 2``,
+    and replaces the top gram only when ``run > max_cnt`` strictly, so
+    the first gram in ascending order wins a tie (cnt DESC, gram ASC).
+    Spark orders strings by UTF-8 bytes, which is code-point order.
+    O(u log u) per document for u units, all bigint arithmetic.  A
+    giant document is sorted in one task; at local[4] that beat a
+    (doc, kind, gram) count shuffle even with fewer documents than
+    cores (1 doc × 600k tokens: 5.2 s against 8.5 s).
+    """
+    ns = sorted(set(top_ns) | set(dup_ns))
+    kinds = ["line"] + [f"g{n}" for n in ns]
+    t = f"coalesce({_q(text_col)}, '')"
+    tk = docs.selectExpr(
+        f"{_q(id_col)} AS doc_id",
+        f"length({t}) AS n_chars",
+        f"filter(split({t}, '\\n'), x -> trim(x) != '') AS _a_line",
+        f"{_ws_tokens_sql(t)} AS _tk",
+    )
+    d = tk.selectExpr(
+        "doc_id", "n_chars", "_a_line", *[f"{_grams_sql('_tk', n)} AS _a_g{n}" for n in ns]
+    )
 
     def closed(a: str) -> dict:
         # the statistics with the run that ends at `a` counted in
@@ -466,9 +379,9 @@ def entropy_stats(
     array_distinct, filter-count against the full array), all JVM-side.
     Per-row cost is O(distinct_symbols × len): bounded ~100×len for
     real text (alphabet-sized char set, Zipfian token set is the worst
-    case — for adversarial million-distinct-token docs, prefer an
-    explode + (doc, token) count variant, same algebra as
-    repetition_stats).  Each distinct symbol is counted once (one
+    case — for adversarial million-distinct-token docs, prefer a fold
+    over the sorted tokens, as repetition_stats counts its units: O(len
+    log len)).  Each distinct symbol is counted once (one
     filter pass over the array), and the text is split once into chars
     and once into tokens.  Empty docs yield zero entropies, not NaN."""
     t = f"coalesce({_q(text_col)}, '')"

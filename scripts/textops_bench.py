@@ -107,9 +107,6 @@ def main():
     stages = {
         "entropy": lambda: noop(textops.entropy_stats(docs)),
         "repetition": lambda: noop(textops.repetition_stats(docs)),
-        "repetition_explode": lambda: noop(
-            textops.repetition_stats(docs, strategy="explode")
-        ),
         "pack": lambda: noop(
             packing.pack_sequences(docs, pack_tokens=2048, n_buckets=256)
         ),
@@ -123,7 +120,6 @@ def main():
     small_bench = bench_table.limit(200)
     noop(textops.entropy_stats(small))
     noop(textops.repetition_stats(small))
-    noop(textops.repetition_stats(small, strategy="explode"))
     noop(packing.pack_sequences(small, pack_tokens=2048, n_buckets=256))
     noop(textops.decontaminate(small, small_bench, n=8))
     noop(dedup.exact_dedup(small, "doc_id", "text"))

@@ -4,12 +4,14 @@ The full gate (all 73 queries at sf0.01) is scripts/check_entry.py; this
 keeps `pytest -x -q` fast while still catching contract regressions.
 """
 
+import os
 import sys
 
 import duckdb
 import numpy as np
 
-sys.path.insert(0, "/root/repo")
+# the checkout this file lives in, not whichever one is on sys.path
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import __spark_entry__ as em
 

@@ -9,7 +9,8 @@ import json
 import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+# the checkout this file lives in, not whichever one is on sys.path
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from scripts.gen_goldens import GOLDEN_PATH, compute_hashes  # noqa: E402
 

@@ -24,6 +24,7 @@ from hypothesis import strategies as st
 
 from gips_spark.functions import geom, h3lite, s2, textx
 from gips_spark.operators.dedup import _shingle_hashes
+from repetition_reference import assert_matches_reference
 
 KERNEL = settings(
     max_examples=60,
@@ -468,20 +469,6 @@ def _sparse_doc(draw):
 _sparse_docs = st.lists(_sparse_doc(), min_size=8, max_size=40)
 
 
-@SPARKED
-@given(_sparse_docs)
-def test_repetition_explode_equals_local_on_sparse_docs(spark, texts):
-    """The one-level explode aggregation == the local strategy bit for
-    bit on docs that lack a kind; an absent kind must score 0.0, not
-    least(NULL, 1.0) = 1.0."""
-    from gips_spark.operators import textops
-
-    df = spark.createDataFrame(list(enumerate(texts)), "doc_id long, text string")
-    a = sorted(tuple(r) for r in textops.repetition_stats(df, strategy="explode").collect())
-    b = sorted(tuple(r) for r in textops.repetition_stats(df, strategy="local").collect())
-    assert a == b
-
-
 # words of several lengths and scripts: UTF-8 byte order (Spark's
 # string order) is code-point order (Python's), but not UTF-16 order —
 # U+FF21 sorts before U+1F600 in the first two, after it in the third
@@ -499,12 +486,9 @@ _REP_FIXED = [
 
 @st.composite
 def _rep_doc(draw):
-    """A repetition-stats input: a sparse doc, a doc over _REP_WORDS
-    with repeated lines, or (with a drawn seed) a 2,000-token doc."""
-    shape = draw(st.sampled_from(["sparse", "words", "long"]))
-    if shape == "sparse":
-        return draw(_sparse_doc())
-    if shape == "long":
+    """A repetition-stats input: a doc over _REP_WORDS with repeated
+    lines, or (with a drawn seed) a 2,000-token doc."""
+    if draw(st.booleans()):
         import random
 
         rng = random.Random(draw(st.integers(0, 2**32 - 1)))
@@ -515,51 +499,14 @@ def _rep_doc(draw):
     return "\n".join(lines + lines[: draw(st.integers(0, len(lines)))])
 
 
-def _repetition_reference(text, top_ns=(2, 3), dup_ns=(5,)):
-    """repetition_stats' row for one text, from collections.Counter.
-    Lines are blank when only spaces remain (Spark's trim strips only
-    ' '); tokens split on Java's ASCII \\s."""
-    from collections import Counter
-
-    t = text or ""
-    frac = lambda c: round(min(c / max(len(t), 1), 1.0), 9)  # noqa: E731
-    lines = Counter(ln for ln in t.split("\n") if ln.strip(" "))
-    n_lines = sum(lines.values())
-    row = [
-        len(t),
-        n_lines,
-        round((n_lines - len(lines)) / n_lines, 9) if n_lines else 0.0,
-        frac(sum(c * len(g) for g, c in lines.items() if c >= 2)),
-    ]
-    toks = [x for x in re.split(r"[ \t\n\x0b\f\r]+", t) if x]
-
-    def grams(n):
-        return Counter(" ".join(toks[j : j + n]) for j in range(len(toks) - n + 1))
-
-    for n in sorted(set(top_ns)):
-        top = min(grams(n).items(), key=lambda gc: (-gc[1], gc[0]), default=("", 0))
-        row.append(frac(top[1] * len(top[0])))
-    for n in sorted(set(dup_ns)):
-        row.append(frac(sum(c * len(g) for g, c in grams(n).items() if c >= 2)))
-    return row
-
-
 @SPARKED
-@given(st.lists(_rep_doc(), min_size=4, max_size=24))
-def test_repetition_sorted_fold_matches_counter(spark, texts):
-    """The default strategy's sorted-run fold == a Counter recount of
-    every column: ties on the top count go to the first gram in
-    code-point order, empty and missing kinds score 0."""
-    from gips_spark.operators import textops
-
-    texts = _REP_FIXED + texts
-    df = spark.createDataFrame(list(enumerate(texts)), "doc_id long, text string")
-    got = {r["doc_id"]: r for r in textops.repetition_stats(df, strategy="local").collect()}
-    for i, t in enumerate(texts):
-        want = _repetition_reference(t)
-        row = list(got[i])[1:]
-        assert row[:2] == want[:2], (t, row, want)
-        assert row[2:] == pytest.approx(want[2:], abs=1e-9), (t, row, want)
+@given(st.lists(_rep_doc(), min_size=2, max_size=16), _sparse_docs)
+def test_repetition_sorted_fold_matches_counter(spark, texts, sparse):
+    """The sorted-run fold == a Counter recount of every column: ties
+    on the top count go to the first gram in code-point order, and an
+    empty or missing kind (the sparse docs) scores 0, not least(NULL,
+    1.0) = 1.0."""
+    assert_matches_reference(spark, list(enumerate(_REP_FIXED + texts + sparse)))
 
 
 @SPARKED

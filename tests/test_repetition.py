@@ -8,6 +8,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from gips_spark.operators import textops
+from repetition_reference import assert_matches_reference
 
 DOCS = [
     (1, "a b c a b c a b"),                    # 2-gram/5-gram repeats, 1 line
@@ -82,8 +83,8 @@ def test_repetition_hand_computed(rep):
 
 
 def test_repetition_numpy_cross_check(spark):
-    """Independent recomputation (python dict counting) on pseudo-random
-    small-vocab docs — every column, every doc."""
+    """The Counter recount on pseudo-random small-vocab docs — every
+    column, every doc."""
     rng = np.random.default_rng(7)
     vocab = ["aa", "b", "ccc", "dd", "e"]
     docs = []
@@ -95,48 +96,7 @@ def test_repetition_numpy_cross_check(spark):
         if n > 6:
             text = text.replace(" dd ", "\n", 3)
         docs.append((i, text))
-    got = {
-        r["doc_id"]: r
-        for r in textops.repetition_stats(
-            spark.createDataFrame(docs, "doc_id long, text string")
-        ).collect()
-    }
-
-    from collections import Counter
-
-    for i, text in docs:
-        r = got[i]
-        nchars = len(text)
-        assert r["n_chars"] == nchars
-        lines = [ln for ln in text.split("\n") if ln.strip() != ""]
-        cl = Counter(lines)
-        assert r["n_lines"] == len(lines)
-        want_dlf = (len(lines) - len(cl)) / len(lines) if lines else 0.0
-        assert r["dup_line_frac"] == pytest.approx(round(want_dlf, 9), abs=1e-9)
-        dup_chars = sum(c * len(g) for g, c in cl.items() if c >= 2)
-        want_dlcf = min(dup_chars / max(nchars, 1), 1.0) if lines else 0.0
-        assert r["dup_line_char_frac"] == pytest.approx(round(want_dlcf, 9), abs=1e-9)
-        toks = text.split() if text.strip() else []
-        for n, col, mode in [
-            (2, "top2_char_frac", "top"),
-            (3, "top3_char_frac", "top"),
-            (5, "dup5_char_frac", "dup"),
-        ]:
-            grams = [" ".join(toks[j : j + n]) for j in range(len(toks) - n + 1)]
-            cg = Counter(grams)
-            if not cg:
-                assert r[col] == 0.0
-                continue
-            if mode == "top":
-                top = min(cg.items(), key=lambda kv: (-kv[1], kv[0]))
-                want = min(top[1] * len(top[0]) / max(nchars, 1), 1.0)
-            else:
-                want = min(
-                    sum(c * len(g) for g, c in cg.items() if c >= 2)
-                    / max(nchars, 1),
-                    1.0,
-                )
-            assert r[col] == pytest.approx(round(want, 9), abs=1e-9), (i, col)
+    assert_matches_reference(spark, docs)
 
 
 def test_repetition_is_pure_jvm(spark):
@@ -250,11 +210,10 @@ def test_entropy_bounds_property(spark):
     assert got[2]["token_entropy"] == 0.0
 
 
-def test_repetition_local_strategy_bit_identical(spark):
-    """strategy='local' (zero-shuffle HOF path) must reproduce the
-    explode strategy bit-for-bit — integer dup arithmetic makes fold
-    order immaterial, and the (cnt DESC, gram ASC) top tie-break is the
-    same."""
+def test_repetition_matches_counter_on_seeded_docs(spark):
+    """repetition_stats == the Counter recount on 150 seeded docs over a
+    vocabulary with repeats (one word holds a space), plus empty, blank,
+    NULL and tab-led text; the plan is a narrow JVM projection."""
     rng = np.random.default_rng(17)
     vocab = ["aa", "b", "ccc", "dd", "e", "ff f"]
     docs = [(99990, ""), (99991, "  \n \n "), (99992, None), (99993, "\tx y x y")]
@@ -265,21 +224,9 @@ def test_repetition_local_strategy_bit_identical(spark):
         if n > 6:
             text = text.replace(" dd ", "\n", 3)
         docs.append((i, text))
-    df = spark.createDataFrame(docs, "doc_id long, text string")
-    a = sorted(
-        tuple(r) for r in textops.repetition_stats(df, strategy="explode").collect()
-    )
-    b = sorted(
-        tuple(r) for r in textops.repetition_stats(df, strategy="local").collect()
-    )
-    assert a == b
-    plan = (
-        textops.repetition_stats(df, strategy="local")
-        ._jdf.queryExecution().executedPlan().toString()
-    )
+    df = assert_matches_reference(spark, docs)
+    plan = textops.repetition_stats(df)._jdf.queryExecution().executedPlan().toString()
     assert "Exchange" not in plan and "EvalPython" not in plan
-    with pytest.raises(ValueError):
-        textops.repetition_stats(df, strategy="bogus")
 
 
 def _split_patterns(df):
@@ -298,9 +245,7 @@ def test_text_split_once_per_input(spark):
     gram size (24 splits in repetition_stats, 34/52 in decontaminate)."""
     docs = spark.createDataFrame(DOCS, "doc_id long, text string")
     bench = spark.createDataFrame([(0, "p q r s t u v w")], "doc_id long, text string")
-    for strategy in ("explode", "local"):
-        got = _split_patterns(textops.repetition_stats(docs, strategy=strategy))
-        assert got == ["\n", r"\s+"], (strategy, got)
+    assert _split_patterns(textops.repetition_stats(docs)) == ["\n", r"\s+"]
     for join_on in ("hash", "gram"):
         got = _split_patterns(textops.decontaminate(docs, bench, n=8, join_on=join_on))
         assert got == [r"\s+", r"\s+"], (join_on, got)  # one per input side
@@ -325,10 +270,9 @@ def test_tops_quote_caller_column_names(spark):
     for id_col, text_col, bench_col in [("doc id", "t.x", "a`b"), ("a`b", "doc id", "t.x")]:
         docs, names = plain.toDF(id_col, text_col), {"id_col": id_col, "text_col": text_col}
         assert rows(textops.entropy_stats(docs, **names)) == rows(textops.entropy_stats(plain))
-        for strategy in ("explode", "local"):
-            assert rows(textops.repetition_stats(docs, strategy=strategy, **names)) == rows(
-                textops.repetition_stats(plain, strategy=strategy)
-            ), strategy
+        assert rows(textops.repetition_stats(docs, **names)) == rows(
+            textops.repetition_stats(plain)
+        )
         for join_on in ("hash", "gram"):
             got = textops.decontaminate(
                 docs, bench.toDF(bench_col), n=5, join_on=join_on,
@@ -344,8 +288,7 @@ def test_tops_quote_caller_column_names(spark):
 # the object-release commands, whose timing follows Python's GC)
 _COLUMN_TREE_COMMANDS = {
     "entropy_stats": 476,
-    "repetition_stats": 2062,
-    "repetition_stats_local": 1799,
+    "repetition_stats": 1799,
     "decontaminate": 858,
     "decontaminate_gram": 842,
 }
@@ -363,8 +306,7 @@ def test_tops_build_in_few_py4j_round_trips(spark, monkeypatch, op):
     bench = spark.createDataFrame([("p q r s t u v w",)], "text string")
     build = {
         "entropy_stats": lambda: textops.entropy_stats(docs),
-        "repetition_stats": lambda: textops.repetition_stats(docs, strategy="explode"),
-        "repetition_stats_local": lambda: textops.repetition_stats(docs, strategy="local"),
+        "repetition_stats": lambda: textops.repetition_stats(docs),
         "decontaminate": lambda: textops.decontaminate(docs, bench, n=8),
         "decontaminate_gram": lambda: textops.decontaminate(docs, bench, n=8, join_on="gram"),
     }[op]

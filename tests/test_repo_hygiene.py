@@ -1,11 +1,12 @@
 """Repository checks that need no Spark: every top-level definition in
-gips_spark/ has a reader, and the contract gate imports the tree it
-lives in."""
+gips_spark/ has a reader, and the contract gate and the tests import
+the tree they live in."""
 
 from __future__ import annotations
 
 import ast
 import os
+import re
 import shutil
 import subprocess
 import sys
@@ -25,13 +26,18 @@ KEPT = {
 }
 
 
+def _py_files():
+    """Every Python file in the repo outside dot-directories."""
+    for path in sorted(REPO.rglob("*.py")):
+        if not any(part.startswith(".") for part in path.relative_to(REPO).parts):
+            yield path
+
+
 def _modules():
     """(dotted module name, is a package __init__, AST) of every Python
     file in the repo outside dot-directories."""
-    for path in sorted(REPO.rglob("*.py")):
+    for path in _py_files():
         rel = path.relative_to(REPO)
-        if any(part.startswith(".") for part in rel.parts):
-            continue
         parts = rel.with_suffix("").parts
         init = parts[-1] == "__init__"
         with warnings.catch_warnings():  # invalid escapes in docstrings
@@ -150,3 +156,13 @@ def test_check_entry_imports_its_own_tree(tmp_path):
         str(tmp_path / "__spark_entry__.py"),
         str(tmp_path / "gips_spark" / "__init__.py"),
     ]
+
+
+def test_no_file_pins_a_checkout_path():
+    """No Python file spells this checkout's absolute path or puts an
+    absolute path literal on sys.path: run from a copy of the tree, such
+    a file would import the modules at that path instead of its own."""
+    pinned = re.compile(
+        rf"""["']{re.escape(str(REPO))}[/"']|sys\.path\.(?:insert|append)\([^)]*["']/"""
+    )
+    assert [str(p.relative_to(REPO)) for p in _py_files() if pinned.search(p.read_text())] == []
