@@ -285,10 +285,11 @@ def test_tops_quote_caller_column_names(spark):
 
 
 # py4j commands the Column-tree builds took, one per Column node (less
-# the object-release commands, whose timing follows Python's GC)
+# the object-release commands, whose timing follows Python's GC);
+# repetition_stats is keyed by its document-local sorted fold
 _COLUMN_TREE_COMMANDS = {
     "entropy_stats": 476,
-    "repetition_stats": 1799,
+    "repetition_stats_local": 1799,
     "decontaminate": 858,
     "decontaminate_gram": 842,
 }
@@ -306,7 +307,7 @@ def test_tops_build_in_few_py4j_round_trips(spark, monkeypatch, op):
     bench = spark.createDataFrame([("p q r s t u v w",)], "text string")
     build = {
         "entropy_stats": lambda: textops.entropy_stats(docs),
-        "repetition_stats": lambda: textops.repetition_stats(docs),
+        "repetition_stats_local": lambda: textops.repetition_stats(docs),
         "decontaminate": lambda: textops.decontaminate(docs, bench, n=8),
         "decontaminate_gram": lambda: textops.decontaminate(docs, bench, n=8, join_on="gram"),
     }[op]
