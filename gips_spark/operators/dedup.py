@@ -1,15 +1,23 @@
 """Deduplication operators for the training-data pipeline.
 
-Five variants, each DataFrame→DataFrame over a (id, text) input:
+Five variants, each DataFrame→DataFrame over an (id, text) input (an
+(id, vector) one for embeddings):
 
-* exact_dedup          — hash-groupBy on normalized text (one shuffle)
-* minhash_lsh_dedup    — shingle → minhash (k permutations) → band →
-                         bucket self-join → verified Jaccard ≥ τ
-* simhash_dedup        — 64-bit simhash over token hashes; near-dup if
-                         Hamming distance ≤ d (banded exact search)
-* ngram_jaccard_dedup  — exact n-gram Jaccard on LSH candidates
-* embedding_dedup      — cosine ≥ τ over an embedding column, LSH- or
-                         brute-bucketed
+* exact_dedup           — hash-groupBy on normalized text (one shuffle)
+* minhash_lsh_pairs     — shingle → minhash (k permutations) → band →
+                          bucket self-join → estimated Jaccard ≥ τ
+* simhash_pairs         — 64-bit simhash over token hashes; near-dup if
+                          Hamming distance ≤ d (banded exact search)
+* ngram_jaccard_pairs   — exact n-gram Jaccard on LSH candidates
+* embedding_dedup_pairs — cosine ≥ τ over an embedding column,
+                          multi-probe LSH-bucketed
+
+Pairs become clusters through connected_components (or its
+large-star/small-star variant connected_components_star).
+build_dedup_index, incremental_exact_dedup and
+incremental_minhash_candidates dedup a new batch against a persisted
+corpus index; they share the batch operators' normalization key
+(_keyed), band layout (_banded) and signature agreement.
 
 Scale notes: every variant is shuffle-bounded by the banding/bucket
 join (candidates only), never an all-pairs cross join.  Minhash state
@@ -84,6 +92,56 @@ def _dedup_key_exprs(norm):
     ]
 
 
+def _keyed(df: DataFrame, id_col: str, text_col: str, key_exprs=_dedup_key_exprs) -> DataFrame:
+    """→ (id, tkey1, tkey2, …): the dedup key of whitespace-collapsed,
+    trimmed, lower-cased text — one definition, so a batch probe and
+    the corpus index it is checked against always agree."""
+    norm = F.lower(F.trim(F.regexp_replace(F.col(text_col), r"\s+", " ")))
+    keys = key_exprs(norm)
+    return df.select(
+        F.col(id_col).alias("id"), *[k.alias(f"tkey{i + 1}") for i, k in enumerate(keys)]
+    )
+
+
+def _banded(df: DataFrame, id_col: str, text_col: str, num_perm: int, bands: int, shingle: int) -> DataFrame:
+    """→ (id, sig, band, bkey): one row per LSH band of each document's
+    minhash signature; bkey = xxhash64 of the band's signature slice."""
+    rows_per_band = num_perm // bands
+    sig = minhash_signature_udf(num_perm, shingle)
+    with_sig = df.select(F.col(id_col).alias("id"), F.col(text_col).alias("t")).withColumn(
+        "sig", sig(F.col("t"))
+    )
+    return with_sig.select(
+        "id",
+        "sig",
+        F.explode(
+            F.array(
+                *[
+                    F.struct(
+                        F.lit(bi).alias("band"),
+                        F.xxhash64(
+                            F.slice("sig", bi * rows_per_band + 1, rows_per_band)
+                        ).alias("bkey"),
+                    )
+                    for bi in range(bands)
+                ]
+            )
+        ).alias("bb"),
+    ).select("id", "sig", "bb.band", "bb.bkey")
+
+
+def _sig_agreement(sig_a: str, sig_b: str, num_perm: int):
+    """Estimated Jaccard: the fraction of equal minhash components."""
+    return (
+        F.aggregate(
+            F.zip_with(sig_a, sig_b, lambda x, y: (x == y).cast("int")),
+            F.lit(0),
+            lambda acc, v: acc + v,
+        ).cast("double")
+        / num_perm
+    )
+
+
 def exact_dedup(df: DataFrame, id_col: str, text_col: str, _key_exprs=None) -> DataFrame:
     """→ (id, canonical_id): groups of byte-identical normalized text.
 
@@ -91,10 +149,8 @@ def exact_dedup(df: DataFrame, id_col: str, text_col: str, _key_exprs=None) -> D
     128-bit key (see _dedup_key_exprs).  `_key_exprs` is a test-only hook
     for collision fault-injection.
     """
-    norm = F.lower(F.trim(F.regexp_replace(F.col(text_col), r"\s+", " ")))
-    keys = _key_exprs(norm) if _key_exprs is not None else _dedup_key_exprs(norm)
-    key_names = [f"tkey{i+1}" for i in range(len(keys))]
-    keyed = df.select(F.col(id_col).alias("id"), *[k.alias(n) for k, n in zip(keys, key_names)])
+    keyed = _keyed(df, id_col, text_col, _key_exprs or _dedup_key_exprs)
+    key_names = keyed.columns[1:]
     canon = keyed.groupBy(*key_names).agg(F.min("id").alias("canonical_id"))
     return keyed.join(canon, key_names).select("id", "canonical_id")
 
@@ -114,28 +170,7 @@ def minhash_lsh_pairs(
     rows = bands per signature; two docs collide if any band matches.
     Estimated Jaccard = fraction of matching minhash components.
     """
-    rows_per_band = num_perm // bands
-    sig = minhash_signature_udf(num_perm, shingle)
-    with_sig = df.select(F.col(id_col).alias("id"), F.col(text_col).alias("t")).withColumn(
-        "sig", sig(F.col("t"))
-    )
-    banded = with_sig.select(
-        "id",
-        "sig",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(bi).alias("band"),
-                        F.xxhash64(
-                            F.slice("sig", bi * rows_per_band + 1, rows_per_band)
-                        ).alias("bkey"),
-                    )
-                    for bi in range(bands)
-                ]
-            )
-        ).alias("bb"),
-    ).select("id", "sig", "bb.band", "bb.bkey")
+    banded = _banded(df, id_col, text_col, num_perm, bands, shingle)
     a = banded.alias("a")
     b = banded.alias("b")
     cand = (
@@ -153,14 +188,7 @@ def minhash_lsh_pairs(
         )
         .dropDuplicates(["id_a", "id_b"])
     )
-    est = (
-        F.aggregate(
-            F.zip_with("sig_a", "sig_b", lambda x, y: (x == y).cast("int")),
-            F.lit(0),
-            lambda acc, v: acc + v,
-        ).cast("double")
-        / num_perm
-    )
+    est = _sig_agreement("sig_a", "sig_b", num_perm)
     return cand.withColumn("jaccard_est", est).where(
         F.col("jaccard_est") >= threshold
     ).select("id_a", "id_b", "jaccard_est")
@@ -411,38 +439,11 @@ def build_dedup_index(
     corpus size and append-only under incremental ingest.
     band_table: (band, bkey, id, sig) — the same banded signatures
     minhash_lsh_pairs buckets on, persisted."""
-    norm = F.lower(F.trim(F.regexp_replace(F.col(text_col), r"\s+", " ")))
-    keys = _dedup_key_exprs(norm)
-    keyed = df.select(
-        F.col(id_col).alias("id"), *[k.alias(n) for k, n in zip(keys, ["tkey1", "tkey2"])]
-    )
-    exact_keys = keyed.groupBy("tkey1", "tkey2").agg(
+    exact_keys = _keyed(df, id_col, text_col).groupBy("tkey1", "tkey2").agg(
         F.min("id").alias("canonical_id")
     )
-
-    rows_per_band = num_perm // bands
-    sig = minhash_signature_udf(num_perm, shingle)
-    with_sig = df.select(
-        F.col(id_col).alias("id"), F.col(text_col).alias("t")
-    ).withColumn("sig", sig(F.col("t")))
-    band_table = with_sig.select(
-        "id",
-        "sig",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(bi).alias("band"),
-                        F.xxhash64(
-                            F.slice("sig", bi * rows_per_band + 1, rows_per_band)
-                        ).alias("bkey"),
-                    )
-                    for bi in range(bands)
-                ]
-            )
-        ).alias("bb"),
-    ).select(
-        F.col("bb.band").alias("band"), F.col("bb.bkey").alias("bkey"), "id", "sig"
+    band_table = _banded(df, id_col, text_col, num_perm, bands, shingle).select(
+        "band", "bkey", "id", "sig"
     )
     return exact_keys, band_table
 
@@ -459,11 +460,7 @@ def incremental_exact_dedup(
     one equi-join against the persisted key index — corpus TEXT is
     never rescanned, and with the index bucketed on tkey1 the join is
     co-located."""
-    norm = F.lower(F.trim(F.regexp_replace(F.col(text_col), r"\s+", " ")))
-    keys = _dedup_key_exprs(norm)
-    keyed = new_docs.select(
-        F.col(id_col).alias("id"), *[k.alias(n) for k, n in zip(keys, ["tkey1", "tkey2"])]
-    )
+    keyed = _keyed(new_docs, id_col, text_col)
     batch_canon = keyed.groupBy("tkey1", "tkey2").agg(
         F.min("id").alias("batch_canon")
     )
@@ -495,28 +492,9 @@ def incremental_minhash_candidates(
     equi-join (never all-pairs), exact signature agreement on the
     colliding pairs only.  Same banding parameters as the index build
     (caller contract)."""
-    rows_per_band = num_perm // bands
-    sig = minhash_signature_udf(num_perm, shingle)
-    with_sig = new_docs.select(
-        F.col(id_col).alias("new_id"), F.col(text_col).alias("t")
-    ).withColumn("sig_n", sig(F.col("t")))
-    banded = with_sig.select(
-        "new_id",
-        "sig_n",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(bi).alias("band"),
-                        F.xxhash64(
-                            F.slice("sig_n", bi * rows_per_band + 1, rows_per_band)
-                        ).alias("bkey"),
-                    )
-                    for bi in range(bands)
-                ]
-            )
-        ).alias("bb"),
-    ).select("new_id", "sig_n", "bb.band", "bb.bkey")
+    banded = _banded(new_docs, id_col, text_col, num_perm, bands, shingle).select(
+        F.col("id").alias("new_id"), F.col("sig").alias("sig_n"), "band", "bkey"
+    )
     cand = (
         banded.join(
             corpus_bands.select(
@@ -529,16 +507,8 @@ def incremental_minhash_candidates(
         )
         .dropDuplicates(["new_id", "corpus_id"])
     )
-    est = (
-        F.aggregate(
-            F.zip_with("sig_n", "sig_c", lambda x, y: (x == y).cast("int")),
-            F.lit(0),
-            lambda acc, v: acc + v,
-        ).cast("double")
-        / num_perm
-    )
     return (
-        cand.withColumn("jaccard_est", est)
+        cand.withColumn("jaccard_est", _sig_agreement("sig_n", "sig_c", num_perm))
         .where(F.col("jaccard_est") >= threshold)
         .select("new_id", "corpus_id", "jaccard_est")
     )
@@ -572,7 +542,6 @@ def _ckpt_fn(df: DataFrame, reliable: bool, checkpoint_dir: str | None):
 def connected_components(
     pairs: DataFrame,
     max_iter: int = 20,
-    check_every: int = 1,
     use_reliable_checkpoint: bool = False,
     checkpoint_dir: str | None = None,
 ) -> DataFrame:
@@ -585,15 +554,13 @@ def connected_components(
     clusters are near-cliques from banded LSH, so diameter is tiny.
     `localCheckpoint` truncates the plan each round (iterative joins
     otherwise stack lineage).  Scale shape: each round is ONE shuffle
-    join on the edge list; for adversarial long-chain graphs swap in
-    the large-star/small-star variant — the public alternating
-    algorithm — behind the same signature.
+    join on the edge list plus one convergence `count()`; for
+    adversarial long-chain graphs use connected_components_star (same
+    output contract, O(log² n) rounds).
 
-    `check_every` spaces out the convergence `count()` action (one
-    extra Spark job per check — set >1 when diameter is known small
-    but max_iter is generous).  Raises RuntimeError if labels are
-    still changing after max_iter rounds (a path longer than max_iter
-    hops) — unconverged labels are never returned silently (ADVICE r2).
+    Raises RuntimeError if labels are still changing after max_iter
+    rounds (a path longer than max_iter hops) — unconverged labels are
+    never returned silently (ADVICE r2).
     """
     ck = _ckpt_fn(pairs, use_reliable_checkpoint, checkpoint_dir)
     edges = pairs.select(F.col("id_a").alias("src"), F.col("id_b").alias("dst"))
@@ -617,13 +584,12 @@ def connected_components(
             .groupBy("id")
             .agg(F.min("comp").alias("comp"))
         )
-        if (it + 1) % check_every == 0 or it == max_iter - 1:
-            changed = (
-                new.alias("n")
-                .join(labels.alias("o"), "id")
-                .where(F.col("n.comp") != F.col("o.comp"))
-                .count()
-            )
+        changed = (
+            new.alias("n")
+            .join(labels.alias("o"), "id")
+            .where(F.col("n.comp") != F.col("o.comp"))
+            .count()
+        )
         labels = new
         if changed == 0:
             break

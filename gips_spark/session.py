@@ -12,7 +12,10 @@ from __future__ import annotations
 
 import os
 
+from pyspark import SparkConf, SparkContext
 from pyspark.sql import SparkSession
+
+_PACKAGE_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 _ENGINE_CONF = {
     "spark.sql.adaptive.enabled": "true",
@@ -35,19 +38,25 @@ def get_spark(
 ) -> SparkSession:
     """Build (or reuse) a SparkSession with engine defaults.
 
-    ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]`` (env, default 32)
-    in-sandbox; on a cluster pass ``None`` and let spark-submit decide.
+    ``master=None`` means the master spark-submit was given when
+    spark-submit started this driver, else ``local[$SPARK_GRAFT_CPUS]``
+    (env, default 32).  In local mode the Python workers get this
+    package's parent directory on their ``PYTHONPATH``, so a kernel
+    unpickles whatever directory the driver was started from (on a
+    cluster, ``--py-files`` ships the package).
     The driver heap is ``$SPARK_GRAFT_DRIVER_MEM`` if set, else
     min(16g, physical RAM / 3); ``extra_conf`` overrides both.
     """
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
     if master is None:
-        master = f"local[{cpus}]"
+        master = _submitted_master() or f"local[{cpus}]"
     n_shuffle = shuffle_partitions or _parallelism_of(master, cpus)
 
     builder = SparkSession.builder.appName(app_name).master(master)
     for k, v in _ENGINE_CONF.items():
         builder = builder.config(k, v)
+    if master.startswith("local"):
+        builder = builder.config("spark.executorEnv.PYTHONPATH", _PACKAGE_ROOT)
     builder = builder.config("spark.sql.shuffle.partitions", str(n_shuffle))
     builder = builder.config("spark.default.parallelism", str(n_shuffle))
     builder = builder.config("spark.ui.enabled", "false")
@@ -60,6 +69,16 @@ def get_spark(
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+def _submitted_master() -> str | None:
+    """The master spark-submit was given, when spark-submit started this
+    Python process (it then passes the JVM's gateway port in the
+    environment); None under plain ``python``."""
+    if "PYSPARK_GATEWAY_PORT" not in os.environ:
+        return None
+    SparkContext._ensure_initialized()
+    return SparkConf().get("spark.master", None)
 
 
 def _default_driver_mem() -> str:

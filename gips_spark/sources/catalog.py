@@ -3,7 +3,9 @@
 The production design (SURVEY.md §1.2/§7.6) reads/writes Iceberg tables
 partitioned by cell prefix; this sandbox has no Iceberg jars, so the
 same API falls back to Parquet + the engine's own lineage manifests
-(plans/lineage.py), which the engine needs anyway for resume.
+(plans/lineage.py, the one per-bucket resume protocol; jobs/ingest_batch.py
+writes through write_table and resumes through it), which the engine
+needs anyway for resume.
 
 Sinks mirror the reference's outputs:
 * write_project_dir — GIPS project-directory sink (`gips/tiles.py ::
@@ -16,6 +18,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from gips_spark.plans.lineage import bucket_of
 
 
 def iceberg_available(spark: SparkSession) -> bool:
@@ -45,8 +49,9 @@ def write_table(
     level with exactly one file per bucket (repartitioned on the bucket
     key before the write) — so a cluster run with real jars changes the
     catalog entry, not the file layout.  (Hash family differs: Iceberg
-    buckets with Murmur3, the fallback with xxhash64 — layout-equivalent,
-    documented.)"""
+    buckets with Murmur3, the fallback with ``lineage.bucket_of``'s
+    xxhash64 — layout-equivalent, documented — so the fallback's buckets
+    are the ones the lineage protocol resumes by.)"""
     if iceberg_available(spark) and not name_or_path.startswith(("/", "file:")):
         w = df.writeTo(name_or_path)
         parts = [F.col(c) for c in partition_cols]
@@ -73,7 +78,7 @@ def write_table(
     if bucket_by:
         n, col = bucket_by
         bcol = f"{col}_bucket"
-        df = df.withColumn(bcol, F.pmod(F.xxhash64(F.col(col)), F.lit(n)).cast("int"))
+        df = df.withColumn(bcol, bucket_of(F.col(col), n))
         out_cols.append(bcol)
         df = df.repartition(*[F.col(c) for c in out_cols])
     w = df.write.mode(mode)

@@ -21,53 +21,33 @@ real Iceberg catalog changes the catalog entry, not the layout):
 Idempotency model: every table is partitioned by (batch, bucket) and
 written with DYNAMIC partition overwrite — re-running a batch can only
 replace that batch's own partitions, never duplicate them (the Iceberg
-analog is a static-partition overwrite).  Per (stage, bucket) a lineage
-row (row_count + order-insensitive xxhash64 checksum, plans/lineage.py
-semantics) is appended AFTER the bucket's data lands; resume anti-joins
-the bucket list against lineage for (batch, stage) and recomputes only
-the missing buckets.  Deleting a bucket's data dir + its lineage row
-re-creates exactly that bucket with identical content/checksum (stage
-determinism), which the two-batch pytest pins end-to-end.
+analog is a static-partition overwrite).  Resume and lineage are
+plans/lineage.py's one protocol (``run_buckets``, scoped by batch id and
+stage, bucketed by ``lineage.bucket_of``): per (stage, bucket) a lineage
+row (row_count + order-insensitive xxhash64 checksum) is appended AFTER
+the bucket's data lands, and only buckets without one are recomputed.
+This module owns only the catalog write under ``batch=<id>`` and the
+batch filter on the read-back.  Deleting a bucket's data dir + its
+lineage row re-creates exactly that bucket with identical
+content/checksum (stage determinism), which the two-batch pytest pins
+end-to-end.  A corpus table that exists but cannot be read raises; it
+is never taken for an empty corpus.
 """
 
 from __future__ import annotations
 
-import time
+import os
+import sys
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
-from gips_spark.operators import dedup
-from gips_spark.plans import lineage
-from gips_spark.sources import catalog
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-#: (stage name, table subdir, bucket source column template)
-STAGES = ("assign", "corpus", "keys", "bands")
-
-
-def _bucket_col(col: str, n: int):
-    # MUST match catalog.write_table's parquet bucket transform
-    return F.pmod(F.xxhash64(F.col(col)), F.lit(n)).cast("int")
-
-
-def _read_or_none(spark: SparkSession, path: str) -> DataFrame | None:
-    try:
-        return spark.read.parquet(path)
-    except Exception:
-        return None
-
-
-def _done_buckets(spark: SparkSession, root: str, batch_id: str, stage: str) -> set[int]:
-    lin = _read_or_none(spark, f"{root}/_lineage")
-    if lin is None:
-        return set()
-    rows = (
-        lin.where((F.col("run_id") == batch_id) & (F.col("stage") == stage))
-        .select("bucket")
-        .distinct()
-        .collect()
-    )
-    return {r["bucket"] for r in rows}
+from gips_spark.operators import dedup  # noqa: E402
+from gips_spark.plans import lineage  # noqa: E402
+from gips_spark.sources import catalog  # noqa: E402
 
 
 def _write_stage(
@@ -75,83 +55,43 @@ def _write_stage(
     root: str,
     batch_id: str,
     stage: str,
-    table: str,
     df: DataFrame,
     bucket_on: str,
     n_buckets: int,
 ) -> dict:
-    """Write `df`'s missing buckets for (batch, stage) + lineage rows.
+    """Write `df`'s missing buckets for (batch, stage) + lineage rows
+    (plans/lineage.py's protocol, scoped by batch id and stage).
 
-    Returns metrics (rows, buckets_run, wall_ms, rows_per_sec,
-    skew_ratio) — the north_rule per-stage metrics surface."""
-    done = _done_buckets(spark, root, batch_id, stage)
-    todo = [b for b in range(n_buckets) if b not in done]
-    if not todo:
-        return {"stage": stage, "rows": 0, "buckets_run": 0, "wall_ms": 0,
-                "rows_per_sec": 0.0, "skew_ratio": 1.0, "resumed": True}
-    t0 = time.monotonic()
+    Returns lineage.run_buckets' metrics dict — the north_rule per-stage
+    metrics surface."""
+    table = f"{root}/{stage}"
     bcol = f"{bucket_on}_bucket"
-    out = df.withColumn("batch", F.lit(batch_id))
-    if len(todo) < n_buckets:
-        out = out.where(_bucket_col(bucket_on, n_buckets).isin(todo))
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    catalog.write_table(
-        spark, out, f"{root}/{table}",
-        partition_cols=("batch",), mode="overwrite",
-        bucket_by=(n_buckets, bucket_on),
-    )
-    wall_ms = int((time.monotonic() - t0) * 1000)
 
-    todo_df = spark.createDataFrame([(int(b),) for b in todo], "bucket int")
-    try:
+    def write(todo):
+        out = df.withColumn("batch", F.lit(batch_id))
+        if len(todo) < n_buckets:
+            out = out.where(lineage.bucket_of(F.col(bucket_on), n_buckets).isin(todo))
+        spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
+        catalog.write_table(
+            spark, out, table,
+            partition_cols=("batch",), mode="overwrite",
+            bucket_by=(n_buckets, bucket_on),
+        )
+        on_disk = T.StructType(out.schema.fields + [T.StructField(bcol, T.IntegerType())])
         written = (
-            spark.read.parquet(f"{root}/{table}")
+            spark.read.schema(on_disk).parquet(table)
             .where(F.col("batch") == batch_id)
-            .where(F.col(bcol).isin(todo))
+            .drop("batch")
+            .withColumnRenamed(bcol, "bucket")
         )
-        chk_cols = [
-            F.col(c) for c in sorted(written.columns) if c not in ("batch", bcol)
-        ]
-        agg = written.groupBy(F.col(bcol).alias("bucket")).agg(
-            F.min(F.lit(None).cast("string")).alias("cell_lo"),
-            F.max(F.lit(None).cast("string")).alias("cell_hi"),
-            F.count(F.lit(1)).alias("row_count"),
-            F.sum(F.xxhash64(*chk_cols).cast("decimal(38,0)"))
-            .cast("string")
-            .alias("checksum"),
-        )
-    except Exception:
-        # a batch with zero survivors writes an empty (schema-less)
-        # parquet dir — every todo bucket still gets a 0-row manifest
-        # row so resume never recomputes it
-        agg = todo_df.select(
-            F.col("bucket"),
-            F.lit(None).cast("string").alias("cell_lo"),
-            F.lit(None).cast("string").alias("cell_hi"),
-            F.lit(0).cast("long").alias("row_count"),
-            F.lit("0").alias("checksum"),
-        )
-    manifest = (
-        todo_df.join(agg, "bucket", "left")
-        .withColumn("row_count", F.coalesce(F.col("row_count"), F.lit(0)))
-        .withColumn("checksum", F.coalesce(F.col("checksum"), F.lit("0")))
-        .withColumn("run_id", F.lit(batch_id))
-        .withColumn("stage", F.lit(stage))
-        .withColumn("wall_ms", F.lit(wall_ms))
-        .select(*lineage.LINEAGE_COLS)
-    )
-    manifest.write.mode("append").parquet(f"{root}/_lineage")
+        # no cell column: the range stays null, typed string as in every
+        # existing corpus's lineage (a _lineage dir cannot mix types)
+        return written, F.lit(None).cast("string")
 
-    counts = [r["row_count"] for r in manifest.select("row_count").collect()]
-    rows = sum(counts)
-    med = sorted(counts)[len(counts) // 2] if counts else 0
-    return {
-        "stage": stage, "rows": rows, "buckets_run": len(todo),
-        "wall_ms": wall_ms,
-        "rows_per_sec": rows / (wall_ms / 1000.0) if wall_ms else 0.0,
-        "skew_ratio": (max(counts) / med) if med else 1.0,
-        "resumed": False,
-    }
+    return lineage.run_buckets(
+        spark, f"{root}/_lineage", stage, batch_id, n_buckets, write,
+        scope=("run_id", "stage"),
+    )
 
 
 def ingest_batch(
@@ -175,7 +115,7 @@ def ingest_batch(
     lineage, partial ones are dynamically overwritten with identical
     content (checksums pinned by tests/test_lineage.py).
     """
-    corpus_keys = _read_or_none(spark, f"{root}/keys")
+    corpus_keys = lineage.read_table(spark, f"{root}/keys")
     if corpus_keys is None:
         corpus_keys = spark.createDataFrame(
             [], "tkey1 bigint, tkey2 bigint, canonical_id bigint"
@@ -195,24 +135,24 @@ def ingest_batch(
         survivors, id_col, text_col, num_perm=num_perm, bands=bands, shingle=shingle
     )
 
-    metrics = {"batch_id": batch_id, "stages": []}
-    metrics["stages"].append(
-        _write_stage(spark, root, batch_id, "assign", "assign", assign, id_col, n_buckets)
-    )
-    metrics["stages"].append(
-        _write_stage(spark, root, batch_id, "corpus", "corpus", survivors, id_col, n_buckets)
-    )
-    metrics["stages"].append(
-        _write_stage(spark, root, batch_id, "keys", "keys", skeys, "tkey1", n_buckets)
-    )
-    metrics["stages"].append(
-        _write_stage(spark, root, batch_id, "bands", "bands", sbands, "bkey", n_buckets)
-    )
+    metrics = {
+        "batch_id": batch_id,
+        "stages": [
+            _write_stage(spark, root, batch_id, stage, df, bucket_on, n_buckets)
+            for stage, df, bucket_on in (
+                ("assign", assign, id_col),
+                ("corpus", survivors, id_col),
+                ("keys", skeys, "tkey1"),
+                ("bands", sbands, "bkey"),
+            )
+        ],
+    }
     assign.unpersist()
     survivors.unpersist()
     metrics["rows_in"] = batch.count()
     metrics["survivors"] = metrics["stages"][1]["rows"] if not metrics["stages"][1]["resumed"] else None
     return metrics
+
 
 def main():
     """Cluster entry: spark-submit --py-files gips_spark.zip \
@@ -223,10 +163,7 @@ def main():
     prints the per-stage metrics as one JSON line."""
     import argparse
     import json
-    import os
-    import sys
 
-    sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
     from gips_spark import get_spark
     from gips_spark.plans import metrics as metrics_mod
 
@@ -237,11 +174,10 @@ def main():
     ap.add_argument("--id-col", default="doc_id")
     ap.add_argument("--text-col", default="text")
     ap.add_argument("--buckets", type=int, default=256)
-    ap.add_argument("--master", default=None)
+    ap.add_argument("--master", default=None, help="None → spark-submit decides")
     args = ap.parse_args()
 
-    kw = {"master": args.master} if args.master else {}
-    spark = get_spark("ingest-batch", **kw)
+    spark = get_spark("ingest-batch", master=args.master)
     m = ingest_batch(
         spark,
         spark.read.parquet(args.batch),

@@ -150,6 +150,32 @@ def test_ingest_first_batch_empty_corpus(spark, tmp_path):
     assert keys.select("canonical_id").distinct().count() == 7
 
 
+def test_unreadable_corpus_keys_raise(spark, tmp_path):
+    """A corpus key table that exists but cannot be read is not an empty
+    corpus: ingest raises before it admits a duplicate of a corpus text
+    or records lineage for the batch."""
+    import os
+
+    import pytest
+
+    b1, b2 = _batches(spark)
+    root = str(tmp_path / "corpus")
+    ingest_batch(spark, b1, "b1", root, n_buckets=N_BUCKETS)
+    lin_before = _lineage_sums(spark, root)
+    for d, _, files in os.walk(f"{root}/keys/batch=b1"):
+        for f in files:
+            path = os.path.join(d, f)
+            os.truncate(path, os.path.getsize(path) // 2)
+
+    with pytest.raises(Exception, match="keys/batch=b1"):
+        ingest_batch(spark, b2, "b2", root, n_buckets=N_BUCKETS)
+
+    assert _lineage_sums(spark, root) == lin_before
+    assert _table_rows(spark, f"{root}/assign/batch=b2") == []
+    corpus_ids = {r["doc_id"] for r in spark.read.parquet(f"{root}/corpus").collect()}
+    assert 10 not in corpus_ids
+
+
 def test_streaming_ingest_dedup_available_now(spark, tmp_path):
     """jobs/ingest_stream.py: micro-batches drive the SAME lineage job;
     order-free oracle — one keys row per distinct text, every canonical

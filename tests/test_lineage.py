@@ -6,6 +6,7 @@ import pyspark.sql.functions as F
 
 from gips_spark.operators import tile_assign
 from gips_spark.plans import lineage
+from jobs import run_stage as rs
 
 
 def _transform(df):
@@ -128,17 +129,34 @@ def test_empty_buckets_get_manifest_rows(spark, tmp_path):
     assert m2["resumed"] and m2["buckets_run"] == 0
 
 
+def test_empty_output_gets_manifest_rows(spark, tmp_path):
+    """A transform that returns no rows writes no data file at all; every
+    bucket still gets a 0-row lineage row, and a re-run is a no-op."""
+    import pandas as pd
+
+    out = str(tmp_path / "empty_out")
+    df = spark.createDataFrame(pd.DataFrame({"url": ["a", "b", "c"], "v": [1, 2, 3]}))
+    m1 = lineage.run_stage(
+        spark, "s", "r1", df, lambda d: d.where(F.lit(False)), "url", out, n_buckets=4
+    )
+    assert m1["buckets_run"] == 4 and m1["rows"] == 0 and not m1["resumed"]
+    lin = spark.read.parquet(f"{out}/_lineage")
+    assert sorted(
+        (r["bucket"], r["row_count"], r["checksum"]) for r in lin.collect()
+    ) == [(b, 0, "0") for b in range(4)]
+    m2 = lineage.run_stage(
+        spark, "s", "r2", df, lambda d: d.where(F.lit(False)), "url", out, n_buckets=4
+    )
+    assert m2["resumed"] and m2["buckets_run"] == 0
+    assert m2.keys() == m1.keys()
+    assert spark.read.parquet(f"{out}/_lineage").count() == 4
+
+
 def test_stage_resume_byte_identical_without_salt(spark, pages, tmp_path):
     """The run_stage._enrich contract: persisted output excludes `salt`
     (histogram-dependent under bucket filtering), so delete-and-resume
     reproduces identical checksums even for the full enrich stage
     (ADVICE r1 medium)."""
-    import shutil
-    import sys as _sys, os as _os
-
-    _sys.path.insert(0, _os.path.join(_os.path.dirname(__file__), "..", "jobs"))
-    import run_stage as rs
-
     out = str(tmp_path / "enr")
     lineage.run_stage(
         spark, "enrich", "r1", pages, rs._enrich, "url", out, n_buckets=8,
