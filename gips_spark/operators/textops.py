@@ -181,6 +181,20 @@ def _grams_sql(toks: str, n: int) -> str:
     return f"CASE WHEN size({toks}) < {n} THEN cast(array() AS array<string>) ELSE {out} END"
 
 
+def _gram_step_sql(prev: str, toks: str, n: int) -> str:
+    """SQL text: the `n`-grams of the token-array column ``toks`` from
+    its (n-1)-grams ``prev`` (``toks`` itself for n = 2), one
+    ``zip_with`` appending token k+n-1 to (n-1)-gram k.  Equal to
+    ``_grams_sql(toks, n)``, which folds the same concatenations left
+    to right in one expression: decontaminate builds its one size that
+    way, without slicing each intermediate size."""
+    m = f"size({toks}) - {n - 1}"
+    return (
+        f"CASE WHEN size({toks}) < {n} THEN cast(array() AS array<string>) ELSE "
+        f"zip_with(slice({prev}, 1, {m}), slice({toks}, {n}, {m}), (a, b) -> concat(a, ' ', b)) END"
+    )
+
+
 def word_ngrams(text_col, n: int):
     """array<string> of word `n`-grams of a text Column (ws_tokens,
     single-space joined).  Pure JVM, no Python; mirrored verbatim by
@@ -227,64 +241,81 @@ def repetition_stats(
 
     A ZERO-shuffle narrow projection, everything JVM-side, zero Python.
     Per document the text is split once into its non-blank lines (kind
-    'line', lines = split(text, '\\n')) and once into tokens, and every
-    word n-gram kind ('g{n}' for n in top_ns ∪ dup_ns) reads the
-    projected tokens.  NULL text ≡ empty text.
+    'line', lines = split(text, '\\n')) and once into tokens, projected
+    as ``_tk``.  The word n-grams ('g{n}' for n in top_ns ∪ dup_ns) come
+    from one chain: ``_a_g{n}`` appends token k+n-1 to ``_a_g{n-1}``'s
+    gram k with one ``zip_with`` (``_gram_step_sql``), for each n up to
+    max(ns).  That is max(ns) - 1 passes over the tokens (4 at the
+    defaults), where building each size from the tokens took the sum of
+    n - 1 over ns (7).  NULL text ≡ empty text.
 
     Per kind, one ``aggregate`` fold over the document's units sorted
     ascending by ``sort_array``, which compares with the type's own
     ordering (``array_sort`` without a comparator evaluates a default
     comparator lambda, interpreted, per comparison): equal units are
     adjacent, so each run of one unit is its count, and the fold closes
-    a run when the unit changes.  The accumulator is (prev, run,
-    n_distinct, dup_chars, max_cnt, top_gram); a closed run adds 1 to
-    n_distinct, ``run * length(prev)`` to dup_chars when ``run >= 2``,
-    and replaces the top gram only when ``run > max_cnt`` strictly, so
-    the first gram in ascending order wins a tie (cnt DESC, gram ASC).
-    Spark orders strings by UTF-8 bytes, which is code-point order.
-    O(u log u) per document for u units, all bigint arithmetic.  A
-    giant document is sorted in one task; at local[4] that beat a
-    (doc, kind, gram) count shuffle even with fewer documents than
-    cores (1 doc × 600k tokens: 5.2 s against 8.5 s).
+    a run when the unit changes.  Each kind's accumulator holds the run
+    (p = its unit, r = its length) and only the statistics its outputs
+    read: n_distinct (nd) and dup_chars (dup) for lines, max_cnt (mc)
+    and top_gram (tg) for a top_ns size, dup for a dup_ns size.  A
+    closed run adds 1 to nd, ``r * length(p)`` to dup when ``r >= 2``,
+    and replaces tg only when ``r > mc`` strictly, so the first gram in
+    ascending order wins a tie (cnt DESC, gram ASC).  Spark orders
+    strings by UTF-8 bytes, which is code-point order.  O(u log u) per
+    document for u units, all bigint arithmetic.  A giant document is
+    sorted in one task; at local[4] that beat a (doc, kind, gram) count
+    shuffle even with fewer documents than cores (1 doc × 600k tokens:
+    5.2 s against 8.5 s).
     """
     ns = sorted(set(top_ns) | set(dup_ns))
-    kinds = ["line"] + [f"g{n}" for n in ns]
     t = f"coalesce({_q(text_col)}, '')"
-    tk = docs.selectExpr(
+    d = docs.selectExpr(
         f"{_q(id_col)} AS doc_id",
         f"length({t}) AS n_chars",
         f"filter(split({t}, '\\n'), x -> trim(x) != '') AS _a_line",
         f"{_ws_tokens_sql(t)} AS _tk",
     )
-    d = tk.selectExpr(
-        "doc_id", "n_chars", "_a_line", *[f"{_grams_sql('_tk', n)} AS _a_g{n}" for n in ns]
-    )
+    gram = {n: "_tk" for n in ns if n < 2}  # each size's column; 1-grams are the tokens
+    prev = "_tk"
+    for n in range(2, max(ns, default=1) + 1):
+        d = d.selectExpr("*", f"{_gram_step_sql(prev, '_tk', n)} AS _a_g{n}")
+        prev = gram[n] = f"_a_g{n}"
 
-    def closed(a: str) -> dict:
-        # the statistics with the run that ends at `a` counted in
-        return {
-            "nd": f"{a}.nd + CASE WHEN {a}.r > 0 THEN 1L ELSE 0L END",
-            "dup": f"{a}.dup + CASE WHEN {a}.r >= 2 THEN {a}.r * length({a}.p) ELSE 0L END",
-            "mc": f"greatest({a}.mc, {a}.r)",
-            "tg": f"CASE WHEN {a}.r > {a}.mc THEN {a}.p ELSE {a}.tg END",
-        }
+    # the statistics with the run that ends at `a` counted in
+    closed = {
+        "nd": "a.nd + CASE WHEN a.r > 0 THEN 1L ELSE 0L END",
+        "dup": "a.dup + CASE WHEN a.r >= 2 THEN a.r * length(a.p) ELSE 0L END",
+        "mc": "greatest(a.mc, a.r)",
+        "tg": "CASE WHEN a.r > a.mc THEN a.p ELSE a.tg END",
+    }
+    # 0 when the kind has no units
+    closed["top"] = f"coalesce({closed['mc']} * length({closed['tg']}), 0L)"
 
     def struct(**fields) -> str:
         return "named_struct(" + ", ".join(f"'{k}', {v}" for k, v in fields.items()) + ")"
 
-    null = "cast(NULL AS string)"
-    zero = struct(p=null, r="0L", nd="0L", dup="0L", mc="0L", tg=null)
-    same = struct(p="a.p", r="a.r + 1L", nd="a.nd", dup="a.dup", mc="a.mc", tg="a.tg")
-    # x = a.p is NULL at the first unit, which opens the first run
-    step = f"(a, x) -> CASE WHEN x = a.p THEN {same} ELSE {struct(p='x', r='1L', **closed('a'))} END"
-    end = closed("a")
-    top = f"coalesce({end['mc']} * length({end['tg']}), 0L)"  # 0 when the kind has no units
-    finish = "a -> " + struct(nd=end["nd"], dup=end["dup"], top=top)
+    def fold(units: str, outs: list) -> str:
+        """One sorted-run fold over `units`, finishing in the struct of
+        `outs` (fields of ``closed``)."""
+        acc = [f for f in ("nd", "dup") if f in outs] + (["mc", "tg"] if "top" in outs else [])
+        null = "cast(NULL AS string)"
+        zero = struct(p=null, r="0L", **{f: null if f == "tg" else "0L" for f in acc})
+        same = struct(p="a.p", r="a.r + 1L", **{f: f"a.{f}" for f in acc})
+        new = struct(p="x", r="1L", **{f: closed[f] for f in acc})
+        # x = a.p is NULL at the first unit, which opens the first run
+        step = f"(a, x) -> CASE WHEN x = a.p THEN {same} ELSE {new} END"
+        finish = "a -> " + struct(**{f: closed[f] for f in outs})
+        return f"aggregate(sort_array({units}), {zero}, {step}, {finish})"
+
     folded = d.selectExpr(
         "doc_id",
         "n_chars",
         "cast(size(_a_line) AS bigint) AS n_lines",
-        *[f"aggregate(sort_array(_a_{k}), {zero}, {step}, {finish}) AS _s_{k}" for k in kinds],
+        f"{fold('_a_line', ['nd', 'dup'])} AS _s_line",
+        *[
+            f"{fold(gram[n], ['top'] * (n in top_ns) + ['dup'] * (n in dup_ns))} AS _s_g{n}"
+            for n in ns
+        ],
     )
     out = [
         "n_lines",
@@ -376,33 +407,39 @@ def entropy_stats(
 
     Shape at 100 TB: a ZERO-SHUFFLE narrow projection — entropies are
     computed per row with higher-order array functions (aggregate over
-    array_distinct, filter-count against the full array), all JVM-side.
-    Per-row cost is O(distinct_symbols × len): bounded ~100×len for
-    real text (alphabet-sized char set, Zipfian token set is the worst
-    case — for adversarial million-distinct-token docs, prefer a fold
-    over the sorted tokens, as repetition_stats counts its units: O(len
-    log len)).  Each distinct symbol is counted once (one
-    filter pass over the array), and the text is split once into chars
-    and once into tokens.  Empty docs yield zero entropies, not NaN."""
+    array_distinct), all JVM-side, and the text is split once into
+    chars and once into tokens.  Each distinct symbol is counted once.
+    A char's count is a native scan of the text, ``length(t) -
+    length(replace(t, c, ''))`` (``split(t, '')`` splits by code point,
+    so c is one code point), not an interpreted lambda call per char;
+    a token keeps its filter-count over the token array, since a token
+    can be a substring of another.  Per-row cost is O(distinct × len):
+    bounded ~100×len for real text (alphabet-sized char set; the
+    Zipfian token set is the worst case — for adversarial
+    million-distinct-token docs, prefer a fold over the sorted tokens,
+    as repetition_stats counts its units: O(len log len)).  Empty docs
+    yield zero entropies, not NaN."""
     t = f"coalesce({_q(text_col)}, '')"
     # split('', '') yields [''] — guard empties so counts come out 0;
     # tokens via ws_tokens (drops the phantom '' a leading tab/newline
     # leaves behind — code-review r5)
     prep = docs.selectExpr(
         f"{_q(id_col)} AS doc_id",
+        f"{t} AS _t",
         f"CASE WHEN length({t}) = 0 THEN cast(array() AS array<string>) "
         f"ELSE split({t}, '') END AS _cs",
         f"{_ws_tokens_sql(t)} AS _tk",
     )
 
-    def h(arr: str) -> str:
-        # each distinct symbol's count is computed once, then -p·ln(p) is
-        # folded in array_distinct order
-        probs = (
-            f"transform(array_distinct({arr}), c -> "
-            f"size(filter({arr}, x -> x = c)) / cast(size({arr}) as double))"
-        )
+    def h(arr: str, count: str) -> str:
+        # each distinct symbol c's `count` is computed once, then
+        # -p·ln(p) is folded in array_distinct order
+        probs = f"transform(array_distinct({arr}), c -> ({count}) / cast(size({arr}) as double))"
         return f"aggregate({probs}, cast(0.0 as double), (acc, p) -> acc - p * ln(p))"
+
+    # size(_cs) is length(_t) wherever the lambda runs (non-empty text)
+    char_count = "size(_cs) - length(replace(_t, c, ''))"
+    token_count = "size(filter(_tk, x -> x = c))"
 
     return prep.selectExpr(
         "doc_id",
@@ -412,8 +449,8 @@ def entropy_stats(
         "cast(size(array_distinct(_tk)) AS bigint) AS token_distinct",
         # + 0.0 normalizes IEEE -0.0 (single-symbol docs: -1·ln(1)) so
         # byte-level value hashes can't split on the zero sign
-        f"round({h('_cs')}, 6) + 0.0D AS char_entropy",
-        f"round({h('_tk')}, 6) + 0.0D AS token_entropy",
+        f"round({h('_cs', char_count)}, 6) + 0.0D AS char_entropy",
+        f"round({h('_tk', token_count)}, 6) + 0.0D AS token_entropy",
         "round(CASE WHEN size(_tk) = 0 THEN 0.0D ELSE "
         "size(array_distinct(_tk)) / cast(size(_tk) AS double) END, 6) AS token_ttr",
     )

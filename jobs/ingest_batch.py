@@ -123,8 +123,11 @@ def ingest_batch(
     else:
         corpus_keys = corpus_keys.select("tkey1", "tkey2", "canonical_id")
 
+    # checkpointed, not cached: a cached plan that scans keys/ is
+    # re-cached when the keys stage writes keys/, and the bands stage
+    # would run the dedup join again against the re-listed table
     assign = dedup.incremental_exact_dedup(corpus_keys, batch, id_col, text_col)
-    assign = assign.select(F.col("id").alias(id_col), "canonical_id").cache()
+    assign = assign.select(F.col("id").alias(id_col), "canonical_id").localCheckpoint()
     survivors = (
         batch.join(
             assign.where(F.col(id_col) == F.col("canonical_id")).select(id_col),
@@ -147,7 +150,6 @@ def ingest_batch(
             )
         ],
     }
-    assign.unpersist()
     survivors.unpersist()
     metrics["rows_in"] = batch.count()
     metrics["survivors"] = metrics["stages"][1]["rows"] if not metrics["stages"][1]["resumed"] else None

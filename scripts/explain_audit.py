@@ -376,6 +376,13 @@ def run_audit(spark, pages, salt_target_rows: int = 5000):
         ("repetition: lines and tokens split once each",
          _split_patterns(rdp) == ["\n", r"\s+"])
     )
+    # one gram chain: size n zips size n-1 with the tokens, so the
+    # defaults (2, 3, 5) take 4 zip_with passes and only the 2-grams
+    # zip slices of the tokens alone
+    checks.append(
+        ("repetition: each gram size extends the one below",
+         rdp.count("zip_with(") == 4 and len(re.findall(r"zip_with\(slice\(_tk#", rdp)) == 1)
+    )
     # a filter, not a limit: a limit's exchange would sit below the broadcast
     tbench = tdocs.where(F.col("doc_id") < 20)
     dc_df = tx_ops.decontaminate(tdocs, tbench, n=2)
@@ -404,6 +411,11 @@ def run_audit(spark, pages, salt_target_rows: int = 5000):
     checks.append(("entropy: pure JVM", "EvalPython" not in ep))
     checks.append(
         ("entropy: one char split and one token split", _split_patterns(ep) == ["", r"\s+"])
+    )
+    # a char's count is a scan of the text, not a lambda call per char
+    checks.append(
+        ("entropy: no lambda over the char array",
+         re.search(r"\b(filter|transform|aggregate|exists|forall|zip_with)\(_cs#", ep) is None)
     )
 
     # r5: packing + quota — one hash shuffle each, pure JVM

@@ -176,6 +176,35 @@ def test_unreadable_corpus_keys_raise(spark, tmp_path):
     assert 10 not in corpus_ids
 
 
+def test_dedup_join_reads_corpus_keys_once(spark, tmp_path, monkeypatch):
+    """A batch's dedup join scans the corpus keys once: the keys stage's
+    write of keys/ does not make the bands stage run the join again
+    against the re-listed table (which then holds the batch's own
+    keys).  Every keys row that reaches the join is counted."""
+    import jobs.ingest_batch as job
+
+    b1, b2 = _batches(spark)
+    root = str(tmp_path / "corpus")
+    ingest_batch(spark, b1, "b1", root, n_buckets=N_BUCKETS)
+    n_keys = spark.read.parquet(f"{root}/keys").count()
+    scanned = spark.sparkContext.accumulator(0)
+    read_table = job.lineage.read_table
+
+    @F.udf("boolean")
+    def seen(_):
+        scanned.add(1)
+        return True
+
+    def counted(spark_, path):
+        df = read_table(spark_, path)
+        return df.where(seen("tkey1")) if df is not None and path.endswith("/keys") else df
+
+    monkeypatch.setattr(job.lineage, "read_table", counted)
+    m = ingest_batch(spark, b2, "b2", root, n_buckets=N_BUCKETS)
+    assert m["survivors"] == 4 and not any(s["resumed"] for s in m["stages"])
+    assert scanned.value == n_keys == 7
+
+
 def test_streaming_ingest_dedup_available_now(spark, tmp_path):
     """jobs/ingest_stream.py: micro-batches drive the SAME lineage job;
     order-free oracle — one keys row per distinct text, every canonical

@@ -24,6 +24,7 @@ from hypothesis import strategies as st
 
 from gips_spark.functions import geom, h3lite, s2, textx
 from gips_spark.operators.dedup import _shingle_hashes
+from entropy_reference import assert_entropy_matches_reference
 from repetition_reference import assert_matches_reference
 
 KERNEL = settings(
@@ -509,6 +510,26 @@ def test_repetition_sorted_fold_matches_counter(spark, texts, sparse):
     assert_matches_reference(spark, list(enumerate(_REP_FIXED + texts + sparse)))
 
 
+# code points that UTF-16 or UTF-8 count differently: astral-plane
+# emoji (two UTF-16 units, four bytes), a combining acute accent (its
+# own code point after its base letter), CJK and a fullwidth letter
+_ENT_UNITS = ["a", "b", "ab", "aa", " ", "\t", "\n", "\U0001f600", "\U0001f4a9",
+              "e\u0301", "\u0301", "日本", "\uff21"]
+_ENT_FIXED = [None, "", " ", "   ", "\t a b a", "\n x\nx", "aaaa", "\U0001f600",
+              "\U0001f600\U0001f600a", "e\u0301e\u0301e", "x \U0001f600 x \U0001f600"]
+
+
+@SPARKED
+@given(st.lists(st.lists(st.sampled_from(_ENT_UNITS), max_size=40).map("".join),
+                min_size=1, max_size=24))
+def test_entropy_stats_matches_counter(spark, texts):
+    """entropy_stats == a Counter recount of every column: each
+    distinct char's count from the text scan and each token's from the
+    token array, over repeated, astral-plane and combining chars and
+    NULL, empty, blank, tab-led and newline-led text."""
+    assert_entropy_matches_reference(spark, list(enumerate(_ENT_FIXED + texts)))
+
+
 @SPARKED
 @given(_sparse_docs, st.lists(_sparse_doc(), min_size=1, max_size=6))
 def test_decontaminate_hash_equals_gram_path(spark, texts, bench_texts):
@@ -532,8 +553,9 @@ def test_decontaminate_hash_equals_gram_path(spark, texts, bench_texts):
 @SPARKED
 @given(_sparse_docs)
 def test_word_ngrams_match_python(spark, texts):
-    """word_ngrams and the SQL-text gram builder the T-ops use both
-    == plain-Python n-grams over str.split() (ASCII whitespace, so
+    """word_ngrams, the SQL-text gram builder the T-ops use and the
+    gram chain repetition_stats uses (each size from the one below)
+    all == plain-Python n-grams over str.split() (ASCII whitespace, so
     Java's \\s and Python agree); NULL ≡ ''."""
     from pyspark.sql import functions as F
 
@@ -541,14 +563,18 @@ def test_word_ngrams_match_python(spark, texts):
 
     df = spark.createDataFrame(list(enumerate(texts)), "doc_id long, text string")
     ns = (1, 2, 3, 5)
+    chain = df.selectExpr(
+        "doc_id", "text", f"{textops._ws_tokens_sql('text')} AS _tk"
+    ).selectExpr("*", "_tk AS c1")
+    for n in range(2, max(ns) + 1):
+        chain = chain.selectExpr("*", f"{textops._gram_step_sql(f'c{n - 1}', '_tk', n)} AS c{n}")
     got = {
         r["doc_id"]: r
-        for r in df.selectExpr(
-            "doc_id", "text", f"{textops._ws_tokens_sql('text')} AS _tk"
-        ).select(
+        for r in chain.select(
             "doc_id",
             *[textops.word_ngrams(F.col("text"), n).alias(f"g{n}") for n in ns],
             *[F.expr(textops._grams_sql("_tk", n)).alias(f"s{n}") for n in ns],
+            *[f"c{n}" for n in ns],
         ).collect()
     }
     for i, t in enumerate(texts):
@@ -557,6 +583,7 @@ def test_word_ngrams_match_python(spark, texts):
             want = [" ".join(toks[j : j + n]) for j in range(len(toks) - n + 1)]
             assert got[i][f"g{n}"] == want, (t, n)
             assert got[i][f"s{n}"] == want, (t, n)
+            assert got[i][f"c{n}"] == want, (t, n)
 
 
 @SPARKED
