@@ -61,7 +61,6 @@ def main():
             tile_assign.enrich_pages(
                 pages,
                 salt_target_rows=max(1000, n_rows // 200),
-                salt_sample=0.02,
             )
         )
 
@@ -72,7 +71,6 @@ def main():
                 pages,
                 salt_target_rows=max(1000, n_rows // 200),
                 do_repartition=False,
-                salt_sample=0.02,
             )
         )
 
@@ -85,20 +83,7 @@ def main():
                 pages,
                 salt_target_rows=max(1000, n_rows // 200),
                 do_repartition=False,
-                salt_sample=0.02,
                 with_text=True,
-            )
-        )
-
-    def exact_mode_unpersisted():
-        # EXACT salt mode with persist disabled: the full-histogram salt
-        # plan + the main pass each run the UDF chain, so this measures
-        # ~2× the single-pass chain — kept as the documented cost of
-        # exact mode without its block-manager persist, NOT a UDF-only
-        # isolation (use full_chain_norepart / text_chain for that)
-        _noop(
-            tile_assign.enrich_pages(
-                pages, persist=False, do_repartition=False, salt_sample=None,
             )
         )
 
@@ -109,13 +94,12 @@ def main():
     def assign_parquet():
         spark.catalog.clearCache()
         tile_assign.enrich_pages(
-            pages, salt_target_rows=max(1000, n_rows // 200), salt_sample=0.02
+            pages, salt_target_rows=max(1000, n_rows // 200)
         ).write.mode("overwrite").parquet(enr_out)
 
     stages = {
         "scan_all": scan_all,
         "scan_no_html": scan_no_html,
-        "exact_mode_unpersisted": exact_mode_unpersisted,
         "full_chain_norepart": full_chain_norepart,
         "text_chain": text_chain,
         "full_chain_noop": full_chain_noop,
@@ -130,7 +114,7 @@ def main():
         enr_post = enr_out + "_post"
         if not os.path.isdir(enr_post):
             tile_assign.enrich_pages(
-                pages, salt_target_rows=max(1000, n_rows // 200), salt_sample=0.02
+                pages, salt_target_rows=max(1000, n_rows // 200)
             ).write.mode("overwrite").parquet(enr_post)
         enr = spark.read.parquet(enr_post).persist()
         enr.count()
@@ -182,11 +166,7 @@ def main():
 
     # one warmup pass (worker pool spawn) on a small slice
     warm = pages.limit(50_000)
-    _noop(
-        tile_assign.enrich_pages(
-            warm, persist=False, do_repartition=False, salt_sample=0.02
-        )
-    )
+    _noop(tile_assign.enrich_pages(warm, do_repartition=False))
 
     out: dict[str, list[float]] = {}
     for name, fn in picked.items():

@@ -377,9 +377,13 @@ def parent(h, parent_res: int) -> np.ndarray:
     return out
 
 
+#: res-7 id → res-4 partitioning prefix: the id truncated below digit 4
+PREFIX_SHIFT = 33
+
+
 def cell_prefix(h) -> np.ndarray:
     """Range-partitioning prefix: id truncated below digit 4 (res-4 bucket)."""
-    return (np.asarray(h, dtype=np.int64) >> 33).astype(np.int64)
+    return (np.asarray(h, dtype=np.int64) >> PREFIX_SHIFT).astype(np.int64)
 
 
 def k_ring(h: int, k: int) -> np.ndarray:

@@ -56,10 +56,8 @@ from gips_spark.functions.geom import (
     sphere_max_dist_to_rect_m,
     sphere_min_dist_to_rect_m,
 )
+from gips_spark.functions.h3lite import PREFIX_SHIFT
 from gips_spark.functions.udfs import haversine_expr
-
-#: res-7 id → res-4 range-partitioning prefix (matches h3lite.cell_prefix)
-PREFIX_SHIFT = 33
 
 #: numeric slack added to covering radii: the rect bounds are exact math
 #: but IEEE arccos near ±1 carries up to ~0.1 m error (δθ≈√(2ε) as d→0),

@@ -11,7 +11,8 @@ Plan shape (scale notes):
   `extracted_text`, ``with_text=True``)
   → ONE Arrow UDF (geocode+h3+s2, or extract+geocode+h3+s2 with text;
     one Python hop); the salt sample's pass runs over ceil(P × sample)
-    partitions of a P-partition scan
+    partitions of a P-partition scan, and its cell histogram is the
+    salt plan
   → broadcast-join the salt plan (tiny) → salt column
   → repartition(cell_prefix, salt)  ← the single explicit
     shuffle, whose layout downstream stages reuse (SURVEY.md §3)
@@ -21,40 +22,40 @@ from __future__ import annotations
 
 import math
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import Window as W
 
-from gips_spark.functions import udfs
+from gips_spark.functions import h3lite, udfs
 from gips_spark.plans import salt as saltplan
 
-#: id truncated below digit 4 → res-4 granularity range-partition key
-PREFIX_SHIFT = 33
+
+def cell_prefix_col(h3_7: Column) -> Column:
+    """The res-4 partitioning prefix of a res-7 id column
+    (`h3lite.cell_prefix`); the null cell maps to -1."""
+    return F.when(
+        h3_7.isNotNull(), F.shiftright(h3_7, h3lite.PREFIX_SHIFT)
+    ).otherwise(F.lit(-1)).cast("int")
 
 
 def enrich_pages(
     pages: DataFrame,
     salt_target_rows: int = saltplan.DEFAULT_TARGET_ROWS,
     do_repartition: bool = True,
-    persist: bool | None = None,
-    salt_sample: float | None = None,
+    persist: bool = False,
+    salt_sample: float = 0.02,
     with_text: bool = False,
 ) -> DataFrame:
     """pages(url, warc_ts, html, text, lang) → pages_enriched.
 
-    Two execution modes:
-
-    * exact (``salt_sample=None``, default): full salt histogram; the
-      UDF output is persisted (MEMORY_AND_DISK) so the Python stage
-      doesn't run twice (histogram, final).
-    * single-pass (``salt_sample=0.02``): the salt plan comes from the
-      assignment-only kernel over a 2% sample of the raw pages
-      (plans/salt.py :: salt_plan(fraction=salt_sample)) — no block-manager
-      persist, exactly ONE full UDF pass.  This is the 10^12-row shape:
-      between stages the lineage protocol checkpoints to parquet anyway,
-      and file-level range layout happens at the bucketed write.
-
-    Both modes hash-partition on (cell_prefix, salt).
+    One full UDF pass, hash-partitioned on (cell_prefix, salt).  The
+    salt plan comes from the assignment-only kernel over a
+    `salt_sample` fraction of the raw pages (plans/salt.py ::
+    salt_plan(fraction=salt_sample)).  Nothing is persisted unless
+    ``persist=True`` (MEMORY_AND_DISK on the UDF output, cached until
+    ``spark.catalog.clearCache()``).  This is the 10^12-row shape:
+    between stages the lineage protocol checkpoints to parquet, and
+    file-level range layout happens at the bucketed write.
 
     By default the chain runs the assignment-only kernel
     (`udfs.geocode_and_cells`): only url + text enter Python, and the
@@ -96,43 +97,32 @@ def enrich_pages(
                 )
                 .select("url", "warc_ts", "lang", "e.*")
             )
-        return out.withColumn(
-            "cell_prefix",
-            F.when(
-                F.col("h3_7").isNotNull(), F.shiftright(F.col("h3_7"), PREFIX_SHIFT)
-            ).otherwise(F.lit(-1)).cast("int"),
-        )
+        return out.withColumn("cell_prefix", cell_prefix_col(F.col("h3_7")))
 
     e = chain(pages)
-    if persist is None:
-        persist = salt_sample is None
     if persist:
         from pyspark import StorageLevel
 
         e = e.persist(StorageLevel.MEMORY_AND_DISK)
-    if salt_sample is not None:
-        # sample the RAW pages, then enrich the 2% subset: Catalyst does
-        # not push `sample` below ArrowEvalPython, so sampling e itself
-        # would cost a FULL second UDF pass (measured: exactly halves
-        # single-pass throughput at local[8]).  The sample pass uses the
-        # assignment-only chain — the salt histogram needs h3_7 only.
-        # Every Python task pays a fixed start-up cost whatever its row
-        # count, so the sample is moved into k = ceil(P × salt_sample)
-        # partitions first (P: the scan's), about one main-pass task's
-        # rows each.  The rows are drawn before the exchange, so the
-        # plan is the same; `coalesce` would instead pull the whole
-        # scan into k tasks.
-        k = max(1, math.ceil(pages.rdd.getNumPartitions() * salt_sample))
-        sample = pages.sample(fraction=salt_sample, seed=42).repartition(k)
-        plan = saltplan.salt_plan(
-            chain(sample, text=False),
-            "h3_7",
-            target_rows=salt_target_rows,
-            fraction=salt_sample,
-        )
-    else:
-        plan = None
-    e = saltplan.with_salt(e, "h3_7", "url", plan=plan, target_rows=salt_target_rows)
+    # sample the RAW pages, then enrich the subset: Catalyst does not
+    # push `sample` below ArrowEvalPython, so sampling e itself would
+    # cost a FULL second UDF pass (measured: exactly halves single-pass
+    # throughput at local[8]).  The sample pass uses the
+    # assignment-only chain — the salt histogram needs h3_7 only.
+    # Every Python task pays a fixed start-up cost whatever its row
+    # count, so the sample is moved into k = ceil(P × salt_sample)
+    # partitions first (P: the scan's), about one main-pass task's rows
+    # each.  The rows are drawn before the exchange, so the plan is the
+    # same; `coalesce` would instead pull the whole scan into k tasks.
+    k = max(1, math.ceil(pages.rdd.getNumPartitions() * salt_sample))
+    sample = pages.sample(fraction=salt_sample, seed=42).repartition(k)
+    plan = saltplan.salt_plan(
+        chain(sample, text=False),
+        "h3_7",
+        target_rows=salt_target_rows,
+        fraction=salt_sample,
+    )
+    e = saltplan.with_salt(e, "h3_7", "url", plan)
     if do_repartition:
         e = e.repartition("cell_prefix", "salt")
     return e

@@ -2,9 +2,10 @@
 
 AQE's skew-join splitting only helps shuffle joins; it does NOT split a
 hot `groupBy().applyInPandas` group or fix a range layout.  So the
-engine measures the cell histogram once per run and assigns each hot
-cell a salt fan-out ``n_salt = ceil(cell_rows / target_rows)``; records
-get ``salt = pmod(xxhash64(key), n_salt)``.  Aggregations then run
+engine estimates the cell histogram once per run from a sample of the
+input (tile_assign.enrich_pages draws 2%) and assigns each hot cell a
+salt fan-out ``n_salt = ceil(cell_rows / target_rows)``; records get
+``salt = pmod(xxhash64(key), n_salt)``.  Aggregations then run
 partial per (cell, salt) and final-combine per cell (SURVEY.md §2.4 A6),
 so no single Python worker ever materializes an unsalted hot group.
 
@@ -58,10 +59,10 @@ def with_salt(
     df: DataFrame,
     cell_col: str,
     key_col: str,
-    plan: DataFrame | None = None,
-    target_rows: int = DEFAULT_TARGET_ROWS,
+    plan: DataFrame,
 ) -> DataFrame:
-    """Add a `salt` column: 0 for cold cells, hash-spread for hot cells.
+    """Add a `salt` column: ``pmod(xxhash64(key), n_salt)`` for the
+    cells of `plan` (a `salt_plan` table), 0 for every other cell.
 
     The join is NULL-SAFE: the non-geocodable rows (cell NULL — roughly
     half of web pages) form the single largest "cell" and MUST be
@@ -69,8 +70,6 @@ def with_salt(
     one reducer partition — a 5×10^11-row straggler at the 10^12-row
     posture (r2 fix; a plain equality join silently dropped the NULL
     plan row)."""
-    if plan is None:
-        plan = salt_plan(df, cell_col, target_rows)
     plan = plan.withColumnRenamed(cell_col, "__salt_cell")
     out = df.join(
         F.broadcast(plan), df[cell_col].eqNullSafe(F.col("__salt_cell")), "left"

@@ -139,13 +139,10 @@ def fetch_assets(
                     "sha256": None,
                     "error": None,
                 }
-                if os.path.exists(dest) and (
-                    want is None or _sha256_file(dest) == want
-                ):
+                have = _sha256_file(dest) if os.path.exists(dest) else None
+                if have is not None and (want is None or want == have):
                     row.update(
-                        status="skipped",
-                        bytes=os.path.getsize(dest),
-                        sha256=_sha256_file(dest),
+                        status="skipped", bytes=os.path.getsize(dest), sha256=have
                     )
                     out.append(row)
                     continue

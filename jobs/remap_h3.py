@@ -37,7 +37,7 @@ from pyspark.sql import functions as F  # noqa: E402
 
 from gips_spark import get_spark  # noqa: E402
 from gips_spark.functions import udfs  # noqa: E402
-from gips_spark.operators.tile_assign import PREFIX_SHIFT  # noqa: E402
+from gips_spark.operators import tile_assign  # noqa: E402
 from gips_spark.plans import lineage, metrics  # noqa: E402
 
 
@@ -54,12 +54,7 @@ def remap(df):
         .withColumn("e", udfs.cells_only(F.col("lat"), F.col("lon")))
         .select("*", "e.*")
         .drop("e")
-        .withColumn(
-            "cell_prefix",
-            F.when(
-                F.col("h3_7").isNotNull(), F.shiftright(F.col("h3_7"), PREFIX_SHIFT)
-            ).otherwise(F.lit(-1)).cast("int"),
-        )
+        .withColumn("cell_prefix", tile_assign.cell_prefix_col(F.col("h3_7")))
     )
 
 

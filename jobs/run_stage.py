@@ -41,14 +41,12 @@ def _enrich(df):
     # which on resume is computed over the todo-bucket subset only —
     # keeping it would break the byte-identical resume contract
     # (ADVICE r1).  `cell_prefix` is per-row deterministic and stays.
-    return tile_assign.enrich_pages(
-        df, do_repartition=False, salt_sample=0.02
-    ).drop("salt")
+    return tile_assign.enrich_pages(df, do_repartition=False).drop("salt")
 
 
 def _assignments(df):
     return tile_assign.tile_assignments(
-        tile_assign.enrich_pages(df, do_repartition=False, salt_sample=0.02)
+        tile_assign.enrich_pages(df, do_repartition=False)
     )
 
 

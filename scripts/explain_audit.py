@@ -110,22 +110,28 @@ def _nodes_below(df, name: str) -> list:
 
 def run_audit(spark, pages, salt_target_rows: int = 5000):
     """All plan checks against a PARQUET-backed `pages` DataFrame.
-    Returns (sections, checks); persists nothing permanently (the one
-    internal persist is unpersisted before returning)."""
+    Returns (sections, checks); persists nothing permanently (what it
+    persists is unpersisted before returning)."""
     sections = {}
     checks = []
 
     # --- single-pass assign FIRST: nothing may be cached yet, so the
     # "no InMemoryRelation" check is meaningful without clearCache
-    sp1_df = tile_assign.enrich_pages(
-        pages, salt_target_rows=salt_target_rows, salt_sample=0.02
-    )
-    sp1 = formatted(sp1_df)
+    enr = tile_assign.enrich_pages(pages, salt_target_rows=salt_target_rows)
+    sp1 = formatted(enr)
     sections["assign single-pass (sampled salt, hash partition)"] = sp1
     checks.append(
         ("assign-sp: no InMemoryRelation (no persist)", "InMemoryRelation" not in sp1)
     )
     checks.append(("assign-sp: salt plan broadcast", "BroadcastExchange" in sp1))
+    checks.append(
+        ("assign-sp: geocode inside the fused kernel (no JVM regex cascade)",
+         "regexp_extract" not in sp1)
+    )
+    checks.append(
+        ("assign-sp: explicit partitioning on (cell_prefix, salt)",
+         re.search(r"hashpartitioning\(cell_prefix#\d+, salt#\d+", sp1) is not None)
+    )
     # the default chain is assignment-only: the main pass and the 2%
     # salt sample each run one geocode_and_cells node, and since no
     # kernel takes html, no scan reads it
@@ -142,7 +148,7 @@ def run_audit(spark, pages, salt_target_rows: int = 5000):
     k = math.ceil(pages.rdd.getNumPartitions() * 0.02)
     checks.append(
         (f"assign-sp: main kernel on the scan's partitions, sample kernel on {k}",
-         sorted(_kernel_input_partitions(sp1_df), key=str) == [k, "scan"])
+         sorted(_kernel_input_partitions(enr), key=str) == [k, "scan"])
     )
 
     # with_text=True: the main pass is the fused with-text kernel
@@ -150,29 +156,13 @@ def run_audit(spark, pages, salt_target_rows: int = 5000):
     # regex paths cost more than the kernel, see OPTIMIZATION_r06.md)
     spt = formatted(
         tile_assign.enrich_pages(
-            pages, salt_target_rows=salt_target_rows, salt_sample=0.02, with_text=True
+            pages, salt_target_rows=salt_target_rows, with_text=True
         )
     )
     sections["assign single-pass with_text=True (fused extract kernel)"] = spt
     checks.append(
         ("assign-text: one enrich_struct Arrow kernel, no row-wise Python",
          spt.count("enrich_struct(") == 1 and "BatchEvalPython" not in spt)
-    )
-
-    enr = tile_assign.enrich_pages(pages, salt_target_rows=salt_target_rows)
-    p = formatted(enr)
-    sections["assign (enrich → salt → repartition)"] = p
-    checks.append(
-        ("assign: geocode inside the fused kernel (no JVM regex cascade)",
-         "regexp_extract" not in p)
-    )
-    checks.append(("assign: salt plan broadcast", "BroadcastExchange" in p))
-    checks.append(
-        (
-            "assign: explicit partitioning on (cell_prefix, salt)",
-            ("hashpartitioning(cell_prefix" in p.lower())
-            or ("rangepartitioning(cell_prefix" in p.lower()),
-        )
     )
 
     # column pruning: a query not touching html/extracted_text must not read them

@@ -9,6 +9,7 @@ import numpy as np
 import pytest
 import pyspark.sql.functions as F
 
+from gips_spark.functions import h3lite
 from gips_spark.functions.geom import point_in_rings_bruteforce
 from gips_spark.operators import knn, pip_join, tile_assign
 
@@ -45,9 +46,7 @@ def test_default_enrich_plan_reads_no_html(spark, pages, tmp_path):
 
     path = str(tmp_path / "pages")
     pages.write.parquet(path)
-    df = tile_assign.enrich_pages(
-        spark.read.parquet(path), salt_target_rows=20, salt_sample=0.02
-    )
+    df = tile_assign.enrich_pages(spark.read.parquet(path), salt_target_rows=20)
     plan = df._jdf.queryExecution().executedPlan().toString()
     read_schemas = re.findall(r"ReadSchema: (struct<[^>]*>)", plan)
     assert read_schemas, plan
@@ -55,11 +54,10 @@ def test_default_enrich_plan_reads_no_html(spark, pages, tmp_path):
     assert "enrich_struct" not in plan and "geocode_and_cells" in plan
 
 
-@pytest.mark.parametrize("salt_sample", [None, 0.02])
-def test_with_text_minus_text_equals_default(pages, salt_sample):
+def test_with_text_minus_text_equals_default(pages):
     """Dropping extracted_text from the with-text form gives the default
     form on every column, salt and cell_prefix included."""
-    kw = dict(salt_target_rows=20, do_repartition=False, salt_sample=salt_sample)
+    kw = dict(salt_target_rows=20, do_repartition=False)
     a = tile_assign.enrich_pages(pages, with_text=True, **kw).drop("extracted_text")
     b = tile_assign.enrich_pages(pages, **kw)
     assert a.columns == b.columns
@@ -104,6 +102,18 @@ def test_salt_plan_same_over_repartitioned_sample(pages):
     assert a.count() > 1
     assert a.exceptAll(b).count() == 0
     assert b.exceptAll(a).count() == 0
+
+
+def test_cell_prefix_col_matches_h3lite(enriched):
+    """The partitioning prefix Column is `h3lite.cell_prefix` on every
+    id of the fixture, and the null cell maps to -1."""
+    rows = enriched.select(
+        "h3_7", tile_assign.cell_prefix_col(F.col("h3_7")).alias("p")
+    ).collect()
+    ids = [r["h3_7"] for r in rows if r["h3_7"] is not None]
+    assert ids and len(ids) < len(rows)
+    want = dict(zip(ids, h3lite.cell_prefix(ids).tolist()))
+    assert all(r["p"] == want.get(r["h3_7"], -1) for r in rows)
 
 
 def test_enrich_partition_invariant(spark, pages):
@@ -216,7 +226,6 @@ def test_knn_two_level_slice_under_one_percent(spark):
     and results stay brute-force-equal."""
     import pandas as pd
 
-    from gips_spark.functions import h3lite
     from gips_spark.operators import cell_directory
 
     rng = np.random.default_rng(1234)
@@ -319,8 +328,8 @@ def test_knn_driver_pruning_1e4_queries_fast():
     )
     slice_pdf = pd.DataFrame(
         {
-            "h3_7": (pref_of_cell.astype(np.int64) << knn.PREFIX_SHIFT)
-            | np.arange(n_cells, dtype=np.int64) % (1 << knn.PREFIX_SHIFT),
+            "h3_7": (pref_of_cell.astype(np.int64) << h3lite.PREFIX_SHIFT)
+            | np.arange(n_cells, dtype=np.int64) % (1 << h3lite.PREFIX_SHIFT),
             "n_rows": rng.integers(1, 50, n_cells),
             "min_lat": fla - 0.05,
             "max_lat": fla + 0.05,
@@ -339,7 +348,7 @@ def test_knn_driver_pruning_1e4_queries_fast():
 
     # the driver placement's res-7 slice, keyed by prefix as
     # knn._prefixed does it JVM-side
-    cells = slice_pdf.assign(prefix=slice_pdf["h3_7"].to_numpy() >> knn.PREFIX_SHIFT)
+    cells = slice_pdf.assign(prefix=slice_pdf["h3_7"].to_numpy() >> h3lite.PREFIX_SHIFT)
     # best-of-3: host noise is strictly additive (bursty-CPU gusts), so
     # the min over interleaved trials is the clean estimate
     trials = []

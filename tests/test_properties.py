@@ -292,7 +292,7 @@ def test_knn_kernels_keep_every_point_within_kth_distance(case):
         )
         .reset_index()
     )
-    directory["prefix"] = directory["h3_7"].to_numpy() >> knn.PREFIX_SHIFT
+    directory["prefix"] = directory["h3_7"].to_numpy() >> h3lite.PREFIX_SHIFT
     coarse = (
         directory.groupby("prefix")
         .agg(
