@@ -21,12 +21,13 @@ _LOCAL_DIRS = pytest.StashKey[list]()
 def pytest_configure(config):
     """Give the test JVM its own subdirectory of each SPARK_LOCAL_DIRS
     entry before any JVM starts: a JVM that is killed leaves its
-    blockmgr-* dirs behind, and a shared local dir then fills up."""
+    blockmgr-* dirs behind, and a shared local dir then fills up.
+    An entry that does not exist yet is created, as Spark itself would."""
     base = os.environ.get("SPARK_LOCAL_DIRS")
-    dirs = [
-        tempfile.mkdtemp(prefix=f"gips-tests-{os.getpid()}-", dir=d)
-        for d in (base.split(",") if base else [])
-    ]
+    dirs = []
+    for d in base.split(",") if base else []:
+        os.makedirs(d, exist_ok=True)
+        dirs.append(tempfile.mkdtemp(prefix=f"gips-tests-{os.getpid()}-", dir=d))
     config.stash[_LOCAL_DIRS] = dirs
     if dirs:
         os.environ["SPARK_LOCAL_DIRS"] = ",".join(dirs)
