@@ -123,25 +123,6 @@ def rings_to_prepared(rings) -> PreparedPolygon:
     return PreparedPolygon(norm)
 
 
-def point_in_rings_bruteforce(rings, lon: float, lat: float) -> bool:
-    """Scalar winding-free even-odd oracle (independent of PreparedPolygon's
-    vectorization) used only by tests/golden generators."""
-    inside = False
-    for ring in rings:
-        pts = [(float(p[0]), float(p[1])) for p in ring]
-        if len(pts) >= 2 and pts[0] == pts[-1]:
-            pts = pts[:-1]
-        n = len(pts)
-        for k in range(n):
-            x1, y1 = pts[k]
-            x2, y2 = pts[(k + 1) % n]
-            if (y1 > lat) != (y2 > lat):
-                xint = x1 + (lat - y1) * (x2 - x1) / (y2 - y1)
-                if lon < xint:
-                    inside = not inside
-    return inside
-
-
 # ---------------------------------------------------- rect distance bounds
 
 

@@ -50,14 +50,6 @@ def quality_filter(analyzed: DataFrame, min_tokens: int = 5, max_punct_ratio: fl
     )
 
 
-def language_histogram(analyzed: DataFrame) -> DataFrame:
-    return (
-        analyzed.groupBy("lang_pred")
-        .agg(F.count(F.lit(1)).alias("n_docs"), F.sum("n_tokens_ws").alias("n_tokens"))
-        .orderBy(F.desc("n_docs"), F.asc("lang_pred"))
-    )
-
-
 QUALITY_SCHEMA = T.StructType(
     [
         T.StructField("doc_id", T.LongType()),

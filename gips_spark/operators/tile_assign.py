@@ -51,9 +51,10 @@ def enrich_pages(
     One full UDF pass, hash-partitioned on (cell_prefix, salt).  The
     salt plan comes from the assignment-only kernel over a
     `salt_sample` fraction of the raw pages (plans/salt.py ::
-    salt_plan(fraction=salt_sample)).  Nothing is persisted unless
-    ``persist=True`` (MEMORY_AND_DISK on the UDF output, cached until
-    ``spark.catalog.clearCache()``).  This is the 10^12-row shape:
+    salt_plan(fraction=salt_sample)).  Nothing is persisted: a caller
+    that reads the output more than once calls ``.persist()`` on it,
+    and keeps the handle to unpersist it (``persist`` accepts only
+    False, the value `bench.py` passes).  This is the 10^12-row shape:
     between stages the lineage protocol checkpoints to parquet, and
     file-level range layout happens at the bucketed write.
 
@@ -99,11 +100,11 @@ def enrich_pages(
             )
         return out.withColumn("cell_prefix", cell_prefix_col(F.col("h3_7")))
 
-    e = chain(pages)
     if persist:
-        from pyspark import StorageLevel
-
-        e = e.persist(StorageLevel.MEMORY_AND_DISK)
+        raise ValueError(
+            "enrich_pages does not persist; call .persist() on its result"
+        )
+    e = chain(pages)
     # sample the RAW pages, then enrich the subset: Catalyst does not
     # push `sample` below ArrowEvalPython, so sampling e itself would
     # cost a FULL second UDF pass (measured: exactly halves single-pass

@@ -4,9 +4,9 @@ Reference parity:
 * spectral indices  — `gippy.algorithms.indices` invoked per product in
   `gips/data/<driver>/__init__.py :: Data.process` (public formulas:
   NDVI/EVI/LSWI/NDSI/NDWI/MSAVI2/SATVI);
-* masks             — ACCA/Fmask slot (`gippy.algorithms.acca`); the
-  sandbox stand-in is a deterministic brightness threshold (real cloud
-  physics needs thermal bands — documented stub, same plumbing);
+* masks             — ACCA (`gippy.algorithms.acca`): `acca_mask` over
+  the thermal fixture (`fixtures.gen_thermal_chunks`), `acca_cloud_mask`
+  → the binary cloudmask that `apply_mask` applies;
 * zonal statistics  — `gips/scripts/stats.py` + `GeoRaster.stats()`:
   per (extent, scene, band): count/min/max/mean/stddev/skew;
 * mosaic            — `gips/tiles.py :: Tiles.mosaic` → cookie_cutter:
@@ -97,49 +97,6 @@ def compute_products(raster_chunks: DataFrame, products: list[str] | None = None
                 }
             )
         return pd.DataFrame(rows)
-
-    return raster_chunks.groupBy("scene_id", "chunk_id").applyInPandas(
-        kernel, schema=RASTER_SCHEMA
-    )
-
-
-def cloud_mask(raster_chunks: DataFrame, threshold: float = 0.45) -> DataFrame:
-    """ACCA-slot stand-in: brightness mask (blue & green above threshold).
-
-    Deterministic stub — the real ACCA needs thermal bands absent from
-    the fixture; plumbing (schema/partitioning/application) is real.
-    Output band name: 'cloudmask', pixels ∈ {0, 1, nodata}.
-    """
-
-    def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
-        first = pdf.iloc[0]
-        nodata = float(first["nodata"])
-        px = {
-            b: np.asarray(p, dtype=np.float64)
-            for b, p in zip(pdf["band"], pdf["pixels"])
-        }
-        if "blue" not in px or "green" not in px:
-            return pd.DataFrame(columns=list(RASTER_SCHEMA.fieldNames()))
-        nd32 = float(np.float32(nodata))  # pixels are float32
-        valid = (px["blue"] != nd32) & (px["green"] != nd32)
-        m = ((px["blue"] > threshold) & (px["green"] > threshold)).astype(np.float32)
-        m[~valid] = nodata
-        return pd.DataFrame(
-            [
-                {
-                    "scene_id": first["scene_id"],
-                    "band": "cloudmask",
-                    "chunk_id": int(first["chunk_id"]),
-                    "x0": int(first["x0"]),
-                    "y0": int(first["y0"]),
-                    "w": int(first["w"]),
-                    "h": int(first["h"]),
-                    "pixels": m.tolist(),
-                    "nodata": nodata,
-                    "gt": list(first["gt"]),
-                }
-            ]
-        )
 
     return raster_chunks.groupBy("scene_id", "chunk_id").applyInPandas(
         kernel, schema=RASTER_SCHEMA
@@ -339,7 +296,7 @@ def acca_mask(raster_chunks: DataFrame, pass_two: bool = True) -> DataFrame:
 
 def acca_cloud_mask(raster_chunks: DataFrame, pass_two: bool = True) -> DataFrame:
     """ACCA classes → binary cloudmask (1 = warm/cold cloud), band
-    'cloudmask' — drop-in for the legacy brightness stand-in."""
+    'cloudmask', pixels ∈ {0, 1, nodata}; `apply_mask` applies it."""
     acca = acca_mask(raster_chunks, pass_two=pass_two)
     # compare in float32 — pass-one stored classes (and nodata pixels)
     # via astype(float32), so an exact-equality test against the DOUBLE

@@ -73,42 +73,3 @@ def run_available_now(
     )
     q.awaitTermination()
 
-
-def streaming_crawl_sessions(
-    pages_stream: DataFrame,
-    watermark: str = "7 days",
-    gap: str = "30 minutes",
-) -> DataFrame:
-    """Gap-based per-url crawl sessions over the stream (session_window
-    + watermark; append mode emits a session once the watermark passes
-    its close).  Batch equivalent: the `session_windows` driver query's
-    gaps-and-islands semantics, per url."""
-    return (
-        pages_stream.withWatermark("warc_ts", watermark)
-        .groupBy(
-            F.session_window(F.col("warc_ts"), gap).alias("w"), F.col("url")
-        )
-        .agg(F.count(F.lit(1)).alias("n_crawls"))
-        .select(
-            F.col("w.start").alias("session_start"),
-            F.col("w.end").alias("session_end"),
-            "url",
-            "n_crawls",
-        )
-    )
-
-
-def run_sessions_available_now(
-    spark: SparkSession, in_path: str, out_path: str, checkpoint: str,
-    gap: str = "30 minutes",
-) -> None:
-    q = (
-        streaming_crawl_sessions(read_pages_stream(spark, in_path), gap=gap)
-        .writeStream.outputMode("append")
-        .format("parquet")
-        .option("path", out_path)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()

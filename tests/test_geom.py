@@ -3,11 +3,8 @@
 import numpy as np
 import pytest
 
-from gips_spark.functions.geom import (
-    PreparedPolygon,
-    haversine_m,
-    point_in_rings_bruteforce,
-)
+from gips_spark.functions.geom import PreparedPolygon, haversine_m
+from pip_reference import point_in_rings_bruteforce
 
 
 def test_haversine_known_values():

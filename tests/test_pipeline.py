@@ -10,8 +10,8 @@ import pytest
 import pyspark.sql.functions as F
 
 from gips_spark.functions import h3lite
-from gips_spark.functions.geom import point_in_rings_bruteforce
 from gips_spark.operators import knn, pip_join, tile_assign
+from pip_reference import point_in_rings_bruteforce
 
 
 def test_enrich_schema_and_rows(enriched, pages):
@@ -123,6 +123,13 @@ def test_enrich_partition_invariant(spark, pages):
     cols = ["url", "warc_ts", "geocode_src", "h3_7", "s2_13"]
     assert a.select(cols).exceptAll(b.select(cols)).count() == 0
     assert b.select(cols).exceptAll(a.select(cols)).count() == 0
+
+
+def test_enrich_pages_does_not_persist(pages):
+    """The builder caches nothing: persist=True raises and names the
+    caller-side .persist() instead."""
+    with pytest.raises(ValueError, match=r"\.persist\(\) on its result"):
+        tile_assign.enrich_pages(pages, persist=True)
 
 
 def test_extracted_text_contains_source_text(spark, pages):

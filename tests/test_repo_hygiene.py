@@ -1,6 +1,6 @@
 """Repository checks that need no Spark: every top-level definition in
-gips_spark/ has a reader, and the contract gate and the tests import
-the tree they live in."""
+gips_spark/ is reached from an entry point, and the contract gate and
+the tests import the tree they live in."""
 
 from __future__ import annotations
 
@@ -15,14 +15,68 @@ from pathlib import Path
 
 REPO = Path(__file__).resolve().parent.parent
 
-# named by nothing else, kept on purpose
-KEPT = {
-    # tests/test_h3lite.py checks cell_boundary against it
-    ("gips_spark.functions.h3lite", "k_ring"),
-    # the H3 migration seam COVERAGE.md documents, and the half of its
-    # two-function interface that no operator calls yet
-    ("gips_spark.functions.cellindex", "_RealH3Backend"),
-    ("gips_spark.functions.cellindex", "cell_to_latlng"),
+#: top-level gips_spark definitions that no entry point reaches, each
+#: kept as the sole implementation of an operator SURVEY.md names (its
+#: COVERAGE.md row says it has no production caller) or as a helper of
+#: one; the list only shrinks (`test_every_gips_spark_definition_is_reached`)
+TEST_ONLY = {
+    # relational: GIPS inventory semantics
+    ("gips_spark.operators.relational", "SENSOR_RANK"): "J6 sensor preference order",
+    ("gips_spark.operators.relational", "ASSET_LATENCY_DAYS"): "J7 per-sensor latency window",
+    ("gips_spark.operators.relational", "inventory"): "F1-F4, F7 inventory filters",
+    ("gips_spark.operators.relational", "best_scene_per_tile_date"): "J6 sensor preference",
+    ("gips_spark.operators.relational", "coverage_calendar"): "A2 coverage aggregation",
+    ("gips_spark.operators.relational", "inventory_summary"): "A5 count-distinct summary",
+    ("gips_spark.operators.relational", "missing_products"): "F5 product-availability anti join",
+    ("gips_spark.operators.relational", "parse_scene_id"): "S1 filename parse",
+    ("gips_spark.operators.relational", "scenes_in_window"): "J7 latency range join",
+    ("gips_spark.operators.relational", "tile_timeseries"): "W3 moving mean + lag",
+    # catalog: sinks and the scan
+    ("gips_spark.sources.catalog", "read_table"): "S1 archive scan",
+    ("gips_spark.sources.catalog", "write_project_dir"): "S7 project-dir sink",
+    ("gips_spark.sources.catalog", "write_stats_csv"): "S8 byte-stable stats CSV",
+    # fetch: T15 distributed manifest fetch
+    ("gips_spark.sources.fetch", "FETCH_STATUS_SCHEMA"): "T15 fetch status rows",
+    ("gips_spark.sources.fetch", "_CHUNK"): "T15 chunked write size",
+    ("gips_spark.sources.fetch", "_backoff_s"): "T15 retry backoff",
+    ("gips_spark.sources.fetch", "_sha256_file"): "T15 checksum verification",
+    ("gips_spark.sources.fetch", "fetch_assets"): "T15 fetch kernel",
+    ("gips_spark.sources.fetch", "repartition_by_host"): "T15 per-host politeness",
+    # similarity: T5 names IVF
+    ("gips_spark.operators.similarity", "ivf_topk"): "T5 IVF top-k",
+    ("gips_spark.operators.similarity", "_MAX_BLOCK_ELEMS"): "T5 IVF distance block cap",
+    ("gips_spark.operators.similarity", "_sq_dists"): "T5 IVF distance block",
+    ("gips_spark.operators.similarity", "_nearest_chunked"): "T5 IVF centroid assignment",
+    ("gips_spark.operators.similarity", "_probe_chunked"): "T5 IVF probe order",
+    ("gips_spark.operators.similarity", "_centroid_update"): "T5 IVF Lloyd update",
+    ("gips_spark.operators.similarity", "_kmeans"): "T5 IVF seed k-means",
+    ("gips_spark.operators.similarity", "_refine_distributed"): "T5 IVF distributed refinement",
+    # dedup: the T2 scale paths
+    ("gips_spark.operators.dedup", "ngram_jaccard_pairs"): "T2 n-gram Jaccard pairs",
+    ("gips_spark.operators.dedup", "embedding_dedup_pairs"): "T2 embedding near-dup pairs",
+    # zonal: ACCA masks (X5) and composites (A3)
+    ("gips_spark.operators.zonal", "_ACCA_HIST_SCHEMA"): "X5 ACCA pass-two histogram",
+    ("gips_spark.operators.zonal", "acca_mask"): "X5 ACCA distributed two-pass mask",
+    ("gips_spark.operators.zonal", "acca_cloud_mask"): "X5 ACCA binary cloudmask",
+    ("gips_spark.operators.zonal", "apply_mask"): "X5 mask application",
+    ("gips_spark.operators.zonal", "scene_band_means"): "A3 composite input",
+    ("gips_spark.operators.zonal", "temporal_composite"): "A3 max-value composite",
+    # one each
+    ("gips_spark.operators.pip_join", "coverage_fractions"): "F6 coverage thresholds",
+    ("gips_spark.operators.tile_assign", "latest_per_url"): "J6 latest crawl per url",
+    ("gips_spark.operators.qa", "qa_unpack_array"): "X5 array QA unpack",
+    ("gips_spark.operators.footprint", "scenes_with_cells"): "SURVEY 1.2 h3_cells column",
+    ("gips_spark.operators.atmos", "apply_gain_offset"): "X6 gain/offset hook",
+    # s2: the round-trip oracle, beside the private Hilbert tables it reads
+    ("gips_spark.functions.s2", "cell_to_center_latlng"): "S2 round-trip oracle",
+    ("gips_spark.functions.s2", "cell_level"): "S2 round-trip oracle",
+    ("gips_spark.functions.s2", "st_to_uv"): "S2 round-trip oracle",
+    # fixtures: the thermal band ACCA needs
+    ("gips_spark.sources.fixtures", "gen_thermal_chunks"): "X5 ACCA thermal fixture",
+    ("gips_spark.sources.fixtures", "gen_thermal_chunks_pdf"): "X5 ACCA thermal fixture",
+    # the H3 migration seam COVERAGE.md documents
+    ("gips_spark.functions.h3lite", "k_ring"): "tests/test_h3lite.py checks cell_boundary by it",
+    ("gips_spark.functions.cellindex", "cell_to_latlng"): "the seam's second function",
 }
 
 
@@ -105,26 +159,60 @@ def _defined(stmt) -> list:
     return [t.id for t in targets if isinstance(t, ast.Name)]
 
 
-def test_every_gips_spark_definition_is_named_elsewhere():
-    """A top-level function, class or constant in gips_spark/ that no
-    file names outside its own definition (tests included) is dead."""
-    definitions, named = [], {}
+def _is_test(mod: str) -> bool:
+    return mod.split(".")[0] == "tests" or mod == "perfbench.test_perfbench"
+
+
+def test_every_gips_spark_definition_is_reached():
+    """Every top-level function, class or constant in gips_spark/ is
+    reached from an entry point, or is on TEST_ONLY.
+
+    The roots are every top-level statement of every Python file outside
+    the tests, except gips_spark's own definitions; `_references` is
+    followed from them through the definitions it reaches.  Fails on a
+    definition that only tests reach, on one that nothing names (its
+    own statement aside), and on a TEST_ONLY entry that is reached or
+    no longer exists."""
+    definitions, named, refs, roots = [], {}, {}, []
     for mod, init, tree in _modules():
         aliases = _aliases(mod, init, tree)
         for i, stmt in enumerate(tree.body):
-            for ref in _references(mod, init, stmt, aliases):
+            refs[(mod, i)] = _references(mod, init, stmt, aliases)
+            for ref in refs[(mod, i)]:
                 named.setdefault(ref, set()).add((mod, i))
-            if mod.startswith("gips_spark"):
-                definitions += [(mod, name, i) for name in _defined(stmt)]
-    assert len(definitions) > 300
-    dead = [
-        f"{mod}.{name}"
+            names = _defined(stmt) if mod.startswith("gips_spark") else []
+            definitions += [(mod, name, i) for name in names]
+            if not names and not _is_test(mod):
+                roots.append((mod, i))
+    assert len(definitions) > 300 and len(roots) > 300
+    stmts = {}
+    for mod, name, i in definitions:
+        stmts.setdefault((mod, name), set()).add((mod, i))
+        stmts.setdefault((None, name), set()).add((mod, i))
+    reached, todo = set(), list(roots)
+    while todo:
+        for ref in refs[todo.pop()]:
+            new = stmts.get(ref, set()) - reached
+            reached |= new
+            todo += new
+    unreached = {
+        f"{mod}.{name}": bool(
+            (named.get((mod, name), set()) | named.get((None, name), set())) - {(mod, i)}
+        )
         for mod, name, i in definitions
-        if not (name.startswith("__") and name.endswith("__"))
-        and (mod, name) not in KEPT
-        and not (named.get((mod, name), set()) | named.get((None, name), set())) - {(mod, i)}
-    ]
-    assert dead == []
+        if (mod, i) not in reached
+        and (mod, name) not in TEST_ONLY
+        and not (name.startswith("__") and name.endswith("__"))
+    }
+    found = {
+        "named by nothing": [d for d, by_tests in unreached.items() if not by_tests],
+        "reached only from tests": [d for d, by_tests in unreached.items() if by_tests],
+        "stale TEST_ONLY entries": [
+            f"{mod}.{name}" for mod, name in TEST_ONLY
+            if not stmts.get((mod, name)) or stmts[(mod, name)] & reached
+        ],
+    }
+    assert found == {kind: [] for kind in found}
 
 
 def test_check_entry_imports_its_own_tree(tmp_path):

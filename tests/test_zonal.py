@@ -2,7 +2,6 @@
 
 import duckdb
 import numpy as np
-import pyspark.sql.functions as F
 
 from gips_spark.functions.geom import rings_to_prepared
 from gips_spark.operators import zonal
@@ -123,24 +122,34 @@ def test_temporal_composite_vs_duckdb(spark, scenes, raster_chunks):
 
 
 def test_mask_application(spark, raster_chunks):
-    prod = zonal.compute_products(raster_chunks, ["ndvi"]).cache()
-    mask = zonal.cloud_mask(raster_chunks, threshold=0.2).cache()
-    masked = zonal.apply_mask(prod, mask)
-    # masked rows keep schema and nodata increases or stays equal
-    def nodata_count(df):
-        return (
-            df.select(
-                F.aggregate(
-                    "pixels",
-                    F.lit(0).cast("long"),
-                    lambda acc, x: acc + F.when(x == F.col("nodata"), 1).otherwise(0),
-                ).alias("nd")
-            )
-            .agg(F.sum("nd"))
-            .first()[0]
-        )
+    """apply_mask with the ACCA cloudmask, on every pixel: nodata where
+    the mask is 1, the product's own value everywhere else (mask 0,
+    mask nodata, or no mask row for the chunk)."""
+    from gips_spark.sources import fixtures
 
-    assert nodata_count(masked) >= nodata_count(prod)
+    prod = zonal.compute_products(raster_chunks, ["ndvi"]).cache()
+    mask = zonal.acca_cloud_mask(
+        raster_chunks.union(fixtures.gen_thermal_chunks(spark, 12))
+    ).cache()
+    masked = zonal.apply_mask(prod, mask).toPandas()
+    src = prod.toPandas()
+
+    def by_chunk(pdf):
+        return {
+            (r["scene_id"], r["chunk_id"]): np.asarray(r["pixels"], dtype=np.float64)
+            for _, r in pdf.iterrows()
+        }
+
+    want, got, m = by_chunk(src), by_chunk(masked), by_chunk(mask.toPandas())
+    assert got.keys() == want.keys() and len(masked) == len(src)
+    n_masked = 0
+    for key, px in want.items():
+        hit = m[key] == 1.0 if key in m else np.zeros(px.shape, dtype=bool)
+        assert np.array_equal(got[key], np.where(hit, fixtures.NODATA, px))
+        n_masked += int(hit.sum())
+    assert n_masked > 0
+    prod.unpersist()
+    mask.unpersist()
 
 
 def test_mosaic_deterministic_first_wins(spark, raster_chunks):
