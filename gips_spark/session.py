@@ -6,14 +6,21 @@ Arrow on (every custom kernel is a vectorized pandas UDF), AQE on
 local core count rather than the 200 default.  On a real cluster the
 same code runs under ``spark-submit --py-files`` (see jobs/run_stage.py)
 and these conf keys are supplied by the submitter instead.
+
+In local mode the Python workers import pyspark and py4j from the same
+directory install the driver runs, not from Spark's ``pyspark.zip``:
+``gips_spark.pydaemon`` is their daemon, and it keeps Spark's own path
+when that install does not match the zip.  pyspark is imported inside
+the functions, so that daemon's ``import gips_spark`` loads no pyspark.
 """
 
 from __future__ import annotations
 
 import os
+from typing import TYPE_CHECKING
 
-from pyspark import SparkConf, SparkContext
-from pyspark.sql import SparkSession
+if TYPE_CHECKING:
+    from pyspark.sql import SparkSession
 
 _PACKAGE_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
@@ -43,10 +50,14 @@ def get_spark(
     (env, default 32).  In local mode the Python workers get this
     package's parent directory on their ``PYTHONPATH``, so a kernel
     unpickles whatever directory the driver was started from (on a
-    cluster, ``--py-files`` ships the package).
+    cluster, ``--py-files`` ships the package), and their daemon is
+    ``gips_spark.pydaemon``: they import the driver's pyspark install,
+    or, when it does not match Spark's ``pyspark.zip``, Spark's own path.
     The driver heap is ``$SPARK_GRAFT_DRIVER_MEM`` if set, else
     min(16g, physical RAM / 3); ``extra_conf`` overrides both.
     """
+    from pyspark.sql import SparkSession
+
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
     if master is None:
         master = _submitted_master() or f"local[{cpus}]"
@@ -57,6 +68,7 @@ def get_spark(
         builder = builder.config(k, v)
     if master.startswith("local"):
         builder = builder.config("spark.executorEnv.PYTHONPATH", _PACKAGE_ROOT)
+        builder = builder.config("spark.python.daemon.module", "gips_spark.pydaemon")
     builder = builder.config("spark.sql.shuffle.partitions", str(n_shuffle))
     builder = builder.config("spark.default.parallelism", str(n_shuffle))
     builder = builder.config("spark.ui.enabled", "false")
@@ -77,6 +89,8 @@ def _submitted_master() -> str | None:
     environment); None under plain ``python``."""
     if "PYSPARK_GATEWAY_PORT" not in os.environ:
         return None
+    from pyspark import SparkConf, SparkContext
+
     SparkContext._ensure_initialized()
     return SparkConf().get("spark.master", None)
 

@@ -118,8 +118,15 @@ def test_textops_vs_duckdb(spark):
         F.sum("n_chars").alias("c"), F.sum("n_tokens_ws").alias("t")
     ).first()
     pdf = docs.toPandas()
-    want_c = duckdb.sql("select sum(length(text)) from pdf").fetchone()[0]
+    # the whitespace-token expression of __spark_entry__._CORPUS_CLEAN_ORACLE
+    want_c, want_t = duckdb.sql(
+        r"""select sum(length(text)),
+                   sum(CASE WHEN length(trim(text)) = 0 THEN 0
+                       ELSE array_length(string_split_regex(trim(text), '\s+')) END)
+            from pdf"""
+    ).fetchone()
     assert got["c"] == want_c
+    assert got["t"] == want_t
 
 
 def test_streaming_cell_counts(spark, pages, tmp_path):
